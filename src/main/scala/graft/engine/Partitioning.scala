@@ -2,8 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.DataFrame
 
-import graft.engine.JobSpec._
-
 /** Output partition sizing — operators R1-R5 in SURVEY.md §2.8.
   *
   * The reference sizes output files either by a full-scan `count()` followed
@@ -16,8 +14,8 @@ import graft.engine.JobSpec._
   * main perf liability (SURVEY §4). Prefer, in order:
   *   1. `targetPartitions` (static, zero extra jobs) — the reference's own
   *      rollout direction;
-  *   2. `Coalesce` + `spark.sql.files.maxRecordsPerFile` (the conf alone
-  *      bounds file size; the coalesce only caps task count);
+  *   2. `Coalesce` + the `maxRecordsPerFile` write option (the option
+  *      alone bounds file size; the coalesce only caps task count);
   *   3. AQE coalescing (`spark.sql.adaptive.coalescePartitions.enabled`),
   *      which right-sizes post-shuffle partitions at runtime for free.
   * The counted path is kept for parity and floors at 1 partition, fixing the
@@ -36,18 +34,8 @@ object Partitioning {
 
   /** R1: partition count for a frame — `targetPartitions` bypasses the count
     * job entirely; otherwise one extra full-scan count (timed, like the
-    * reference).
-    */
-  def calculateNumPartitions(
-      df: DataFrame,
-      maxRecordsPerFile: Long,
-      targetPartitions: Option[Int],
-      log: String => Unit = _ => ()): Int =
-    calculateNumPartitionsWithCount(df, maxRecordsPerFile, targetPartitions, log)._1
-
-  /** Like [[calculateNumPartitions]] but also surfaces the record count when
-    * one was paid for — so downstream consumers (the K3 meta sidecar) can
-    * reuse it instead of running a second full-scan count job.
+    * reference), surfaced with the count so downstream consumers (the K3
+    * meta sidecar) reuse it instead of running a second full-scan count.
     */
   def calculateNumPartitionsWithCount(
       df: DataFrame,
@@ -66,18 +54,5 @@ object Partitioning {
         val n = partitionCount(cnt, maxRecordsPerFile)
         log(s"Partition sizing: using $n partitions (from record count)")
         (n, Some(cnt))
-    }
-
-  /** R2-R4: apply the chosen strategy. For `Coalesce` the caller must also
-    * set `spark.sql.files.maxRecordsPerFile` (see [[Writers]]) — the conf is
-    * the actual size guard; the coalesce only merges partitions (narrow, no
-    * shuffle). `Repartition` is a full RoundRobin shuffle that balances
-    * skew at the cost of one exchange.
-    */
-  def apply(df: DataFrame, strategy: PartitionStrategy, numPartitions: => Int): DataFrame =
-    strategy match {
-      case Repartition => df.repartition(numPartitions)
-      case Coalesce    => df.coalesce(numPartitions)
-      case NoResize    => df
     }
 }

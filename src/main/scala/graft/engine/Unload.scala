@@ -80,6 +80,8 @@ object Unload {
     // count paid by the sizing step, if any — reused by the meta sidecar
     var countedRows: Option[Long] = None
     var plannedPartitions: Option[Int] = None
+    // K5 file-size guard, passed to the one write (Coalesce only)
+    var maxRecordsPerFile: Option[Long] = None
 
     exportData = config.strategy match {
       case Repartition =>
@@ -90,7 +92,7 @@ object Unload {
         log(s"Planning repartition to $n partitions (will execute during write)")
         exportData.repartition(n)
       case Coalesce =>
-        Writers.setMaxRecordsPerFile(spark, config.maxRecordsPerFile)
+        maxRecordsPerFile = Some(config.maxRecordsPerFile)
         val (n, cnt) = Partitioning.calculateNumPartitionsWithCount(
           exportData, config.maxRecordsPerFile, config.targetPartitions, log)
         countedRows = cnt
@@ -126,7 +128,7 @@ object Unload {
 
     log(s"Starting write operation to ${config.outputPath} (${config.format})")
     val t0 = System.nanoTime()
-    Writers.writeData(exportData, config.format, config.outputPath)
+    Writers.writeData(exportData, config.format, config.outputPath, maxRecordsPerFile)
     log(f"Write complete in ${(System.nanoTime() - t0) / 1e9}%.2f seconds")
 
     // K3 meta sidecar (opt-in): reuse the sizing count when one was paid,

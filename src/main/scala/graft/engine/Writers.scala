@@ -15,30 +15,40 @@ import graft.engine.JobSpec._
   *   - Parquet path scrubs VOID fields, then writes zstd level 3;
   *   - every data write is `mode("overwrite")`, which is what makes the
   *     full-job latest-only retry idempotent;
-  *   - `spark.sql.files.maxRecordsPerFile` is the real file-size guard for
-  *     the coalesce strategy (K5).
+  *   - the `maxRecordsPerFile` write option is the real file-size guard for
+  *     the coalesce strategy (K5); it travels with the one write, never as
+  *     session conf, so it cannot leak into the caller's later writes.
   *
   * Scale note: writes go through Spark's committer — per-task parallel
   * multipart uploads on object stores; nothing funnels through the driver.
   */
 object Writers {
 
-  /** K1/K2: write the export frame in the requested format. */
-  def writeData(df: DataFrame, format: OutputFormat, path: String): Unit = format match {
-    case JsonFormat =>
-      df.write.mode("overwrite").json(path)
-    case ParquetFormat =>
-      // The zstd level travels as a parquet-hadoop conf key: Spark copies
-      // every write option into the job's Hadoop conf
-      // (newHadoopConfWithOptions), where parquet-mr reads it. A
-      // "compressionLevel" DataFrameWriter option would be silently ignored.
-      VoidScrub
-        .dropVoidFields(df)
-        .write
-        .mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "3")
-        .parquet(path)
+  /** K1/K2: write the export frame in the requested format; K5: cap every
+    * output file at `maxRecordsPerFile` rows when given. */
+  def writeData(
+      df: DataFrame,
+      format: OutputFormat,
+      path: String,
+      maxRecordsPerFile: Option[Long] = None): Unit = {
+    val cap = maxRecordsPerFile.map(n => "maxRecordsPerFile" -> n.toString).toMap
+    format match {
+      case JsonFormat =>
+        df.write.mode("overwrite").options(cap).json(path)
+      case ParquetFormat =>
+        // The zstd level travels as a parquet-hadoop conf key: Spark copies
+        // every write option into the job's Hadoop conf
+        // (newHadoopConfWithOptions), where parquet-mr reads it. A
+        // "compressionLevel" DataFrameWriter option would be silently ignored.
+        VoidScrub
+          .dropVoidFields(df)
+          .write
+          .mode("overwrite")
+          .options(cap)
+          .option("compression", "zstd")
+          .option("parquet.compression.codec.zstd.level", "3")
+          .parquet(path)
+    }
   }
 
   /** Bucketed parquet table for co-located joins: both relations written
@@ -62,10 +72,6 @@ object Writers {
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
       .saveAsTable(tableName)
   }
-
-  /** K5: conf-level file size guard used with the coalesce strategy. */
-  def setMaxRecordsPerFile(spark: SparkSession, maxRecordsPerFile: Long): Unit =
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", maxRecordsPerFile.toString)
 
   /** K3: optional meta sidecar `[{event_count, partition_count}]` at
     * `<path>/meta` — dead code in the reference (`export_meta_data`,

@@ -90,82 +90,38 @@ object ExtQueries {
     * probes for every downstream pass — the r14 PQ/IVF train-once/
     * serve-many split, applied to dedup's pair tier.
     */
-  private val dedupSketchCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stagedDedupSketch(spark: SparkSession, dir: String): String =
-    dedupSketchCache.computeIfAbsent(dir, _ => Staging.timed("dedup-sketch") {
-      // stableDir: emptied on (re)build, so a failed write retries clean;
-      // md5Hex key, not String.hashCode (a 32-bit collision between two sf
-      // dirs would silently cross their sketches)
-      val out = graft.queries.Scratch.stableDir(
-        "dedup-sketch-" + graft.queries.Scratch.md5Hex(dir))
-      val sh = Dedup.shingleHashes(
-        fanOut(documents(spark, dir)), "doc_id", "text", 5).persist()
-      sh.write.mode("overwrite").parquet(s"$out/shingles")
-      val sig = Dedup.minhashSigFrame(sh, Dedup.hashParams(16)).persist()
-      sig.write.mode("overwrite").parquet(s"$out/sig")
-      Dedup.bandRowsOfSig(sig, 4, 4)
-        .write.mode("overwrite").parquet(s"$out/bands")
-      // the VERIFIED pair set at the library-default threshold 0.5 — the
-      // deepest persisted tier ([[Dedup.dedupCorpusFromPairs]]); built from
-      // the just-written band parquet so the persisted relations are
-      // self-consistent by construction
-      Dedup.nearDupsFromRelations(
-        spark.read.parquet(s"$out/bands"), sh, threshold = 0.5)
-        .write.mode("overwrite").parquet(s"$out/pairs")
-      sig.unpersist(); sh.unpersist()
-      out
-    })
-
-  /** Small-fixture sketch: same plans, same once-per-JVM discipline, held
-    * as in-memory localCheckpoints instead of parquet — the [[Staging]]
-    * scale gate's cheap path (the parquet write+footer round-trip is a
-    * fixed cost a ~65 KB fixture never earns back). Keyed by session
-    * identity + dir: localCheckpoint blocks die with their session, so an
-    * entry must never outlive the SparkSession that built it.
-    */
-  private val dedupSketchMem = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, DataFrame, DataFrame)]()
-  private def dedupSketch(
-      spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
-    if (Staging.stageToParquet(s"$dir/documents.parquet")) {
-      val out = stagedDedupSketch(spark, dir)
-      (spark.read.parquet(s"$out/shingles"),
-        spark.read.parquet(s"$out/sig"),
-        spark.read.parquet(s"$out/bands"),
-        spark.read.parquet(s"$out/pairs"))
-    } else dedupSketchMem.computeIfAbsent(
-      s"${System.identityHashCode(spark)}:$dir",
-      _ => Staging.timed("dedup-sketch-mem") {
-        val sh = Dedup.shingleHashes(
-          fanOut(documents(spark, dir)), "doc_id", "text", 5).localCheckpoint()
-        val sig = Dedup.minhashSigFrame(sh, Dedup.hashParams(16)).localCheckpoint()
-        val bands = Dedup.bandRowsOfSig(sig, 4, 4).localCheckpoint()
-        (sh, sig, bands,
-          Dedup.nearDupsFromRelations(bands, sh, threshold = 0.5).localCheckpoint())
-      })
-
   /** Staged (doc_id, hs) shingle-hash sets of the full documents fixture.
     * `private[ext]` so DedupSpec can assert staged ≡ fresh. */
   private[ext] def stagedDocShingles(spark: SparkSession, dir: String): DataFrame =
-    dedupSketch(spark, dir)._1
+    Staging.frame("dedup-shingles", spark, dir, "documents") {
+      Dedup.shingleHashes(fanOut(documents(spark, dir)), "doc_id", "text", 5)
+    }
 
-  /** Staged (doc_id, sig) MinHash signatures (hashParams(16)). */
+  /** Staged (doc_id, sig) MinHash signatures (hashParams(16)), built from
+    * the staged shingles. */
   private[ext] def stagedDocSig(spark: SparkSession, dir: String): DataFrame =
-    dedupSketch(spark, dir)._2
+    Staging.frame("dedup-sig", spark, dir, "documents") {
+      Dedup.minhashSigFrame(stagedDocShingles(spark, dir), Dedup.hashParams(16))
+    }
 
   /** Staged (doc_id, band, bucket) LSH band rows (4 bands × 4 rows). */
   private[ext] def stagedDocBands(spark: SparkSession, dir: String): DataFrame =
-    dedupSketch(spark, dir)._3
+    Staging.frame("dedup-bands", spark, dir, "documents") {
+      Dedup.bandRowsOfSig(stagedDocSig(spark, dir), 4, 4)
+    }
 
   /** Staged VERIFIED (doc_a, doc_b, jaccard) pairs at threshold 0.5 — the
-    * [[Dedup.nearDupsFromRelations]] output over the full corpus sketch,
-    * persisted with it. The deepest serve tier: q21 reads it directly,
-    * q27 clusters it, q102's dedup stage restricts it to its filtered
-    * keepers ([[Dedup.dedupCorpusFromPairs]]); q28 still derives pairs
-    * inline from the sketch, keeping the candidate+verify stage benched. */
+    * [[Dedup.nearDupsFromRelations]] output over the staged bands and
+    * shingles, so the persisted tiers are self-consistent by construction.
+    * The deepest serve tier: q21 reads it directly, q27 clusters it,
+    * q102's dedup stage restricts it to its filtered keepers
+    * ([[Dedup.dedupCorpusFromPairs]]); q28 still derives pairs inline from
+    * the sketch, keeping the candidate+verify stage benched. */
   private[ext] def stagedDocPairs(spark: SparkSession, dir: String): DataFrame =
-    dedupSketch(spark, dir)._4
+    Staging.frame("dedup-pairs", spark, dir, "documents") {
+      Dedup.nearDupsFromRelations(stagedDocBands(spark, dir),
+        stagedDocShingles(spark, dir), threshold = 0.5)
+    }
 
   def q21DedupMinhash(spark: SparkSession, dir: String): DataFrame =
     stagedDocPairs(spark, dir)
@@ -610,24 +566,13 @@ object ExtQueries {
     * just computed once per corpus per JVM and read back from parquet, so
     * each gate's timed path is its OWN approximate tier plus the recall
     * comparison. `variant` keys the filtered sub-corpus gates (q269 gates
-    * against label = 3); the md5 of the sf dir keys the corpus (full
-    * digest, not String.hashCode — a 32-bit collision between two sf dirs
-    * would silently cross their staged tables).
+    * against label = 3).
     */
-  private val exactTopKCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedExact(spark: SparkSession, dir: String, variant: String)(
-      build: => DataFrame): DataFrame = {
-    val p = exactTopKCache.computeIfAbsent(s"$variant:$dir",
-      _ => Staging.timed(s"ann-exact-$variant") {
-      // stableDir: emptied on (re)build, so a failed write retries clean
-      val out = graft.queries.Scratch.stableDir(
-        s"ann-exact-$variant-" + graft.queries.Scratch.md5Hex(dir))
+      build: => DataFrame): DataFrame =
+    spark.read.parquet(Staging.dir(s"ann-exact-$variant", dir) { out =>
       build.write.mode("overwrite").parquet(out)
-      out
     })
-    spark.read.parquet(p)
-  }
 
   /** Staged exact top-5 for the vec_id < 8 query batch over the full corpus
     * (the [[annRecallOracle]] table). `private[ext]` so SimilaritySpec can
@@ -727,73 +672,31 @@ object ExtQueries {
     * the train-inline path), and each gate still scores its own ADC /
     * probe / re-rank against the staged exact side.
     */
-  private val pqModelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Array[Double]]], Int, String)]()
-  // small-fixture path: same training plan, enc held as the localCheckpoint
-  // pqTrainEncode already produced (id-sized) instead of parquet; keyed by
-  // session identity + dir because checkpoint blocks die with their session
-  private val pqModelMem = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Array[Double]]], Int, DataFrame)]()
   private[ext] def stagedPqModel(
-      spark: SparkSession, dir: String): (Array[Array[Array[Double]]], Int, DataFrame) =
-    if (Staging.stageToParquet(s"$dir/embeddings.parquet")) {
-      val (books, subDim, path) = pqModelCache.computeIfAbsent(dir,
-        _ => Staging.timed("pq-model") {
-          val out = graft.queries.Scratch.stableDir(
-            "pq-model-" + graft.queries.Scratch.md5Hex(dir))
-          val (b, sd, enc) = Similarity.pqTrainEncode(
-            fanOut(embeddings(spark, dir)), subspaces = 8, codes = 16, iters = 2,
-            idCol = "vec_id", vecCol = "embedding")
-          enc.write.mode("overwrite").parquet(out)
-          (b, sd, out)
-        })
-      (books, subDim, spark.read.parquet(path))
-    } else pqModelMem.computeIfAbsent(
-      s"${System.identityHashCode(spark)}:$dir",
-      _ => Staging.timed("pq-model-mem") {
-        Similarity.pqTrainEncode(
-          fanOut(embeddings(spark, dir)), subspaces = 8, codes = 16, iters = 2,
-          idCol = "vec_id", vecCol = "embedding")
-      })
+      spark: SparkSession, dir: String): (Array[Array[Array[Double]]], Int, DataFrame) = {
+    val ((books, subDim), enc) = Staging.frameWith("pq-model", spark, dir, "embeddings") {
+      val (b, sd, enc) = Similarity.pqTrainEncode(
+        fanOut(embeddings(spark, dir)), subspaces = 8, codes = 16, iters = 2,
+        idCol = "vec_id", vecCol = "embedding")
+      ((b, sd), enc)
+    }
+    (books, subDim, enc)
+  }
 
   /** Coarse IVF model (16 cells, iters = 2 — [[Similarity.ivfPqTopK]]'s
     * defaults) + the (vec_id, cell) inverted assignment, built once per
     * JVM per sf dir for q230's composed tier. */
-  private val ivfCoarseCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Double]], String)]()
-  // small-fixture path: see pqModelMem — identical gate and key discipline
-  private val ivfCoarseMem = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Double]], DataFrame)]()
   private[ext] def stagedIvfCoarse(
       spark: SparkSession, dir: String): (Array[Array[Double]], DataFrame) =
-    if (Staging.stageToParquet(s"$dir/embeddings.parquet")) {
-      val (centroids, path) = ivfCoarseCache.computeIfAbsent(dir,
-        _ => Staging.timed("ivf-coarse") {
-          val out = graft.queries.Scratch.stableDir(
-            "ivf-coarse-" + graft.queries.Scratch.md5Hex(dir))
-          val e = fanOut(embeddings(spark, dir))
-          val ctr = Similarity.ivfCentroids(e, cells = 16, iters = 2)
-          Similarity.withNearestCell(
-              e.select(col("vec_id"), col("embedding").as("v"),
-                Similarity.norm(col("embedding")).as("__vn")),
-              "v", "__vn", "vec_id", ctr)
-            .select(col("vec_id"), col("cell"))
-            .write.mode("overwrite").parquet(out)
-          (ctr, out)
-        })
-      (centroids, spark.read.parquet(path))
-    } else ivfCoarseMem.computeIfAbsent(
-      s"${System.identityHashCode(spark)}:$dir",
-      _ => Staging.timed("ivf-coarse-mem") {
-        val e = fanOut(embeddings(spark, dir))
-        val ctr = Similarity.ivfCentroids(e, cells = 16, iters = 2)
-        (ctr, Similarity.withNearestCell(
-            e.select(col("vec_id"), col("embedding").as("v"),
-              Similarity.norm(col("embedding")).as("__vn")),
-            "v", "__vn", "vec_id", ctr)
-          .select(col("vec_id"), col("cell"))
-          .localCheckpoint())
-      })
+    Staging.frameWith("ivf-coarse", spark, dir, "embeddings") {
+      val e = fanOut(embeddings(spark, dir))
+      val ctr = Similarity.ivfCentroids(e, cells = 16, iters = 2)
+      (ctr, Similarity.withNearestCell(
+          e.select(col("vec_id"), col("embedding").as("v"),
+            Similarity.norm(col("embedding")).as("__vn")),
+          "v", "__vn", "vec_id", ctr)
+        .select(col("vec_id"), col("cell")))
+    }
 
   /** q230: IVF × PQ composed ANN (the faiss-style architecture) under the
     * [[annRecallGate]] — cell pruning at nprobe=14/16 over the ADC/code
@@ -836,18 +739,10 @@ object ExtQueries {
   /** IVF index built ONCE per JVM per sf dir — backs the probe-only row so
     * its bench number reads as what an ANN service actually serves.
     */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def prebuiltIvfIndex(spark: SparkSession, dir: String): String =
-    ivfIndexCache.computeIfAbsent(dir, _ => Staging.timed("ivf-prebuilt") {
-      // stableDir: emptied on (re)build, so a failed build retries clean;
-      // md5Hex key (not String.hashCode — a 32-bit collision between two
-      // sf dirs would silently cross their indexes)
-      val idx = graft.queries.Scratch.stableDir(
-        "ivf-prebuilt-" + graft.queries.Scratch.md5Hex(dir))
+    Staging.dir("ivf-prebuilt", dir) { idx =>
       Similarity.writeIvfIndex(fanOut(embeddings(spark, dir)), idx)
-      idx
-    })
+    }
 
   /** ANN probe against a PREBUILT IVF index, under the [[annRecallGate]] —
     * the shape that matters for an ANN service, where the index is authored
@@ -2005,12 +1900,11 @@ object ExtQueries {
     * registered idempotently — the amortized write that buys every
     * subsequent join its shuffle-freedom. Lineitem's key is renamed at
     * WRITE time so both clusterings agree on name and count (the bucketed
-    * layout contract).
+    * layout contract). The catalog entries are SESSION-scoped, so the
+    * fixture is a per-session registry entry.
     */
-  private val bucketedFixture =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def bucketedTables(spark: SparkSession, dir: String): (String, String) =
-    bucketedFixture.computeIfAbsent(dir, _ => Staging.timed("bucketed-fixture") {
+    Staging.inSession("bucketed-fixture", spark, dir) {
       val tag = graft.queries.Scratch.md5Hex(dir)
       val base = graft.queries.Scratch.stableDir("bkt-" + tag)
       val (oTbl, lTbl) = (s"orders_bkt_$tag", s"lineitem_bkt_$tag")
@@ -2020,19 +1914,13 @@ object ExtQueries {
         lineitem(spark, dir).withColumnRenamed("l_orderkey", "o_orderkey"),
         lTbl, s"$base/lineitem", "o_orderkey", buckets = 8)
       (oTbl, lTbl)
-    })
+    }
 
   /** q110: co-located join of two bucketed tables — zero Exchange below the
     * join (BucketingSpec asserts the plan), result-identical to the plain
     * parquet join, which is the oracle.
     */
   def q110BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    // the fixture's catalog entries are SESSION-scoped while the memo map is
-    // JVM-scoped: a later session in the same JVM would see the memo hit but
-    // not the tables — drop the memo and rebuild in that case
-    if (bucketedFixture.containsKey(dir) &&
-        !spark.catalog.tableExists(bucketedFixture.get(dir)._1))
-      bucketedFixture.remove(dir)
     val (oTbl, lTbl) = bucketedTables(spark, dir)
     Bucketing.bucketedJoin(spark, oTbl, lTbl, "o_orderkey")
       .groupBy("o_orderpriority")
@@ -2311,13 +2199,9 @@ object ExtQueries {
     * encodeTestGif/extractGifFrames plans (MultimodalSpec asserts staged ≡
     * fresh), and q398's oracle still replays decode → signature → cluster
     * from the closed form. */
-  private val gifFramesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val gifFramesMemCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[ext] def stagedGifFrames(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    def fresh: DataFrame = {
+  private[ext] def stagedGifFrames(spark: SparkSession, dir: String): DataFrame =
+    Staging.frame("gif-frames", spark, dir, "documents") {
+      import spark.implicits._
       val ids = fanOut(documents(spark, dir)).select(col("doc_id")).as[Long]
       val media = ids
         .mapPartitions(_.map(id =>
@@ -2325,21 +2209,6 @@ object ExtQueries {
         .toDF()
       Multimodal.extractGifFrames(spark, media, stride = 1).toDF()
     }
-    // same parquet-vs-localCheckpoint scale gate as GraphFixtures.staged /
-    // the dedup sketch: small fixtures skip the write+footer round-trip
-    if (graft.queries.Staging.stageToParquet(s"$dir/documents.parquet")) {
-      val p = gifFramesCache.computeIfAbsent(s"gif-frames:$dir",
-        _ => graft.queries.Staging.timed("gif-frames") {
-          val out = graft.queries.Scratch.stableDir(
-            "gif-frames-" + graft.queries.Scratch.md5Hex(dir))
-          fresh.write.mode("overwrite").parquet(out)
-          out
-        })
-      spark.read.parquet(p)
-    } else gifFramesMemCache.computeIfAbsent(
-      s"gif-frames:${System.identityHashCode(spark)}:$dir",
-      _ => graft.queries.Staging.timed("gif-frames-mem")(fresh.localCheckpoint()))
-  }
 
   def q398FrameSeqDedup(spark: SparkSession, dir: String): DataFrame = {
     val frames = stagedGifFrames(spark, dir)
@@ -2627,23 +2496,7 @@ object ExtQueries {
     import graft.queries.Scratch
     val emb = embeddings(spark, dir)
     val gate = Sampling.hashGate(col("vec_id"), fraction = 0.5)
-    val inDir = q400Staged.computeIfAbsent(dir,
-      _ => Staging.timed("q400-stream-input") {
-      val in = Scratch.stableDir("q400-in-" + Scratch.md5Hex(dir))
-      def stage(pred: org.apache.spark.sql.Column, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir("q400-tmp-" + Scratch.md5Hex(s"$dir|$name"))
-        emb.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, name))
-      }
-      val first = stage(gate, "a_batch1.parquet")
-      val second = stage(!gate, "b_batch2.parquet")
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-      in
-    })
+    val inDir = Staging.streamInput("q400", dir)(Seq(emb.filter(gate), emb.filter(!gate)))
     graft.queries.EventQueries.withFixtureShufflePartitions(spark, dir) {
       // index model: q399's training-free seed rule over BATCH-1 rows only
       val centroids = Similarity.ivfCentroids(emb.filter(gate), cells = 16, iters = 0)
@@ -2680,9 +2533,6 @@ object ExtQueries {
           col("arrived_batch"))
     }
   }
-
-  private val q400Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def q400Oracle: String = {
     val thr = (0.5 * (1L << 60).toDouble).toLong // hashGate(_, 0.5)'s literal
@@ -3627,24 +3477,9 @@ object ExtQueries {
   def q233StreamDedupIndex(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.Scratch
     val docs = documents(spark, dir)
-    val inDir = q233Staged.computeIfAbsent(dir,
-      _ => Staging.timed("q233-stream-input") {
-      val in = Scratch.stableDir("q233-in-" + Scratch.md5Hex(dir))
-      def stage(pred: org.apache.spark.sql.Column, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir("q233-tmp-" + Scratch.md5Hex(s"$dir|$name"))
-        docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, name))
-      }
-      val first = stage(col("doc_id") >= 200 && col("doc_id") < 350, "a_batch1.parquet")
-      val second = stage(col("doc_id") >= 350, "b_batch2.parquet")
-      // file source orders by modification time: pin batch 2 strictly later
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-      in
-    })
+    val inDir = Staging.streamInput("q233", dir)(Seq(
+      docs.filter(col("doc_id") >= 200 && col("doc_id") < 350),
+      docs.filter(col("doc_id") >= 350)))
     val work = Scratch.stableDir("q233-work-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val idx = s"$work/idx"
     val out = s"$work/accepted"
@@ -3675,9 +3510,6 @@ object ExtQueries {
     }
     spark.read.parquet(out).select("doc_id", "lang", "source")
   }
-
-  private val q233Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** One sequential-admission stage as a self-contained subquery: docs of
     * `[lo, hi)` dedup (exact + MinHash) against `oldSrc`; ids in `oldSrc`
@@ -5711,24 +5543,10 @@ object ExtQueries {
   def q341StreamKmvSketch(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.Scratch
     val docs = documents(spark, dir)
-    val inDir = q341Staged.computeIfAbsent(dir,
-      _ => Staging.timed("q341-stream-input") {
-      val in = Scratch.stableDir("q341-in-" + Scratch.md5Hex(dir))
-      def stage(pred: org.apache.spark.sql.Column, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir("q341-tmp-" + Scratch.md5Hex(s"$dir|$name"))
-        docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, name))
-      }
+    val inDir = Staging.streamInput("q341", dir) {
       val gate = Sampling.hashGate(col("doc_id"), fraction = 0.5)
-      val first = stage(gate, "a_batch1.parquet")
-      val second = stage(!gate, "b_batch2.parquet")
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-      in
-    })
+      Seq(docs.filter(gate), docs.filter(!gate))
+    }
     val work = Scratch.stableDir("q341-work-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
@@ -5769,9 +5587,6 @@ object ExtQueries {
       .select(col("source"), col("k_held"), col("est_distinct"), col("n_exact"))
   }
 
-  private val q341Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def q341Oracle: String =
     s"""WITH hs AS (SELECT DISTINCT source,
        |              ('0x' || substr(md5($DNorm), 1, 15))::BIGINT // 8 AS h
@@ -5806,24 +5621,10 @@ object ExtQueries {
   def q369StreamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.Scratch
     val docs = documents(spark, dir)
-    val inDir = q369Staged.computeIfAbsent(dir,
-      _ => Staging.timed("q369-stream-input") {
-      val in = Scratch.stableDir("q369-in-" + Scratch.md5Hex(dir))
-      def stage(pred: org.apache.spark.sql.Column, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir("q369-tmp-" + Scratch.md5Hex(s"$dir|$name"))
-        docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, name))
-      }
+    val inDir = Staging.streamInput("q369", dir) {
       val gate = Sampling.hashGate(col("doc_id"), fraction = 0.5)
-      val first = stage(gate, "a_batch1.parquet")
-      val second = stage(!gate, "b_batch2.parquet")
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-      in
-    })
+      Seq(docs.filter(gate), docs.filter(!gate))
+    }
     val work = Scratch.stableDir("q369-work-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
@@ -5859,9 +5660,6 @@ object ExtQueries {
         expr("CASE WHEN exact_n - mg_n <= n_total div 17L THEN 1L ELSE 0L END")
           .as("ok_lower"))
   }
-
-  private val q369Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def q369Oracle: String = {
     val thr = (0.5 * (1L << 60).toDouble).toLong
@@ -6212,23 +6010,9 @@ object ExtQueries {
   def q383StreamExactSubstr(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.Scratch
     val docs = documents(spark, dir)
-    val inDir = q383Staged.computeIfAbsent(dir,
-      _ => Staging.timed("q383-stream-input") {
-      val in = Scratch.stableDir("q383-in-" + Scratch.md5Hex(dir))
-      def stage(pred: org.apache.spark.sql.Column, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir("q383-tmp-" + Scratch.md5Hex(s"$dir|$name"))
-        docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, name))
-      }
-      val first = stage(col("doc_id") >= 200 && col("doc_id") < 350, "a_batch1.parquet")
-      val second = stage(col("doc_id") >= 350, "b_batch2.parquet")
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-      in
-    })
+    val inDir = Staging.streamInput("q383", dir)(Seq(
+      docs.filter(col("doc_id") >= 200 && col("doc_id") < 350),
+      docs.filter(col("doc_id") >= 350)))
     val work = Scratch.stableDir("q383-work-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val idx = s"$work/gidx"
     val out = s"$work/spans"
@@ -6252,9 +6036,6 @@ object ExtQueries {
     }
     spark.read.parquet(out)
   }
-
-  private val q383Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private val q383Oracle =
     s"""WITH t AS (SELECT doc_id, string_split($DNorm, ' ') AS toks
@@ -6304,23 +6085,9 @@ object ExtQueries {
     val m = 2048L
     val k = 3
     val docs = documents(spark, dir)
-    val inDir = q387Staged.computeIfAbsent(dir,
-      _ => Staging.timed("q387-stream-input") {
-      val in = Scratch.stableDir("q387-in-" + Scratch.md5Hex(dir))
-      def stage(pred: org.apache.spark.sql.Column, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir("q387-tmp-" + Scratch.md5Hex(s"$dir|$name"))
-        docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, name))
-      }
-      val first = stage(col("doc_id") >= 250 && col("doc_id") < 375, "a_batch1.parquet")
-      val second = stage(col("doc_id") >= 375, "b_batch2.parquet")
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-      in
-    })
+    val inDir = Staging.streamInput("q387", dir)(Seq(
+      docs.filter(col("doc_id") >= 250 && col("doc_id") < 375),
+      docs.filter(col("doc_id") >= 375)))
     def fps(df: DataFrame): DataFrame =
       df.select(col("doc_id"), TextAnalysis.md5Fingerprint(col("text")).as("f"))
     def bits(df: DataFrame): DataFrame = fps(df).select(col("doc_id"), col("f"),
@@ -6385,9 +6152,6 @@ object ExtQueries {
     }
     spark.read.parquet(out)
   }
-
-  private val q387Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private val q387Oracle =
     s"""WITH d AS (SELECT doc_id, md5($DNorm) AS f FROM documents),

@@ -261,30 +261,19 @@ object EventQueries {
     * spec-asserted. (Events tied on ts_us get the same session id either
     * way, so the batch tie-break column is immaterial.)
     */
-  /** Input staging for the streaming gates is IMMUTABLE per sf dir, so it
-    * is staged once per JVM (keyed by the md5 of the dir path) — bench
-    * trials re-pay only what a trial should measure (the streaming run),
-    * not the fixture copy. Checkpoint/output dirs stay fresh per call.
-    */
-  private val stagedInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  /** Stage the events table into `in` as ONE canonical-schema parquet file
-    * (`ts` BIGINT nanos — the [[Tables.normalizeTs]] boundary applied).
+  /** The events table as a one-file stream input, staged once per JVM per
+    * sf dir ([[Staging.streamInput]]) — bench trials re-pay only what a
+    * trial should measure (the streaming run), not the fixture copy.
+    * Checkpoint/output dirs stay fresh per call.
     *
-    * A raw `Files.copy` of the source file would leak the PHYSICAL encoding
+    * The file is written through [[Tables.normalizeTs]] (`ts` BIGINT
+    * nanos), not copied: a raw copy would leak the PHYSICAL encoding
     * (INT64-nanos vs `timestamp[us]`, whichever the driver generated) into
     * the stream fixture, while `readStream.schema(events(...).schema)`
-    * declares the canonical one — the staged bytes must match the declared
-    * schema, so the stage writes through the normalizing boundary itself.
+    * declares the canonical one.
     */
-  private def stageCanonicalEvents(spark: SparkSession, dir: String,
-      in: java.nio.file.Path, fileName: String): java.nio.file.Path = {
-    val tmp = s"${Scratch.stableDir(s"evstage-${Scratch.md5Hex(s"$dir|$fileName")}")}/one"
-    events(spark, dir).coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-    java.nio.file.Files.copy(part.toPath, in.resolve(fileName))
-  }
+  private def eventsInput(spark: SparkSession, dir: String): String =
+    Staging.streamInput("events", dir)(Seq(events(spark, dir)))
 
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`, then
     * restore. The stateful streaming gates size their STATE STORE count
@@ -335,28 +324,14 @@ object EventQueries {
     }
   }
 
-  private def stagedInput(name: String, dir: String)(
-      build: java.nio.file.Path => Unit): java.nio.file.Path =
-    stagedInputs.computeIfAbsent(s"$name|$dir", _ => {
-      // stableDir EMPTIES the target first: if a previous build failed
-      // mid-way (nothing memoized), the retry starts from a clean dir
-      // instead of tripping on the partial files
-      val in = java.nio.file.Paths.get(
-        Scratch.stableDir(s"$name-in-${Scratch.md5Hex(dir)}"))
-      build(in)
-      in
-    })
-
   def q69StreamSessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val work = Scratch.stableDir("q69")
     // the file stream source needs a DIRECTORY to monitor; stage the fixture
     // file into one (at real scale the ingest dir is the natural layout)
-    val inDir = stagedInput("q69", dir) { in =>
-      stageCanonicalEvents(spark, dir, in, "events.parquet")
-    }
+    val inDir = eventsInput(spark, dir)
     val schema = events(spark, dir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir.toString)
+    val stream = spark.readStream.schema(schema).parquet(inDir)
       .select(col("user_id"), tsUs.as("ts_us"))
       .as[graft.streaming.CdcStream.Ev]
     // fixture-scale micro-batches: 8 shuffle partitions (the q233/q383
@@ -396,29 +371,15 @@ object EventQueries {
     * them all deterministically (the sentinel's own state never emits).
     * Shared by the q70 (tumbling) and q117 (session) window gates.
     */
-  private def eventsPlusSentinel(spark: SparkSession, dir: String): java.nio.file.Path = {
-    val ev = events(spark, dir)
-    stagedInput("evsent", dir) { in =>
-      stageCanonicalEvents(spark, dir, in, "a_events.parquet")
-      // sentinel: one row a year past the max event ts, same schema; staged
-      // AFTER the copy so the file source (ordered by mod time) batches it last
+  private def eventsPlusSentinel(spark: SparkSession, dir: String): String =
+    Staging.streamInput("evsent", dir) {
+      val ev = events(spark, dir)
+      // sentinel: one row a year past the max event ts, same schema, in the
+      // second batch (batched first, it would advance the watermark past
+      // every real row — an empty result)
       val maxTs = ev.agg(max(col("ts"))).head().getLong(0)
-      val sentDir = s"${Scratch.stableDir("evsent-build")}/sentinel"
-      ev.limit(1).withColumn("ts", lit(maxTs + 365L * 86400L * 1000000000L))
-        .coalesce(1).write.mode("overwrite").parquet(sentDir)
-      val part = new java.io.File(sentDir).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-      val staged = java.nio.file.Files.copy(part.toPath, in.resolve("b_sentinel.parquet"))
-      // the file source orders by MODIFICATION time: pin the sentinel's mtime
-      // explicitly past the events file so the two can never tie on a
-      // coarse-granularity filesystem (a tie could batch the sentinel FIRST,
-      // advancing the watermark past every real row — an empty result)
-      java.nio.file.Files.setLastModifiedTime(staged,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(in.resolve("a_events.parquet"))
-            .toMillis + 10000))
+      Seq(ev, ev.limit(1).withColumn("ts", lit(maxTs + 365L * 86400L * 1000000000L)))
     }
-  }
 
   def q70StreamWindows(spark: SparkSession, dir: String): DataFrame = {
     val work = Scratch.stableDir("q70")
@@ -426,7 +387,7 @@ object EventQueries {
     val inDir = eventsPlusSentinel(spark, dir)
 
     val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+      .option("maxFilesPerTrigger", 1).parquet(inDir)
       .withColumn("tsm", timestamp_micros(tsUs))
     val counts = graft.streaming.CdcStream.windowedCounts(
       stream, tsCol = "tsm", typeCol = "event_type",
@@ -470,15 +431,12 @@ object EventQueries {
     */
   def q73StreamDedup(spark: SparkSession, dir: String): DataFrame = {
     val work = Scratch.stableDir("q73")
-    val inDir = stagedInput("q73", dir) { in =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/documents.parquet"), in.resolve("documents.parquet"))
-    }
+    val inDir = Staging.streamInput("q73", dir)(Seq(documents(spark, dir)))
     val schema = documents(spark, dir).schema
     // offset the synthetic event time away from the epoch: the engine's
     // initial watermark is 0, and a row AT the epoch (doc_id 0) would be
     // filtered as late before the dedup state ever sees it
-    val stream = spark.readStream.schema(schema).parquet(inDir.toString)
+    val stream = spark.readStream.schema(schema).parquet(inDir)
       .withColumn("tsm", timestamp_micros(col("doc_id") + lit(1000000000000L)))
     val deduped = graft.streaming.CdcStream.dedupStream(
       stream, tsCol = "tsm", watermarkDelay = "1 hour")
@@ -519,12 +477,10 @@ object EventQueries {
   def q81StreamEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val work = Scratch.stableDir("q81")
-    val inDir = stagedInput("q81", dir) { in =>
-      stageCanonicalEvents(spark, dir, in, "events.parquet")
-    }
+    val inDir = eventsInput(spark, dir)
     val dim = q81Weights.toDF("event_type", "w")
     val schema = events(spark, dir).schema
-    val enriched = spark.readStream.schema(schema).parquet(inDir.toString)
+    val enriched = spark.readStream.schema(schema).parquet(inDir)
       .select(col("event_id"), col("event_type"), col("value"))
       .join(broadcast(dim), "event_type")
     val query = enriched.writeStream
@@ -587,15 +543,13 @@ object EventQueries {
     */
   def q89StreamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val work = Scratch.stableDir("q89")
-    val inDir = stagedInput("q89", dir) { in =>
-      stageCanonicalEvents(spark, dir, in, "events.parquet")
-    }
+    val inDir = eventsInput(spark, dir)
     val schema = events(spark, dir).schema
     // 6h window against the fixture's ~month span / sparse per-user activity
     // keeps the pair set non-trivial at every sf (a 0-row gate proves
     // nothing); watermark 12h > window bounds both state stores
     def side(eventType: String, prefix: String) =
-      spark.readStream.schema(schema).parquet(inDir.toString)
+      spark.readStream.schema(schema).parquet(inDir)
         .filter(col("event_type") === eventType)
         .select(
           col("event_id").as(s"${prefix}_id"),
@@ -1124,7 +1078,7 @@ object EventQueries {
     val schema = events(spark, dir).schema
     val inDir = eventsPlusSentinel(spark, dir)
     val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+      .option("maxFilesPerTrigger", 1).parquet(inDir)
       .withColumn("tsm", timestamp_micros(tsUs))
       .withWatermark("tsm", "30 minutes")
     withFixtureShufflePartitions(spark, dir) {
@@ -1856,8 +1810,11 @@ object EventQueries {
     val p1 = col("c_a").cast("double") / col("n_a").cast("double")
     val p2 = col("c_b").cast("double") / col("n_b").cast("double")
     val pp = (col("c_a") + col("c_b")).cast("double") / (col("n_a") + col("n_b")).cast("double")
-    val z = (p1 - p2) /
-      sqrt((pp * (lit(1.0) - pp)) * (lit(1.0) / col("n_a").cast("double") + lit(1.0) / col("n_b").cast("double")))
+    val se = sqrt((pp * (lit(1.0) - pp)) *
+      (lit(1.0) / col("n_a").cast("double") + lit(1.0) / col("n_b").cast("double")))
+    // every user converts (or none does): zero pooled variance, z undefined —
+    // NULL, the oracle's `x / 0.0`, instead of ANSI's DIVIDE_BY_ZERO
+    val z = when(se =!= 0.0, (p1 - p2) / se)
     row.select(col("n_a"), col("c_a"), col("n_b"), col("c_b"),
       round(z, 4).as("z_r4"),
       (abs(round(z, 4)) > lit(1.96)).cast("int").as("significant"))
@@ -3965,9 +3922,6 @@ object EventQueries {
     * the property sums don't have). Gate: the streamed state must land
     * exactly on q280's one-shot batch bitmap, which is the oracle.
     */
-  private val q292Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q292StreamBitmap(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.Scratch
     val anchor = events(spark, dir).agg(min(tsDay).as("day0"))
@@ -3977,23 +3931,8 @@ object EventQueries {
       .withColumn("off", col("day") - col("day0"))
       .filter(col("off") >= 0 && col("off") < 64)
       .select("event_id", "user_id", "off")
-    val inDir = q292Staged.computeIfAbsent(dir, _ => {
-      val in = Scratch.stableDir("q292-in-" + Scratch.md5Hex(dir))
-      def stage(m: Long, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir("q292-tmp-" + Scratch.md5Hex(s"$dir|$m"))
-        offs.filter(col("event_id") % 3 === m)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, name))
-      }
-      val first = stage(1L, "a_shard1.parquet")
-      val second = stage(2L, "b_shard2.parquet")
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-      in
-    })
+    val inDir = Staging.streamInput("q292", dir)(
+      Seq(1L, 2L).map(m => offs.filter(col("event_id") % 3 === m)))
     val work = Scratch.stableDir("q292")
     val initial = offs.filter(col("event_id") % 3 === 0)
       .groupBy("user_id")
@@ -4098,21 +4037,8 @@ object EventQueries {
     */
   def q301StreamTws(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val inDir = stagedInput("q301", dir) { in =>
-      def stage(parity: Long, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir("q301-tmp-" + Scratch.md5Hex(s"$dir|$parity"))
-        events(spark, dir).filter(col("event_id") % 2 === parity)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, in.resolve(name))
-      }
-      val first = stage(0L, "a_even.parquet")
-      val second = stage(1L, "b_odd.parquet")
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-    }
+    val inDir = Staging.streamInput("q301", dir)(
+      Seq(0L, 1L).map(p => events(spark, dir).filter(col("event_id") % 2 === p)))
     val work = Scratch.stableDir("q301")
     val schema = events(spark, dir).schema
     // transformWithState REQUIRES the RocksDB provider; set it for this
@@ -4124,7 +4050,7 @@ object EventQueries {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+        .option("maxFilesPerTrigger", 1).parquet(inDir)
         .select(col("user_id"), tsUs.as("ts_us"))
         .as[graft.streaming.CdcStream.Ev]
       // 8 shuffle partitions at fixture scale — the q233/q383 convention

@@ -23,12 +23,11 @@ import graft.queries.Tables._
   * asserts staged ≡ fresh row identity), and every consumer's DuckDB
   * oracle still recomputes the whole edge derivation value-for-value.
   *
-  * Storage follows the [[Staging]] scale gate: parquet above the fixture
-  * byte threshold (column-pruned, pushdown-friendly, spill-safe — the
-  * 100 TB shape), an in-memory `localCheckpoint` below it (a ~100 KB
-  * fixture never earns back the parquet round-trip). Mem entries are
-  * keyed by session identity + dir because checkpoint blocks die with
-  * their session.
+  * Each relation is a [[Staging.frame]] artifact gated on the lineitem
+  * fixture: parquet above the byte threshold (column-pruned,
+  * pushdown-friendly, spill-safe — the 100 TB shape), a per-session
+  * `localCheckpoint` below it (a ~100 KB fixture never earns back the
+  * parquet round-trip).
   */
 object GraphFixtures {
 
@@ -64,28 +63,8 @@ object GraphFixtures {
   private[queries] def freshCoPurchasePairs(spark: SparkSession, dir: String): DataFrame =
     freshCoPurchaseCounts(spark, dir).select("u", "v")
 
-  private val pathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val memCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def staged(
-      name: String, spark: SparkSession, dir: String)(
-      fresh: => DataFrame): DataFrame =
-    if (Staging.stageToParquet(s"$dir/lineitem.parquet")) {
-      val p = pathCache.computeIfAbsent(s"$name:$dir",
-        _ => Staging.timed(name) {
-          val out = Scratch.stableDir(s"$name-" + Scratch.md5Hex(dir))
-          fresh.write.mode("overwrite").parquet(out)
-          out
-        })
-      spark.read.parquet(p)
-    } else memCache.computeIfAbsent(
-      s"$name:${System.identityHashCode(spark)}:$dir",
-      _ => Staging.timed(s"$name-mem")(fresh.localCheckpoint()))
-
   def tradeEdges(spark: SparkSession, dir: String): DataFrame =
-    staged("trade-edges", spark, dir)(freshTradeEdges(spark, dir))
+    Staging.frame("trade-edges", spark, dir, "lineitem")(freshTradeEdges(spark, dir))
 
   /** BOTH orientations of [[tradeEdges]] as (u, v) — the undirected view
     * the round-synchronous consumers iterate (q274 BFS, q377 betweenness,
@@ -95,31 +74,24 @@ object GraphFixtures {
     * rows as union(e, flip(e)) by construction — GraphFixturesSpec asserts
     * it). Built FROM the staged directed relation, so the orders⋈lineitem
     * derivation never re-runs. */
-  def tradeEdgesSym(spark: SparkSession, dir: String): DataFrame = {
-    // resolve the parent BEFORE entering staged(): a cache lookup inside the
-    // build closure would be a computeIfAbsent within a computeIfAbsent on
-    // the same map — ConcurrentHashMap throws "Recursive update" whenever
-    // the two keys land in one bin (bin-dependent, so it bites at one sf
-    // dir and not another)
-    val e = tradeEdges(spark, dir)
-    staged("trade-edges-sym", spark, dir) {
+  def tradeEdgesSym(spark: SparkSession, dir: String): DataFrame =
+    Staging.frame("trade-edges-sym", spark, dir, "lineitem") {
+      val e = tradeEdges(spark, dir)
       e.select(col("src").as("u"), col("dst").as("v"))
         .unionByName(e.select(col("dst").as("u"), col("src").as("v")))
     }
-  }
 
   /** Both orientations of [[coPurchasePairs]] as (u, v) — q236's power-
     * iteration reads the symmetrized co-purchase graph every round; same
     * staging rationale as [[tradeEdgesSym]]. */
-  def coPurchasePairsSym(spark: SparkSession, dir: String): DataFrame = {
-    val e = coPurchasePairs(spark, dir) // before staged() — see tradeEdgesSym
-    staged("copurchase-sym", spark, dir) {
+  def coPurchasePairsSym(spark: SparkSession, dir: String): DataFrame =
+    Staging.frame("copurchase-sym", spark, dir, "lineitem") {
+      val e = coPurchasePairs(spark, dir)
       e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
     }
-  }
 
   def coPurchaseCounts(spark: SparkSession, dir: String): DataFrame =
-    staged("copurchase-counts", spark, dir)(freshCoPurchaseCounts(spark, dir))
+    Staging.frame("copurchase-counts", spark, dir, "lineitem")(freshCoPurchaseCounts(spark, dir))
 
   /** Pair-set view of the staged counted contraction — parquet column
     * pruning drops n_co, so q228/q236 read exactly the two-column relation

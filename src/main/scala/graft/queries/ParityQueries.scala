@@ -406,16 +406,10 @@ object ParityQueries {
     * — manifest resolution + snapshot read + aggregate — not four rewrites
     * of the events table per trial.
     */
-  private val q63Fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q63TimestampTravel(spark: SparkSession, dir: String): DataFrame = {
     val table = "main.graft.events_ts"
-    val root = q63Fixtures.computeIfAbsent(dir, _ => {
-      // stableDir empties on (re)build: a failed half-written history (not
-      // memoized) retries from a clean dir
-      val work = Scratch.stableDir("q63-" + Scratch.md5Hex(dir))
-      val catalog = VersionedCatalog(s"$work/catalog")
+    val root = Staging.dir("q63", dir) { root =>
+      val catalog = VersionedCatalog(root)
       val ev = events(spark, dir)
       catalog.commitSnapshot(ev.filter(col("event_id") % 2 === 0), table, 1L)
       catalog.commitSnapshot(ev, table, 2L)
@@ -426,8 +420,7 @@ object ParityQueries {
             .withColumn("_commit_timestamp", lit(s"2024-06-0$v 00:00:00")),
           table, v)
       }
-      s"$work/catalog"
-    })
+    }
     VersionedCatalog(root)
       .snapshotAsOf(spark, table, java.sql.Timestamp.valueOf("2024-06-01 12:00:00"))
       .groupBy("event_type")
@@ -442,8 +435,6 @@ object ParityQueries {
     * ids ≡ 1 (mod 3). The oracle replays the same arithmetic relationally.
     */
   private val CdcPropsTable = "main.graft.props"
-  private val q64Fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Author the q64/q99 upsert history once per JVM per sf dir (immutable
     * fixture; same memo shape as q63): snapshot v1 = ids ≡ 0 (mod 3),
@@ -451,9 +442,8 @@ object ParityQueries {
     * (+1000) and deletes even ids ≡ 1 (mod 3).
     */
   private def q64CatalogRoot(spark: SparkSession, dir: String): String =
-    q64Fixtures.computeIfAbsent(dir, _ => {
-      val work = Scratch.stableDir("q64-" + Scratch.md5Hex(dir))
-      val catalog = VersionedCatalog(s"$work/catalog")
+    Staging.dir("q64", dir) { root =>
+      val catalog = VersionedCatalog(root)
       val ev = events(spark, dir).select("event_id", "event_type", "value")
       catalog.commitSnapshot(ev.filter(col("event_id") % 3 === 0), CdcPropsTable, 1L)
       catalog.commitChanges(
@@ -470,8 +460,7 @@ object ParityQueries {
               .withColumn("_change_type", lit("delete")))
           .withColumn("_commit_timestamp", lit("2024-06-03 00:00:00")),
         CdcPropsTable, 3L)
-      s"$work/catalog"
-    })
+    }
 
   def q64CdcMaterialize(spark: SparkSession, dir: String): DataFrame = {
     val catalog = VersionedCatalog(q64CatalogRoot(spark, dir))
@@ -493,25 +482,8 @@ object ParityQueries {
     */
   def q99StreamMaterialize(spark: SparkSession, dir: String): DataFrame = {
     val catalog = VersionedCatalog(q64CatalogRoot(spark, dir))
-    val inDir = q99Staged.computeIfAbsent(dir, _ => {
-      val in = Scratch.stableDir("q99-in-" + Scratch.md5Hex(dir))
-      def stage(v: Long, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir(s"q99-tmp-" + Scratch.md5Hex(s"$dir|$v"))
-        catalog.changes(spark, CdcPropsTable, v, v)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, name))
-      }
-      val first = stage(2L, "a_commit2.parquet")
-      val second = stage(3L, "b_commit3.parquet")
-      // the file source orders by modification time: pin commit 3 strictly
-      // after commit 2 (same coarse-mtime hazard as the q70 sentinel)
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-      in
-    })
+    val inDir = Staging.streamInput("q99", dir)(
+      Seq(2L, 3L).map(v => catalog.changes(spark, CdcPropsTable, v, v)))
     val work = Scratch.stableDir("q99-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val schema = catalog.changes(spark, CdcPropsTable, 2L, 3L).schema
     val stream = spark.readStream.schema(schema)
@@ -531,9 +503,6 @@ object ParityQueries {
     graft.streaming.CdcStream.currentMaterializedState(spark, s"$work/state")
   }
 
-  private val q99Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q123: INCREMENTAL aggregate maintenance
     * ([[graft.engine.CdcMaterialize.incrementalAgg]]) — a per-type
     * (count, integer-cents sum) aggregate kept current by folding each CDC
@@ -545,12 +514,9 @@ object ParityQueries {
     * aggregates it — the folded aggregate must land exactly there.
     */
   private val Q123Table = "main.graft.ivm"
-  private val q123Fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def q123CatalogRoot(spark: SparkSession, dir: String): String =
-    q123Fixtures.computeIfAbsent(dir, _ => {
-      val work = Scratch.stableDir("q123-" + Scratch.md5Hex(dir))
-      val catalog = VersionedCatalog(s"$work/catalog")
+    Staging.dir("q123", dir) { root =>
+      val catalog = VersionedCatalog(root)
       val ev = events(spark, dir).select("event_id", "event_type", "value")
       catalog.commitSnapshot(ev.filter(col("event_id") % 3 === 0), Q123Table, 1L)
       catalog.commitChanges(
@@ -570,8 +536,7 @@ object ParityQueries {
               .withColumn("_change_type", lit("delete")))
           .withColumn("_commit_timestamp", lit("2024-06-03 00:00:00")),
         Q123Table, 3L)
-      s"$work/catalog"
-    })
+    }
 
   def q123IncrementalAgg(spark: SparkSession, dir: String): DataFrame = {
     val catalog = VersionedCatalog(q123CatalogRoot(spark, dir))
@@ -610,25 +575,8 @@ object ParityQueries {
     */
   def q130StreamIncrementalAgg(spark: SparkSession, dir: String): DataFrame = {
     val catalog = VersionedCatalog(q123CatalogRoot(spark, dir))
-    val inDir = q130Staged.computeIfAbsent(dir, _ => {
-      val in = Scratch.stableDir("q130-in-" + Scratch.md5Hex(dir))
-      def stage(v: Long, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir(s"q130-tmp-" + Scratch.md5Hex(s"$dir|$v"))
-        catalog.changes(spark, Q123Table, v, v)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, name))
-      }
-      val first = stage(2L, "a_commit2.parquet")
-      val second = stage(3L, "b_commit3.parquet")
-      // the file source orders by modification time: pin commit 3 strictly
-      // after commit 2 (same coarse-mtime hazard as the q70 sentinel)
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-      in
-    })
+    val inDir = Staging.streamInput("q130", dir)(
+      Seq(2L, 3L).map(v => catalog.changes(spark, Q123Table, v, v)))
     val work = Scratch.stableDir("q130-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     def cents(df: DataFrame): DataFrame =
       df.withColumn("cents", floor(col("value") * 100).cast("long"))
@@ -654,9 +602,6 @@ object ParityQueries {
     graft.streaming.CdcStream.currentMaterializedState(spark, s"$work/state")
   }
 
-  private val q130Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q181: STREAMING incremental join maintenance — the NINTH streaming
     * gate, covering [[graft.streaming.CdcStream.joinStream]]: the events
     * stream (split `event_id % 3` into an initial base plus two staged
@@ -671,23 +616,8 @@ object ParityQueries {
     val e = events(spark, dir).select(col("event_id"), col("user_id"), col("event_type"))
     val b = customer(spark, dir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"), col("c_nationkey"))
-    val inDir = q181Staged.computeIfAbsent(dir, _ => {
-      val in = Scratch.stableDir("q181-in-" + Scratch.md5Hex(dir))
-      def stage(m: Long, name: String): java.nio.file.Path = {
-        val tmp = Scratch.stableDir("q181-tmp-" + Scratch.md5Hex(s"$dir|$m"))
-        e.filter(col("event_id") % 3 === m).coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).get
-        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(in, name))
-      }
-      val first = stage(1L, "a_batch1.parquet")
-      val second = stage(2L, "b_batch2.parquet")
-      // mtime-ordered file source: pin batch 2 strictly after batch 1
-      java.nio.file.Files.setLastModifiedTime(second,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(first).toMillis + 10000))
-      in
-    })
+    val inDir = Staging.streamInput("q181", dir)(
+      Seq(1L, 2L).map(m => e.filter(col("event_id") % 3 === m)))
     val work = Scratch.stableDir("q181-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val initial = e.filter(col("event_id") % 3 === 0).join(b, Seq("user_id"))
     val stream = spark.readStream.schema(e.schema)
@@ -708,9 +638,6 @@ object ParityQueries {
   private val q181Oracle =
     """SELECT e.user_id, e.event_id, e.event_type, c.c_mktsegment, c.c_nationkey
       |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin
-
-  private val q181Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q124: SCD TYPE-2 history ([[CdcMaterialize.scd2History]]) — the full
     * `[valid_from, valid_to)` version timeline per key from the same CDC
@@ -946,16 +873,11 @@ object ParityQueries {
     * CSV carries integer/string columns only (float→text→float is not
     * bit-stable); ORC is binary columnar, so doubles ride along.
     */
-  private val q100Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q100CsvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = q100Staged.computeIfAbsent(dir, _ => {
-      val p = Scratch.stableDir("q100-csv-" + Scratch.md5Hex(dir))
+    val path = Staging.dir("q100-csv", dir) { p =>
       events(spark, dir).select(col("event_id"), col("user_id"), col("event_type"))
         .write.mode("overwrite").option("header", "true").csv(p)
-      p
-    })
+    }
     spark.read.option("header", "true")
       .schema("event_id LONG, user_id LONG, event_type STRING")
       .csv(path)
@@ -970,9 +892,6 @@ object ParityQueries {
       |       count(DISTINCT user_id)::BIGINT AS n_users
       |FROM events GROUP BY 1""".stripMargin
 
-  private val q191Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q191: partitioned-layout write + pruned read — events written
     * `partitionBy(day)` (the Hive-style layout every lake table uses for
     * time partitioning), read back through a partition-column predicate.
@@ -983,14 +902,12 @@ object ParityQueries {
     * layout cannot silently drop or duplicate rows.
     */
   def q191PartitionedWrite(spark: SparkSession, dir: String): DataFrame = {
-    val path = q191Staged.computeIfAbsent(dir, _ => {
-      val p = Scratch.stableDir("q191-part-" + Scratch.md5Hex(dir))
+    val path = Staging.dir("q191-part", dir) { p =>
       events(spark, dir)
         .withColumn("day", Tables.tsDay)
         .select(col("event_id"), col("user_id"), col("event_type"), col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(p)
-      p
-    })
+    }
     spark.read.parquet(path)
       .filter(col("day") % 2 === 0)
       .groupBy("event_type")
@@ -1004,16 +921,11 @@ object ParityQueries {
       |FROM events WHERE (epoch_us(ts) // 86400000000) % 2 = 0
       |GROUP BY 1""".stripMargin
 
-  private val q101Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q101OrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = q101Staged.computeIfAbsent(dir, _ => {
-      val p = Scratch.stableDir("q101-orc-" + Scratch.md5Hex(dir))
+    val path = Staging.dir("q101-orc", dir) { p =>
       events(spark, dir).select(col("event_id"), col("event_type"), col("value"))
         .write.mode("overwrite").orc(p)
-      p
-    })
+    }
     spark.read.orc(path)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -1026,9 +938,6 @@ object ParityQueries {
       |       round(sum(value), 4) AS sum_value
       |FROM events GROUP BY 1""".stripMargin
 
-  private val q153Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** JSON-lines round trip — the READ side of the K1 JSON writer family
     * (the reference's primary sink format): write a projection as
     * newline-delimited JSON, read it back under an explicit schema (schema
@@ -1037,13 +946,11 @@ object ParityQueries {
     * fidelity including long integers and the double `value` column.
     */
   def q153JsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = q153Staged.computeIfAbsent(dir, _ => {
-      val p = Scratch.stableDir("q153-jsonl-" + Scratch.md5Hex(dir))
+    val path = Staging.dir("q153-jsonl", dir) { p =>
       events(spark, dir).select(col("event_id"), col("user_id"),
           col("event_type"), col("value"))
         .write.mode("overwrite").json(p)
-      p
-    })
+    }
     spark.read
       .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE")
       .json(path)
@@ -1787,9 +1694,6 @@ object ParityQueries {
       |FROM prof, actual
       |WHERE predicted_rows = actual.n""".stripMargin
 
-  private val q199Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q199: malformed-record handling — a staged CSV where every 17th row
     * is garbage, read back in PERMISSIVE mode with a
     * `columnNameOfCorruptRecord` column: corrupt rows are COUNTED and
@@ -1800,15 +1704,13 @@ object ParityQueries {
     * that decided which rows were staged broken.
     */
   def q199CorruptRecords(spark: SparkSession, dir: String): DataFrame = {
-    val path = q199Staged.computeIfAbsent(dir, _ => {
-      val p = Scratch.stableDir("q199-csv-" + Scratch.md5Hex(dir))
+    val path = Staging.dir("q199-csv", dir) { p =>
       documents(spark, dir)
         .select(when(col("doc_id") % 17 === 0, lit("not,a,number,at,all"))
           .otherwise(concat(col("doc_id").cast("string"), lit(","),
             col("n_chars").cast("string"))).as("value"))
         .write.mode("overwrite").text(p)
-      p
-    })
+    }
     spark.read
       .schema("doc_id LONG, n_chars LONG, _corrupt STRING")
       .option("mode", "PERMISSIVE")
@@ -2627,12 +2529,8 @@ object ParityQueries {
     * read). Generation membership is the even/odd event residue, so the
     * oracle derives both generations' aggregates closed-form.
     */
-  private val q273Staged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q273SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val path = q273Staged.computeIfAbsent(dir, _ => {
-      val p = Scratch.stableDir("q273-gen-" + Scratch.md5Hex(dir))
+    val path = Staging.dir("q273-gen", dir) { p =>
       val e = events(spark, dir)
       e.filter(col("event_id") % 2 === 0)
         .select(col("event_id"), col("user_id"))
@@ -2641,8 +2539,7 @@ object ParityQueries {
         .select(col("event_id"), col("user_id"),
           floor(col("value") * 100).cast("long").as("cents"))
         .write.mode("overwrite").parquet(s"$p/g2")
-      p
-    })
+    }
     spark.read.option("mergeSchema", "true")
       .parquet(s"$path/g1", s"$path/g2")
       .groupBy((col("cents").isNotNull).as("has_cents"))

@@ -442,7 +442,7 @@ object CdcStream {
       config: graft.engine.JobSpec.JobConfig,
       checkpointRoot: String,
       log: String => Unit = _ => ()): Unit = {
-    import graft.engine.{SqlRewrite, VoidScrub, Writers}
+    import graft.engine.{SqlRewrite, VoidScrub}
     import graft.engine.JobSpec.{JsonFormat, ParquetFormat}
     val epoch = System.currentTimeMillis()
     val bindings = config.tables.map { range =>
@@ -455,7 +455,6 @@ object CdcStream {
       table -> view
     }.toMap
     val out = spark.sql(SqlRewrite.rewrite(config.sql, bindings))
-    Writers.setMaxRecordsPerFile(spark, config.maxRecordsPerFile)
     val sink = config.format match {
       case JsonFormat => out.writeStream.format("json")
       case ParquetFormat =>
@@ -465,6 +464,7 @@ object CdcStream {
     }
     log(s"Starting available-now streaming export to ${config.outputPath}")
     val query = sink
+      .option("maxRecordsPerFile", config.maxRecordsPerFile)
       .option("path", config.outputPath)
       .option("checkpointLocation", checkpointRoot)
       .outputMode(OutputMode.Append)

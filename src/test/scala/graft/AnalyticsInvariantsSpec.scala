@@ -26,6 +26,22 @@ class AnalyticsInvariantsSpec extends SparkSpec {
     }
   }
 
+  test("q142 z-test: zero pooled variance gives a NULL z, not DIVIDE_BY_ZERO") {
+    import spark.implicits._
+    // every user converts (value > 150), then no user does: p(1-p) = 0
+    Seq(200.0, 10.0).foreach { value =>
+      withTempDir("graft-q142") { dir =>
+        (1L to 40L).map(u => (u, u * 1000L, u, "purchase", value, "{}"))
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+          .write.parquet(s"$dir/events.parquet")
+        val Array(r) = EventQueries.q142AbZtest(spark, dir.toString).collect()
+        assert(r.getAs[Long]("n_a") + r.getAs[Long]("n_b") === 40L)
+        assert(r.isNullAt(r.fieldIndex("z_r4")), s"z must be NULL: $r")
+        assert(r.isNullAt(r.fieldIndex("significant")), s"flag must be NULL: $r")
+      }
+    }
+  }
+
   test("q307 calibration: ECE is the n-weighted mean gap of its own rows") {
     val rows = graft.ext.ExtQueries.q307Calibration(spark, Sf0001).collect()
     val n = rows.map(_.getAs[Long]("n")).sum

@@ -238,6 +238,64 @@ class UnloadSpec extends SparkSpec with BeforeAndAfterAll {
     assert(report.tableResults.head.finalStartVersion === 3L)
   }
 
+  test("O4 classifies the error Spark raises for a CDF file lost after planning") {
+    val cat = freshCatalog("c9")
+    val config = JobConfig(
+      tables = Seq(TableVersionRange(table, 2L, 3L)),
+      dataType = Event,
+      sql = s"SELECT id FROM $table",
+      outputPath = s"$work/out_lost")
+    val sql = Unload.buildViewsForTables(spark, cat, config,
+      scala.collection.mutable.LinkedHashMap.empty, forceLatestOnly = false, _ => ())
+    // the views are planned over the listed files; one vanishes before the read
+    val commit2 = Paths.get(s"${cat.cdfRoot(table)}/_commit_version=2")
+    val lost = Files.list(commit2).filter(_.getFileName.toString.startsWith("part-"))
+      .findFirst().get
+    Files.delete(lost)
+    val e = intercept[Exception](spark.sql(sql).collect())
+    assert(Recovery.missingCdfSignature(e) === Some(Recovery.OssFileNotExistSignature),
+      s"unclassified real file loss: $e")
+  }
+
+  test("maxRecordsPerFile caps the export's files and never leaks into the session") {
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val before = spark.conf.getOption(key)
+    def partFiles(dir: String): Seq[String] =
+      new java.io.File(dir).listFiles().map(_.getPath)
+        .filter(p => new java.io.File(p).getName.startsWith("part-")).toSeq
+    def rowsPerFile(dir: String): Seq[Long] =
+      partFiles(dir).map(f => spark.read.parquet(f).count())
+
+    val cat = freshCatalog("c10")
+    val batchOut = s"$work/out_cap_batch"
+    // one coalesced partition holding every row: only the option splits it
+    Unload.run(spark, cat, JobConfig(
+      tables = Seq(TableVersionRange(table, 2L, 3L)),
+      dataType = Event,
+      sql = s"SELECT id FROM $table",
+      outputPath = batchOut,
+      strategy = Coalesce,
+      maxRecordsPerFile = 1L,
+      targetPartitions = Some(1)))
+    assert(rowsPerFile(batchOut).sum === 3L) // inserts 11, 12, 13
+    assert(rowsPerFile(batchOut).forall(_ <= 1L), rowsPerFile(batchOut))
+
+    val streamOut = s"$work/out_cap_stream"
+    graft.streaming.CdcStream.unloadAvailableNow(spark, cat, JobConfig(
+      tables = Seq(TableVersionRange(table, 1L, 1L)),
+      dataType = Event,
+      sql = s"SELECT id FROM $table",
+      outputPath = streamOut,
+      maxRecordsPerFile = 1L), s"$work/ckpt_cap_stream")
+    assert(rowsPerFile(streamOut).sum === 3L)
+    assert(rowsPerFile(streamOut).forall(_ <= 1L), rowsPerFile(streamOut))
+
+    assert(spark.conf.getOption(key) === before)
+    val unrelated = s"$work/out_unrelated"
+    spark.range(100).coalesce(1).write.parquet(unrelated)
+    assert(partFiles(unrelated).size === 1)
+  }
+
   test("non-CDF errors propagate immediately (no retry)") {
     val cat = freshCatalog("c8")
     intercept[Exception] {
