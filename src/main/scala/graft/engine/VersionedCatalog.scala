@@ -22,10 +22,14 @@ import graft.engine.JobSpec.TableVersionRange
   * Change files carry `_change_type` (insert | update_preimage |
   * update_postimage | delete) and `_commit_timestamp` as data columns;
   * `_commit_version` is the Hive-style partition column, so a version-range
-  * read is **directory-pruned at file-listing time** — on a 1000-executor
-  * cluster a `[start, end]` window never lists (let alone reads) commits
-  * outside the window. This mirrors Delta's CDF file skipping with zero
-  * custom readers. With Delta OSS on the cluster this object collapses to
+  * read is partition-pruned: a `[start, end]` window READS only the
+  * window's files. It still LISTS the whole history — [[changes]] builds
+  * its file index over the table's `cdf/` root, every commit directory
+  * included, before the pruning filter applies — so listing cost is
+  * O(history), not O(window) (a 4-file window over a 65-file history lists
+  * all 65 files in one listing job). Delta's CDF file skipping prunes at
+  * listing time from its log; this layout does not yet. With Delta OSS on
+  * the cluster this object collapses to
   * `spark.read.format("delta").option("versionAsOf"|"readChangeFeed", ...)`.
   */
 final case class VersionedCatalog(root: String) {
@@ -157,8 +161,9 @@ final case class VersionedCatalog(root: String) {
   }
 
   /** S2: change rows for versions [start, end] (`table_changes` analogue).
-    * Partition pruning on `_commit_version` keeps the scan proportional to
-    * the window, not the table history.
+    * Partition pruning on `_commit_version` keeps the files READ to the
+    * window, but the file index lists every commit under the `cdf/` root,
+    * so building the frame costs O(history) in listing.
     */
   def changes(spark: SparkSession, table: String, start: Long, end: Long): DataFrame = {
     val rootPath = cdfRoot(table)

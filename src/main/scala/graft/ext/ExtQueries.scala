@@ -2483,55 +2483,50 @@ object ExtQueries {
     *
     * Scale shape: per-batch assignment scores cells against the broadcast
     * centroid model ([[Similarity.withNearestCell]]: a broadcast
-    * nested-loop join + one argmin aggregate exchange at the gate's 8
-    * partitions — the vectors themselves never shuffle); the index grows
+    * nested-loop join + one argmin aggregate exchange — the vectors
+    * themselves never shuffle); the index grows
     * by appending cell-keyed parquet exactly like
     * [[Similarity.appendToIvfIndex]]; the
     * probe is [[Similarity.probeIvf]]'s equi-join shape. Streaming-gate
-    * conventions: state starts empty, AvailableNow, one file per trigger,
-    * 8 shuffle partitions at fixture scale (the streaming-gate note on
-    * [[graft.queries.EventQueries.withShufflePartitions]]).
+    * conventions: state starts empty, one file per trigger, drained by
+    * [[graft.streaming.CdcStream.drain]] in a fixture session
+    * ([[graft.queries.EventQueries.fixtureGate]]).
     */
   def q400StreamIvfIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.Scratch
     val emb = embeddings(spark, dir)
     val gate = Sampling.hashGate(col("vec_id"), fraction = 0.5)
     val inDir = Staging.streamInput("q400", dir)(Seq(emb.filter(gate), emb.filter(!gate)))
-    graft.queries.EventQueries.withFixtureShufflePartitions(spark, dir) {
-      // index model: q399's training-free seed rule over BATCH-1 rows only
-      val centroids = Similarity.ivfCentroids(emb.filter(gate), cells = 16, iters = 0)
-      // keyed by sf dir like the staged inputs above: the returned frame
-      // lazily reads $work/inv, so an unkeyed dir would let a later call at
-      // ANOTHER sf wipe the files backing a not-yet-collected result
-      val work = Scratch.stableDir("q400-work-" + Scratch.md5Hex(dir))
-      val inv = s"$work/inv"
-      val stream = spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val query = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          Similarity.withNearestCell(
-              batch.select(col("vec_id"), col("embedding").as("c_vec"),
-                Similarity.norm(col("embedding")).as("c_norm")),
-              "c_vec", "c_norm", "vec_id", centroids)
-            .withColumn("arrived_batch", lit(id))
-            .write.mode("append").parquet(inv)
-          ()
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      val streamedInv = spark.read.parquet(inv)
-      Similarity.probeIvf(
-          streamedInv.select("vec_id", "c_vec", "c_norm", "cell"),
-          emb.filter(col("vec_id") < 8), centroids, k = 5, nprobe = 12,
-          idCol = "vec_id", vecCol = "embedding")
-        .select("q_id", "vec_id", "rank")
-        .join(streamedInv.select(col("vec_id"), col("cell"), col("arrived_batch")),
-          Seq("vec_id"))
-        .select(col("q_id"), col("vec_id"), col("rank"), col("cell"),
-          col("arrived_batch"))
-    }
+    // index model: q399's training-free seed rule over BATCH-1 rows only
+    val centroids = Similarity.ivfCentroids(emb.filter(gate), cells = 16, iters = 0)
+    // keyed by sf dir like the staged inputs above: the returned frame
+    // lazily reads $work/inv, so an unkeyed dir would let a later call at
+    // ANOTHER sf wipe the files backing a not-yet-collected result
+    val work = Scratch.stableDir("q400-work-" + Scratch.md5Hex(dir))
+    val inv = s"$work/inv"
+    val stream = spark.readStream.schema(emb.schema)
+      .option("maxFilesPerTrigger", 1).parquet(inDir)
+    graft.streaming.CdcStream.drain(
+      stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+        Similarity.withNearestCell(
+            batch.select(col("vec_id"), col("embedding").as("c_vec"),
+              Similarity.norm(col("embedding")).as("c_norm")),
+            "c_vec", "c_norm", "vec_id", centroids)
+          .withColumn("arrived_batch", lit(id))
+          .write.mode("append").parquet(inv)
+        ()
+      },
+      s"$work/ckpt")
+    val streamedInv = spark.read.parquet(inv)
+    Similarity.probeIvf(
+        streamedInv.select("vec_id", "c_vec", "c_norm", "cell"),
+        emb.filter(col("vec_id") < 8), centroids, k = 5, nprobe = 12,
+        idCol = "vec_id", vecCol = "embedding")
+      .select("q_id", "vec_id", "rank")
+      .join(streamedInv.select(col("vec_id"), col("cell"), col("arrived_batch")),
+        Seq("vec_id"))
+      .select(col("q_id"), col("vec_id"), col("rank"), col("cell"),
+        col("arrived_batch"))
   }
 
   private def q400Oracle: String = {
@@ -3483,31 +3478,23 @@ object ExtQueries {
     val work = Scratch.stableDir("q233-work-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val idx = s"$work/idx"
     val out = s"$work/accepted"
-    // fixture-scale micro-batches: 8 shuffle partitions (the streaming-gate
-    // convention — per-partition task setup dominates 150-doc batches at 32;
-    // partition count never changes WHICH pairs band together)
-    graft.queries.EventQueries.withFixtureShufflePartitions(spark, dir) {
-      // NOT served from the staged sketch (r15 A/B): restricting the staged
-      // relations to the 200 seed docs costs a full-sketch parquet scan +
-      // semi-join per call — more than shingling 200 docs inline (isolated
-      // 5.9 → 6.4 s); the q29 pattern only pays when the restricted side is
-      // a large fraction of the corpus
-      Dedup.writeIndex(fanOut(docs.filter(col("doc_id") < 200)), idx)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val query = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // fused probe + index maintenance: identical admissions to the
-          // dedupAgainstIndex → appendToIndex pair (DedupSpec asserts it),
-          // with the batch shingled once instead of twice
-          Dedup.ingestAgainstIndex(fanOut(batch), idx)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+    // NOT served from the staged sketch (r15 A/B): restricting the staged
+    // relations to the 200 seed docs costs a full-sketch parquet scan +
+    // semi-join per call — more than shingling 200 docs inline (isolated
+    // 5.9 → 6.4 s); the q29 pattern only pays when the restricted side is
+    // a large fraction of the corpus
+    Dedup.writeIndex(fanOut(docs.filter(col("doc_id") < 200)), idx)
+    val stream = spark.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", 1).parquet(inDir)
+    graft.streaming.CdcStream.drain(
+      stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+        // fused probe + index maintenance: identical admissions to the
+        // dedupAgainstIndex → appendToIndex pair (DedupSpec asserts it),
+        // with the batch shingled once instead of twice
+        Dedup.ingestAgainstIndex(fanOut(batch), idx)
+          .write.mode("append").parquet(out)
+      },
+      s"$work/ckpt")
     spark.read.parquet(out).select("doc_id", "lang", "source")
   }
 
@@ -5561,15 +5548,9 @@ object ExtQueries {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("h",
           org.apache.spark.sql.types.LongType))))
-    // 8 shuffle partitions at fixture scale — the q233/q383 convention
-    graft.queries.EventQueries.withFixtureShufflePartitions(spark, dir) {
-      val q = graft.streaming.CdcStream
-        .kmvStream(stream, empty, stateDir = s"$work/state", k = 64)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    graft.streaming.CdcStream.drain(
+      graft.streaming.CdcStream.kmvStream(stream, empty, stateDir = s"$work/state", k = 64),
+      s"$work/ckpt")
     val maxEst = 63L << 57
     val sk = graft.streaming.CdcStream.currentMaterializedState(spark, s"$work/state")
     val n = fanOut(docs)
@@ -5636,15 +5617,9 @@ object ExtQueries {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("c",
           org.apache.spark.sql.types.LongType))))
-    // 8 shuffle partitions at fixture scale — the q233/q383 convention
-    graft.queries.EventQueries.withFixtureShufflePartitions(spark, dir) {
-      val q = graft.streaming.CdcStream
-        .mgStream(stream, empty, stateDir = s"$work/state", k = 16)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    graft.streaming.CdcStream.drain(
+      graft.streaming.CdcStream.mgStream(stream, empty, stateDir = s"$work/state", k = 16),
+      s"$work/ckpt")
     val mg = graft.streaming.CdcStream
       .currentMaterializedState(spark, s"$work/state")
     val toks = fanOut(docs)
@@ -6016,24 +5991,17 @@ object ExtQueries {
     val work = Scratch.stableDir("q383-work-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val idx = s"$work/gidx"
     val out = s"$work/spans"
-    // fixture-scale micro-batches: 8 shuffle partitions (the streaming-gate
-    // convention — per-partition task setup dominates 150-doc batches at 32)
-    graft.queries.EventQueries.withFixtureShufflePartitions(spark, dir) {
-      Dedup.writeGramIndex(fanOut(docs.filter(col("doc_id") < 200)), idx)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val query = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // fused detect + index-append: one gram scan per batch (the
-          // two-call form tokenizes the batch twice); the span write lands
-          // before the index grows, so no per-batch span checkpoint
-          Dedup.exactSubstrIngestBatchTo(fanOut(batch), idx, out)
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+    Dedup.writeGramIndex(fanOut(docs.filter(col("doc_id") < 200)), idx)
+    val stream = spark.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", 1).parquet(inDir)
+    graft.streaming.CdcStream.drain(
+      stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+        // fused detect + index-append: one gram scan per batch (the
+        // two-call form tokenizes the batch twice); the span write lands
+        // before the index grows, so no per-batch span checkpoint
+        Dedup.exactSubstrIngestBatchTo(fanOut(batch), idx, out)
+      },
+      s"$work/ckpt")
     spark.read.parquet(out)
   }
 
@@ -6104,52 +6072,47 @@ object ExtQueries {
         .unionByName(
           fps(df).select(lit(null).cast("long").as("bit"), col("f")).distinct())
     val out = s"$work/stats"
-    graft.queries.EventQueries.withFixtureShufflePartitions(spark, dir) {
-      val seed = docs.filter(col("doc_id") < 250)
-      idxRows(seed).write.mode("overwrite").parquet(idx)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val query = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val stored = spark.read.parquet(idx)
-            val seen = stored.filter(col("bit").isNotNull).select("bit")
-            val known = stored.filter(col("f").isNotNull).select("f")
-            val flagged = bits(b).join(broadcast(seen), Seq("bit"), "left_semi")
-              .groupBy("doc_id").agg(count(lit(1)).as("hits"))
-              .filter(col("hits") === k)
-              .select(col("doc_id"), lit(1L).as("bloom_flag"))
-            val exact = fps(b).join(known, Seq("f"), "left_semi")
-              .select(col("doc_id"), lit(1L).as("exact_flag"))
-            fps(b)
-              .join(flagged, Seq("doc_id"), "left")
-              .join(exact, Seq("doc_id"), "left")
-              // append-only index: a bit re-set by a later batch is a second
-              // ROW (the semi-join reader doesn't care) — occupancy counts
-              // DISTINCT bits
-              .crossJoin(broadcast(
-                seen.agg(countDistinct(col("bit")).as("bits_before"))))
-              .agg(
-                expr("CASE WHEN min(doc_id) < 375 THEN 250L ELSE 375L END")
-                  .as("batch_lo"),
-                count(lit(1)).as("n_docs"),
-                sum(coalesce(col("exact_flag"), lit(0L))).as("exact_dup"),
-                sum(coalesce(col("bloom_flag"), lit(0L))).as("bloom_flagged"),
-                sum(when(col("bloom_flag").isNotNull && col("exact_flag").isNull, 1L)
-                  .otherwise(0L)).as("false_pos"),
-                sum(when(col("exact_flag").isNotNull && col("bloom_flag").isNull, 1L)
-                  .otherwise(0L)).as("false_neg"),
-                max(col("bits_before")).as("bits_before"))
-              .write.mode("append").parquet(out)
-            idxRows(b).write.mode("append").parquet(idx)
-          } finally b.unpersist(false)
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+    val seed = docs.filter(col("doc_id") < 250)
+    idxRows(seed).write.mode("overwrite").parquet(idx)
+    val stream = spark.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", 1).parquet(inDir)
+    graft.streaming.CdcStream.drain(
+      stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+        val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val stored = spark.read.parquet(idx)
+          val seen = stored.filter(col("bit").isNotNull).select("bit")
+          val known = stored.filter(col("f").isNotNull).select("f")
+          val flagged = bits(b).join(broadcast(seen), Seq("bit"), "left_semi")
+            .groupBy("doc_id").agg(count(lit(1)).as("hits"))
+            .filter(col("hits") === k)
+            .select(col("doc_id"), lit(1L).as("bloom_flag"))
+          val exact = fps(b).join(known, Seq("f"), "left_semi")
+            .select(col("doc_id"), lit(1L).as("exact_flag"))
+          fps(b)
+            .join(flagged, Seq("doc_id"), "left")
+            .join(exact, Seq("doc_id"), "left")
+            // append-only index: a bit re-set by a later batch is a second
+            // ROW (the semi-join reader doesn't care) — occupancy counts
+            // DISTINCT bits
+            .crossJoin(broadcast(
+              seen.agg(countDistinct(col("bit")).as("bits_before"))))
+            .agg(
+              expr("CASE WHEN min(doc_id) < 375 THEN 250L ELSE 375L END")
+                .as("batch_lo"),
+              count(lit(1)).as("n_docs"),
+              sum(coalesce(col("exact_flag"), lit(0L))).as("exact_dup"),
+              sum(coalesce(col("bloom_flag"), lit(0L))).as("bloom_flagged"),
+              sum(when(col("bloom_flag").isNotNull && col("exact_flag").isNull, 1L)
+                .otherwise(0L)).as("false_pos"),
+              sum(when(col("exact_flag").isNotNull && col("bloom_flag").isNull, 1L)
+                .otherwise(0L)).as("false_neg"),
+              max(col("bits_before")).as("bits_before"))
+            .write.mode("append").parquet(out)
+          idxRows(b).write.mode("append").parquet(idx)
+        } finally b.unpersist(false)
+      },
+      s"$work/ckpt")
     spark.read.parquet(out)
   }
 
@@ -6862,7 +6825,7 @@ object ExtQueries {
     "q336_priority_sample" -> (q336PrioritySample _),
     "q339_chunk_increment" -> (q339ChunkIncrement _),
     "q340_kmv_overlap" -> (q340KmvOverlap _),
-    "q341_stream_kmv" -> (q341StreamKmvSketch _),
+    "q341_stream_kmv" -> graft.queries.EventQueries.fixtureGate(q341StreamKmvSketch),
     "q346_incremental_ingest" -> (q346IncrementalIngest _),
     "q333_cov_profile" -> (q333CovarianceProfile _),
     "q357_power_iteration" -> (q357PowerIteration _),
@@ -6897,17 +6860,17 @@ object ExtQueries {
     "q226_bm25" -> (q226Bm25 _),
     "q227_bigram_cond" -> (q227BigramCond _),
     "q366_textrank" -> (q366TextRank _),
-    "q369_stream_heavy_hitters" -> (q369StreamHeavyHitters _),
+    "q369_stream_heavy_hitters" -> graft.queries.EventQueries.fixtureGate(q369StreamHeavyHitters),
     "q374_snake_packing" -> (q374SnakePacking _),
     "q375_rendezvous_shard" -> (q375RendezvousShard _),
     "q378_exact_substr" -> (q378ExactSubstr _),
     "q380_dup_coverage" -> (q380DupCoverage _),
     "q381_epoch_shuffle" -> (q381EpochShuffle _),
     "q382_apportion" -> (q382Apportion _),
-    "q383_stream_exact_substr" -> (q383StreamExactSubstr _),
+    "q383_stream_exact_substr" -> graft.queries.EventQueries.fixtureGate(q383StreamExactSubstr),
     "q384_bloom_dedup" -> (q384BloomDedup _),
     "q385_span_rewrite" -> (q385SpanRewrite _),
-    "q387_stream_bloom" -> (q387StreamBloom _),
+    "q387_stream_bloom" -> graft.queries.EventQueries.fixtureGate(q387StreamBloom),
     "q389_curriculum" -> (q389Curriculum _),
     "q391_filter_redundancy" -> (q391FilterRedundancy _),
     "q392_substr_reconcile" -> (q392SubstrReconcile _),
@@ -6916,7 +6879,7 @@ object ExtQueries {
     "q386_quality_keeper" -> (q386QualityKeeper _),
     "q229_pq_ann" -> (q229PqAnn _),
     "q230_ivfpq_ann" -> (q230IvfPqAnn _),
-    "q233_stream_dedup_index" -> (q233StreamDedupIndex _),
+    "q233_stream_dedup_index" -> graft.queries.EventQueries.fixtureGate(q233StreamDedupIndex),
     "q237_ks_test" -> (q237KsTest _),
     "q241_burstiness" -> (q241Burstiness _),
     "q242_hard_negatives" -> (q242HardNegatives _),
@@ -7014,7 +6977,7 @@ object ExtQueries {
     "q397_jl_sweep" -> (q397JlSweep _),
     "q398_frame_seq_dedup" -> (q398FrameSeqDedup _),
     "q399_ivf_nprobe_sweep" -> (q399IvfNprobeSweep _),
-    "q400_stream_ivf_ingest" -> (q400StreamIvfIngest _),
+    "q400_stream_ivf_ingest" -> graft.queries.EventQueries.fixtureGate(q400StreamIvfIngest),
     "q401_adaptive_probe" -> (q401AdaptiveProbe _)
   )
 

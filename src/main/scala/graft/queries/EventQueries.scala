@@ -275,58 +275,25 @@ object EventQueries {
   private def eventsInput(spark: SparkSession, dir: String): String =
     Staging.streamInput("events", dir)(Seq(events(spark, dir)))
 
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`, then
-    * restore. The stateful streaming gates size their STATE STORE count
-    * from this conf at query start: at fixture scale the dominant cost is
-    * per-partition store instantiation + per-batch commit (a stream-stream
-    * join keeps four stores per partition), not data volume, so the gates
-    * pin a small value. On a real cluster the same queries would size it
-    * to the keyspace — the conf is the knob either way; semantics (and the
-    * oracle) are partition-count-invariant.
+  /** A fixture-scale gate's registry entry: `q` runs in a session of its
+    * own ([[graft.streaming.CdcStream.fixtureSession]]: a copy of the
+    * caller's conf at shuffle width 8, with the RocksDB provider when
+    * `rocksDb`), created once per (caller session, fixture dir) through
+    * [[Staging.inSession]] so its staged artifacts and warm state outlive
+    * one call. The caller's session conf is never written. The result is a
+    * frame of that session.
     */
-  /** Ceiling (bytes of the query's source dataset dir) below which the
-    * streaming gates and bounded-round graph peels pin their shuffle
-    * width — the scale gate for [[withFixtureShufflePartitions]]. 64 MiB
-    * separates the driver fixtures (sf0.1 ≈ 17 MB total) from any real
-    * deployment volume by three orders of magnitude either way;
-    * overridable for tests via `graft.fixturePin.maxBytes`.
-    */
-  private[graft] def fixturePinMaxBytes: Long =
-    sys.props.get("graft.fixturePin.maxBytes").map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
-
-  /** Scale-gated form of [[withShufflePartitions]]: pin the shuffle width
-    * to `n` ONLY when the source dataset dir is fixture-sized (below
-    * [[fixturePinMaxBytes]], filesystem metadata only via
-    * [[Staging.pathBytes]]). At fixture scale per-partition state-store
-    * instantiation + per-batch commit (streams) or per-round task setup
-    * (graph peels) dominate 150-row batches, so 8 partitions beats the
-    * session's width; at production volume 8 partitions on a stateful
-    * stream would be the bottleneck, so the session/AQE-sized value
-    * stands untouched. Values are partition-count-invariant either way
-    * (no partition-id-dependent code in CdcStream or the peels), so the
-    * gate changes cost, never results.
-    */
-  private[graft] def withFixtureShufflePartitions[T](
-      spark: SparkSession, dir: String, n: Int = 8)(body: => T): T =
-    if (Staging.pathBytes(dir) < fixturePinMaxBytes)
-      withShufflePartitions(spark, n)(body)
-    else body
-
-  private[graft] def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+  private[graft] def fixtureGate(
+      q: (SparkSession, String) => DataFrame,
+      rocksDb: Boolean = false): (SparkSession, String) => DataFrame = { (spark, dir) =>
+    val name = if (rocksDb) "fixture-session-rocksdb" else "fixture-session"
+    q(Staging.inSession(name, spark, dir)(
+      graft.streaming.CdcStream.fixtureSession(spark, rocksDb)), dir)
   }
 
   def q69StreamSessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val work = Scratch.stableDir("q69")
+    val work = Scratch.stableDir("q69-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     // the file stream source needs a DIRECTORY to monitor; stage the fixture
     // file into one (at real scale the ingest dir is the natural layout)
     val inDir = eventsInput(spark, dir)
@@ -334,20 +301,10 @@ object EventQueries {
     val stream = spark.readStream.schema(schema).parquet(inDir)
       .select(col("user_id"), tsUs.as("ts_us"))
       .as[graft.streaming.CdcStream.Ev]
-    // fixture-scale micro-batches: 8 shuffle partitions (the q233/q383
-    // streaming-gate convention — per-partition state-store open/commit
-    // dominates small batches at 32; values are partition-count-invariant)
-    withFixtureShufflePartitions(spark, dir) {
-      val query = graft.streaming.CdcStream.sessionize(stream, gapUs = SessionGapUs)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$work/out")
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+    graft.streaming.CdcStream.drain(
+      graft.streaming.CdcStream.sessionize(stream, gapUs = SessionGapUs)
+        .writeStream.format("parquet").option("path", s"$work/out").outputMode("append"),
+      s"$work/ckpt")
     spark.read.parquet(s"$work/out")
       .groupBy("user_id", "session_id")
       .agg(
@@ -382,7 +339,7 @@ object EventQueries {
     }
 
   def q70StreamWindows(spark: SparkSession, dir: String): DataFrame = {
-    val work = Scratch.stableDir("q70")
+    val work = Scratch.stableDir("q70-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val schema = events(spark, dir).schema
     val inDir = eventsPlusSentinel(spark, dir)
 
@@ -392,17 +349,9 @@ object EventQueries {
     val counts = graft.streaming.CdcStream.windowedCounts(
       stream, tsCol = "tsm", typeCol = "event_type",
       windowDuration = "1 hour", watermarkDelay = "30 minutes")
-    // 8 shuffle partitions at fixture scale — the q233/q383 convention
-    withFixtureShufflePartitions(spark, dir) {
-      val query = counts.writeStream
-        .format("parquet")
-        .option("path", s"$work/out")
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+    graft.streaming.CdcStream.drain(
+      counts.writeStream.format("parquet").option("path", s"$work/out").outputMode("append"),
+      s"$work/ckpt")
     spark.read.parquet(s"$work/out")
       .select(
         unix_micros(col("window_start")).as("window_start_us"),
@@ -430,7 +379,7 @@ object EventQueries {
     * rows/hash match.)
     */
   def q73StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val work = Scratch.stableDir("q73")
+    val work = Scratch.stableDir("q73-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val inDir = Staging.streamInput("q73", dir)(Seq(documents(spark, dir)))
     val schema = documents(spark, dir).schema
     // offset the synthetic event time away from the epoch: the engine's
@@ -440,17 +389,9 @@ object EventQueries {
       .withColumn("tsm", timestamp_micros(col("doc_id") + lit(1000000000000L)))
     val deduped = graft.streaming.CdcStream.dedupStream(
       stream, tsCol = "tsm", watermarkDelay = "1 hour")
-    // 8 shuffle partitions at fixture scale — the q233/q383 convention
-    withFixtureShufflePartitions(spark, dir) {
-      val query = deduped.writeStream
-        .format("parquet")
-        .option("path", s"$work/out")
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+    graft.streaming.CdcStream.drain(
+      deduped.writeStream.format("parquet").option("path", s"$work/out").outputMode("append"),
+      s"$work/ckpt")
     spark.read.parquet(s"$work/out")
       .select(graft.ext.TextAnalysis.md5Fingerprint(col("text")).as("fingerprint"))
       .groupBy("fingerprint")
@@ -476,21 +417,16 @@ object EventQueries {
 
   def q81StreamEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val work = Scratch.stableDir("q81")
+    val work = Scratch.stableDir("q81-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val inDir = eventsInput(spark, dir)
     val dim = q81Weights.toDF("event_type", "w")
     val schema = events(spark, dir).schema
     val enriched = spark.readStream.schema(schema).parquet(inDir)
       .select(col("event_id"), col("event_type"), col("value"))
       .join(broadcast(dim), "event_type")
-    val query = enriched.writeStream
-      .format("parquet")
-      .option("path", s"$work/out")
-      .option("checkpointLocation", s"$work/ckpt")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    graft.streaming.CdcStream.drain(
+      enriched.writeStream.format("parquet").option("path", s"$work/out").outputMode("append"),
+      s"$work/ckpt")
     spark.read.parquet(s"$work/out")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -542,7 +478,7 @@ object EventQueries {
     * different filters — the standard one-topic-two-consumers shape.
     */
   def q89StreamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val work = Scratch.stableDir("q89")
+    val work = Scratch.stableDir("q89-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val inDir = eventsInput(spark, dir)
     val schema = events(spark, dir).schema
     // 6h window against the fixture's ~month span / sparse per-user activity
@@ -556,21 +492,14 @@ object EventQueries {
           col("user_id").as(s"${prefix}_user"),
           timestamp_micros(tsUs).as(s"${prefix}_tsm"))
         .withWatermark(s"${prefix}_tsm", "12 hours")
-    withFixtureShufflePartitions(spark, dir) {
-      val joined = side("click", "c").join(
-        side("purchase", "p"),
-        col("c_user") === col("p_user") &&
-          col("p_tsm") >= col("c_tsm") &&
-          col("p_tsm") <= col("c_tsm") + expr("INTERVAL 6 HOURS"))
-      val query = joined.writeStream
-        .format("parquet")
-        .option("path", s"$work/out")
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+    val joined = side("click", "c").join(
+      side("purchase", "p"),
+      col("c_user") === col("p_user") &&
+        col("p_tsm") >= col("c_tsm") &&
+        col("p_tsm") <= col("c_tsm") + expr("INTERVAL 6 HOURS"))
+    graft.streaming.CdcStream.drain(
+      joined.writeStream.format("parquet").option("path", s"$work/out").outputMode("append"),
+      s"$work/ckpt")
     spark.read.parquet(s"$work/out")
       .select(col("c_id").as("click_id"), col("p_id").as("purchase_id"),
         col("c_user").as("user_id"),
@@ -1074,30 +1003,23 @@ object EventQueries {
     * cross-formulation difference a checked contract rather than a trap.
     */
   def q117StreamSessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    val work = Scratch.stableDir("q117")
+    val work = Scratch.stableDir("q117-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val schema = events(spark, dir).schema
     val inDir = eventsPlusSentinel(spark, dir)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
       .withColumn("tsm", timestamp_micros(tsUs))
       .withWatermark("tsm", "30 minutes")
-    withFixtureShufflePartitions(spark, dir) {
-      val sessions = stream
-        .groupBy(col("user_id"), session_window(col("tsm"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          unix_micros(col("session_window.start")).as("start_us"),
-          unix_micros(col("session_window.end")).as("end_us"),
-          col("n_events"))
-      val query = sessions.writeStream
-        .format("parquet")
-        .option("path", s"$work/out")
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+    val sessions = stream
+      .groupBy(col("user_id"), session_window(col("tsm"), "30 minutes"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"),
+        unix_micros(col("session_window.start")).as("start_us"),
+        unix_micros(col("session_window.end")).as("end_us"),
+        col("n_events"))
+    graft.streaming.CdcStream.drain(
+      sessions.writeStream.format("parquet").option("path", s"$work/out").outputMode("append"),
+      s"$work/ckpt")
     spark.read.parquet(s"$work/out")
   }
 
@@ -3933,22 +3855,16 @@ object EventQueries {
       .select("event_id", "user_id", "off")
     val inDir = Staging.streamInput("q292", dir)(
       Seq(1L, 2L).map(m => offs.filter(col("event_id") % 3 === m)))
-    val work = Scratch.stableDir("q292")
+    val work = Scratch.stableDir("q292-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val initial = offs.filter(col("event_id") % 3 === 0)
       .groupBy("user_id")
       .agg(expr("bit_or(shiftleft(1L, cast(off AS int)))").as("mask"))
     val stream = spark.readStream
       .schema("event_id LONG, user_id LONG, off LONG")
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    // 8 shuffle partitions at fixture scale — the q233/q383 convention
-    withFixtureShufflePartitions(spark, dir) {
-      val query = graft.streaming.CdcStream.bitmapStream(
-          stream, initial, stateDir = s"$work/state")
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+    graft.streaming.CdcStream.drain(
+      graft.streaming.CdcStream.bitmapStream(stream, initial, stateDir = s"$work/state"),
+      s"$work/ckpt")
     graft.streaming.CdcStream.currentMaterializedState(spark, s"$work/state")
       .withColumn("n_active_days", expr("bit_count(mask)").cast("long"))
   }
@@ -4039,36 +3955,19 @@ object EventQueries {
     import spark.implicits._
     val inDir = Staging.streamInput("q301", dir)(
       Seq(0L, 1L).map(p => events(spark, dir).filter(col("event_id") % 2 === p)))
-    val work = Scratch.stableDir("q301")
+    val work = Scratch.stableDir("q301-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val schema = events(spark, dir).schema
-    // transformWithState REQUIRES the RocksDB provider; set it for this
-    // query and restore after (the other gates are provider-agnostic —
-    // CdcStreamSpec proves identical semantics under both)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-        .select(col("user_id"), tsUs.as("ts_us"))
-        .as[graft.streaming.CdcStream.Ev]
-      // 8 shuffle partitions at fixture scale — the q233/q383 convention
-      withFixtureShufflePartitions(spark, dir) {
-        val query = graft.streaming.CdcStream.runningTotals(stream)
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-    } finally prevProv match {
-      case Some(p) => spark.conf.set(provKey, p)
-      case None => spark.conf.unset(provKey)
-    }
+    // transformWithState REQUIRES the RocksDB provider: the registry runs
+    // this gate in a RocksDB fixture session (the other gates are
+    // provider-agnostic — CdcStreamSpec proves identical semantics under both)
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(inDir)
+      .select(col("user_id"), tsUs.as("ts_us"))
+      .as[graft.streaming.CdcStream.Ev]
+    graft.streaming.CdcStream.drain(
+      graft.streaming.CdcStream.runningTotals(stream)
+        .writeStream.format("parquet").option("path", s"$work/out").outputMode("append"),
+      s"$work/ckpt")
     spark.read.parquet(s"$work/out")
       .groupBy("user_id")
       .agg(max(col("n_events")).as("n_events"),
@@ -4563,7 +4462,7 @@ object EventQueries {
     * instead of per query.
     */
   def q314VariantRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val work = Scratch.stableDir("q314")
+    val work = Scratch.stableDir("q314-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     events(spark, dir)
       .select(col("event_id"), col("event_type"), expr("parse_json(props)").as("v"))
       .write.mode("overwrite").parquet(s"$work/variant")
@@ -7365,11 +7264,11 @@ object EventQueries {
     "q310_dp_release" -> (q310DpRelease _),
     "q309_holt_forecast" -> (q309HoltForecast _),
     "q303_poisson_bootstrap" -> (q303PoissonBootstrap _),
-    "q301_stream_tws" -> (q301StreamTws _),
+    "q301_stream_tws" -> fixtureGate(q301StreamTws, rocksDb = true),
     "q302_t_closeness" -> (q302TCloseness _),
     "q293_null_ordering" -> (q293NullOrdering _),
     "q294_forget_audit" -> (q294ForgetAudit _),
-    "q292_stream_bitmap" -> (q292StreamBitmap _),
+    "q292_stream_bitmap" -> fixtureGate(q292StreamBitmap),
     "q287_bounce_rate" -> (q287BounceRate _),
     "q284_spearman" -> (q284Spearman _),
     "q286_decayed_score" -> (q286DecayedScore _),
@@ -7433,7 +7332,7 @@ object EventQueries {
     "q127_window_dedup" -> (q127WindowDedup _),
     "q128_mad_outliers" -> (q128MadOutliers _),
     "q60_retention" -> (q60Retention _),
-    "q117_stream_session_window" -> (q117StreamSessionWindow _),
+    "q117_stream_session_window" -> fixtureGate(q117StreamSessionWindow),
     "q118_topk_per_key" -> (q118TopKPerKey _),
     "q119_next_event_label" -> (q119NextEventLabel _),
     "q120_group_kfold" -> (q120GroupKFold _),
@@ -7448,15 +7347,15 @@ object EventQueries {
     "q13_funnel" -> (q13Funnel _),
     "q14_json_props" -> (q14JsonProps _),
     "q15_scalar_suite" -> (q15ScalarSuite _),
-    "q69_stream_sessionize" -> (q69StreamSessionize _),
-    "q70_stream_windows" -> (q70StreamWindows _),
-    "q73_stream_dedup" -> (q73StreamDedup _),
+    "q69_stream_sessionize" -> fixtureGate(q69StreamSessionize),
+    "q70_stream_windows" -> fixtureGate(q70StreamWindows),
+    "q73_stream_dedup" -> fixtureGate(q73StreamDedup),
     "q79_rolling_features" -> (q79RollingFeatures _),
     "q81_stream_enrich" -> (q81StreamEnrich _),
     "q83_approx_users" -> (q83ApproxUsers _),
     "q86_unpivot" -> (q86Unpivot _),
     "q88_full_outer" -> (q88FullOuter _),
-    "q89_stream_stream_join" -> (q89StreamStreamJoin _),
+    "q89_stream_stream_join" -> fixtureGate(q89StreamStreamJoin),
     "q90_deciles" -> (q90Deciles _),
     "q91_histogram" -> (q91Histogram _),
     "q92_user_gini" -> (q92UserGini _),

@@ -488,18 +488,13 @@ object ParityQueries {
     val schema = catalog.changes(spark, CdcPropsTable, 2L, 3L).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    // 8 shuffle partitions at fixture scale — the q233/q383 convention
-    graft.queries.EventQueries.withFixtureShufflePartitions(spark, dir) {
-      val query = graft.streaming.CdcStream.materializeStream(
+    graft.streaming.CdcStream.drain(
+      graft.streaming.CdcStream.materializeStream(
         stream,
         initialState = catalog.snapshot(spark, CdcPropsTable, 1L),
         stateDir = s"$work/state",
-        keyCols = Seq("event_id"))
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+        keyCols = Seq("event_id")),
+      s"$work/ckpt")
     graft.streaming.CdcStream.currentMaterializedState(spark, s"$work/state")
   }
 
@@ -586,19 +581,14 @@ object ParityQueries {
     val schema = catalog.changes(spark, Q123Table, 2L, 3L).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    // 8 shuffle partitions at fixture scale — the q233/q383 convention
-    graft.queries.EventQueries.withFixtureShufflePartitions(spark, dir) {
-      val query = graft.streaming.CdcStream.aggregateStream(
+    graft.streaming.CdcStream.drain(
+      graft.streaming.CdcStream.aggregateStream(
         cents(stream),
         initialAgg = agg0,
         stateDir = s"$work/state",
         groupCols = Seq("event_type"), valueCol = "cents",
-        nCol = "n", sumCol = "sum_cents")
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+        nCol = "n", sumCol = "sum_cents"),
+      s"$work/ckpt")
     graft.streaming.CdcStream.currentMaterializedState(spark, s"$work/state")
   }
 
@@ -622,16 +612,11 @@ object ParityQueries {
     val initial = e.filter(col("event_id") % 3 === 0).join(b, Seq("user_id"))
     val stream = spark.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    // 8 shuffle partitions at fixture scale — the q233/q383 convention
-    graft.queries.EventQueries.withFixtureShufflePartitions(spark, dir) {
-      val query = graft.streaming.CdcStream.joinStream(
+    graft.streaming.CdcStream.drain(
+      graft.streaming.CdcStream.joinStream(
         stream, staticB = b, initialJ = initial,
-        stateDir = s"$work/state", keys = Seq("user_id"))
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+        stateDir = s"$work/state", keys = Seq("user_id")),
+      s"$work/ckpt")
     graft.streaming.CdcStream.currentMaterializedState(spark, s"$work/state")
   }
 
@@ -995,7 +980,7 @@ object ParityQueries {
     * predicate changes the numbers.
     */
   def q17CdfWindow(spark: SparkSession, dir: String): DataFrame = {
-    val work = Scratch.stableDir("q17")
+    val work = Scratch.stableDir("q17-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val catalog = VersionedCatalog(s"$work/catalog")
     val table = "main.graft.events_cdf"
     val ev = events(spark, dir)
@@ -1024,7 +1009,7 @@ object ParityQueries {
     * hash mismatch, not just a row-count change.
     */
   def q68MutabilityBypass(spark: SparkSession, dir: String): DataFrame = {
-    val work = Scratch.stableDir("q68")
+    val work = Scratch.stableDir("q68-" + Scratch.md5Hex(dir)) // sf-keyed: q400 rule
     val catalog = VersionedCatalog(s"$work/catalog")
     val table = "main.graft.events_mut"
     val ev = events(spark, dir)
@@ -1547,14 +1532,8 @@ object ParityQueries {
   def q228KCore(spark: SparkSession, dir: String): DataFrame = {
     // shared staged pair relation — see GraphFixtures.coPurchasePairs
     val edges = GraphFixtures.coPurchasePairs(spark, dir)
-    // the peel's ~8 rounds each shuffle a shrinking node set: at fixture
-    // scale per-partition task overhead dominates, so the rounds run at 8
-    // partitions (same knob a cluster run sizes to the graph; results are
-    // partition-count-invariant and the peel materializes inside the block)
-    EventQueries.withFixtureShufflePartitions(spark, dir) {
-      graft.ext.Graph.kCorePeel(edges, k = 80, rounds = 8)
-        .withColumnRenamed("node", "part")
-    }
+    graft.ext.Graph.kCorePeel(edges, k = 80, rounds = 8)
+      .withColumnRenamed("node", "part")
   }
 
   private def q228Oracle: String = {
@@ -3173,7 +3152,7 @@ object ParityQueries {
     "q194_join_size_profile" -> (q194JoinSizeProfile _),
     "q178_column_profile" -> (q178ColumnProfile _),
     "q179_incremental_join" -> (q179IncrementalJoin _),
-    "q181_stream_incremental_join" -> (q181StreamIncrementalJoin _),
+    "q181_stream_incremental_join" -> EventQueries.fixtureGate(q181StreamIncrementalJoin),
     "q191_partitioned_write" -> (q191PartitionedWrite _),
     "q173_local_supplier" -> (q173LocalSupplierRevenue _),
     "q177_important_parts" -> (q177ImportantParts _),
@@ -3181,7 +3160,7 @@ object ParityQueries {
     "q214_market_share" -> (q214MarketShare _),
     "q215_waiting_supplier" -> (q215WaitingSupplier _),
     "q223_fd_profile" -> (q223FdProfile _),
-    "q228_kcore" -> (q228KCore _),
+    "q228_kcore" -> EventQueries.fixtureGate(q228KCore),
     "q234_top_supplier" -> (q234TopSupplier _),
     "q236_eigencentrality" -> (q236Eigencentrality _),
     "q238_hits" -> (q238Hits _),
@@ -3209,10 +3188,10 @@ object ParityQueries {
     "q63_timestamp_travel" -> (q63TimestampTravel _),
     "q68_mutability_bypass" -> (q68MutabilityBypass _),
     "q64_cdc_materialize" -> (q64CdcMaterialize _),
-    "q99_stream_materialize" -> (q99StreamMaterialize _),
+    "q99_stream_materialize" -> EventQueries.fixtureGate(q99StreamMaterialize),
     "q123_incremental_agg" -> (q123IncrementalAgg _),
     "q124_scd2_history" -> (q124Scd2History _),
-    "q130_stream_incremental_agg" -> (q130StreamIncrementalAgg _),
+    "q130_stream_incremental_agg" -> EventQueries.fixtureGate(q130StreamIncrementalAgg),
     "q132_pagerank" -> (q132PageRank _),
     "q154_triangles" -> (q154Triangles _),
     "q135_snapshot_diff" -> (q135SnapshotDiff _),

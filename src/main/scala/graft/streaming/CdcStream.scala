@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger,
+  ValueState}
 
 import graft.engine.{CdcFilter, VersionedCatalog}
 import graft.engine.JobSpec.DataType
@@ -463,15 +464,55 @@ object CdcStream {
           .option("parquet.compression.codec.zstd.level", "3")
     }
     log(s"Starting available-now streaming export to ${config.outputPath}")
-    val query = sink
-      .option("maxRecordsPerFile", config.maxRecordsPerFile)
-      .option("path", config.outputPath)
-      .option("checkpointLocation", checkpointRoot)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    drain(
+      sink
+        .option("maxRecordsPerFile", config.maxRecordsPerFile)
+        .option("path", config.outputPath)
+        .outputMode(OutputMode.Append),
+      checkpointRoot)
+    log("Streaming export drained (AvailableNow) and stopped")
+  }
+
+  /** A session of its own for a fixture-scale gate: a `newSession()` over
+    * `spark`'s context carrying a copy of `spark`'s runtime conf, with
+    * `spark.sql.shuffle.partitions` at 8 and, when `rocksDb`, the RocksDB
+    * state-store provider (`transformWithState`, [[runningTotals]],
+    * requires it). Work planned in it — a stream's state-store count and
+    * micro-batch shuffle width, fixed at query start with no adaptive
+    * coalescing, and any batch step around the stream — takes that width,
+    * while `spark`'s own conf is never written.
+    *
+    * Why 8: at fixture scale per-partition state-store open/commit and task
+    * setup dominate. Unpinned, the stateful gates drained 2-3x slower at an
+    * oversubscribed `local[32]` (sf0.1 on a 4-core host, e.g. q89 4.0 →
+    * 12.4 s) and q228's peel ~0.8 s slower at both `local[4]` and
+    * `local[32]`. Results do not depend on the width: nothing in this
+    * module reads a partition id.
+    */
+  def fixtureSession(spark: SparkSession, rocksDb: Boolean = false): SparkSession = {
+    val s = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) => if (spark.conf.isModifiable(k)) s.conf.set(k, v) }
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    if (rocksDb)
+      s.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    s
+  }
+
+  /** Bounded drain: run `writer` under `Trigger.AvailableNow` with its
+    * checkpoint at `checkpoint` — every input present at start is processed,
+    * then the query stops — and return the finished query. The one place a
+    * scheduled export or a streaming gate starts and awaits its stream. The
+    * query runs in the session the writer's DataFrame was built in; no
+    * session conf is read or written here.
+    */
+  def drain(writer: DataStreamWriter[_], checkpoint: String): StreamingQuery = {
+    val query = writer
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
       .start()
     query.awaitTermination()
-    log("Streaming export drained (AvailableNow) and stopped")
+    query
   }
 
   final case class Ev(user_id: Long, ts_us: Long)

@@ -360,14 +360,12 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
     }
     val schema = changes(2L, Seq((2L, "x", "insert"))).schema
     def drain(): Unit = {
-      val q = CdcStream.materializeStream(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(in.toString),
-        initialState = snapshot, stateDir = s"$dir/state", keyCols = Seq("id"))
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      CdcStream.drain(
+        CdcStream.materializeStream(
+          spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+            .parquet(in.toString),
+          initialState = snapshot, stateDir = s"$dir/state", keyCols = Seq("id")),
+        s"$dir/ckpt")
     }
     def state(): Set[(Long, String)] =
       CdcStream.currentMaterializedState(spark, s"$dir/state")
@@ -408,13 +406,11 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
     }
     val schema = changes(2L, Seq((2L, "x", "insert"))).schema
     def drain(): Unit = {
-      val q = CdcStream.materializeStream(
-        spark.readStream.schema(schema).parquet(in.toString),
-        initialState = snapshot, stateDir = s"$dir/state", keyCols = Seq("id"))
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      CdcStream.drain(
+        CdcStream.materializeStream(
+          spark.readStream.schema(schema).parquet(in.toString),
+          initialState = snapshot, stateDir = s"$dir/state", keyCols = Seq("id")),
+        s"$dir/ckpt")
     }
     def state(): Set[(Long, String)] =
       CdcStream.currentMaterializedState(spark, s"$dir/state")
@@ -461,14 +457,12 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
     }
     val schema = changes(2L, Seq((2L, "x", "insert"))).schema
     def drain(): Unit = {
-      val q = CdcStream.materializeStream(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(in.toString),
-        initialState = snapshot, stateDir = s"$dir/state", keyCols = Seq("id"))
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      CdcStream.drain(
+        CdcStream.materializeStream(
+          spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+            .parquet(in.toString),
+          initialState = snapshot, stateDir = s"$dir/state", keyCols = Seq("id")),
+        s"$dir/ckpt")
     }
     def state(): Set[(Long, String)] =
       CdcStream.currentMaterializedState(spark, s"$dir/state")
@@ -503,11 +497,9 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
     def drain(): Unit = {
       val stream = spark.readStream.schema("user_id LONG, off LONG")
         .option("maxFilesPerTrigger", 1).parquet(in.toString)
-      val q = CdcStream.bitmapStream(stream, initial, stateDir = s"$dir/state")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      CdcStream.drain(
+        CdcStream.bitmapStream(stream, initial, stateDir = s"$dir/state"),
+        s"$dir/ckpt")
     }
     def state(): Map[Long, Long] =
       CdcStream.currentMaterializedState(spark, s"$dir/state")
@@ -541,13 +533,11 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
       val in = Paths.get(s"$dir/$tag/in")
       val stream = spark.readStream.schema("source STRING, h LONG")
         .option("maxFilesPerTrigger", 1).parquet(in.toString)
-      val q = CdcStream.kmvStream(stream,
-          Seq.empty[(String, Long)].toDF("source", "h"),
-          stateDir = s"$dir/$tag/state", k = 4)
-        .option("checkpointLocation", s"$dir/$tag/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      CdcStream.drain(
+        CdcStream.kmvStream(stream,
+            Seq.empty[(String, Long)].toDF("source", "h"),
+            stateDir = s"$dir/$tag/state", k = 4),
+        s"$dir/$tag/ckpt")
       CdcStream.currentMaterializedState(spark, s"$dir/$tag/state")
         .collect().map(r => (r.getString(0), r.getLong(1))).groupBy(identity)
         .view.mapValues(_.length).toMap
@@ -590,13 +580,11 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
     stage(in, Seq.fill(5)("c") ++ Seq("b"), "b_b2.parquet", 2000000)
     val stream = spark.readStream.schema("item STRING")
       .option("maxFilesPerTrigger", 1).parquet(in.toString)
-    val q = CdcStream.mgStream(stream,
-        Seq.empty[(String, Long)].toDF("item", "c"),
-        stateDir = s"$dir/state", k = 2)
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    CdcStream.drain(
+      CdcStream.mgStream(stream,
+          Seq.empty[(String, Long)].toDF("item", "c"),
+          stateDir = s"$dir/state", k = 2),
+      s"$dir/ckpt")
     val got = CdcStream.currentMaterializedState(spark, s"$dir/state")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === Map("c" -> 3L), s"got $got")
@@ -617,13 +605,11 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
     Files.copy(part.toPath, in.resolve("a.parquet"))
     val stream = spark.readStream.schema("user_id LONG, off LONG")
       .option("maxFilesPerTrigger", 1).parquet(in.toString)
-    val q = CdcStream.bitmapStream(stream, Seq.empty[(Long, Long)].toDF("user_id", "mask"),
-        stateDir = s"$dir/state")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.awaitTermination()
+      CdcStream.drain(
+        CdcStream.bitmapStream(stream, Seq.empty[(Long, Long)].toDF("user_id", "mask"),
+          stateDir = s"$dir/state"),
+        s"$dir/ckpt")
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))

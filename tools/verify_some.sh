@@ -9,7 +9,7 @@ run_one() {
   local sf="$1"
   local out="/tmp/verify_some_${sf}"
   rm -rf "$out"
-  SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_CPUS=32 sbt -batch \
+  SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" sbt -batch \
     "runMain graft.Verify /root/testdata/$sf $out" 2>&1 | grep -E "FAILED" || true
   python3 tools/check_correctness.py "/root/testdata/$sf" "$out"
 }
