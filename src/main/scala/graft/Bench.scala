@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.Json.{quote => q}
 
 object Bench {
 
@@ -18,20 +18,6 @@ object Bench {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
-
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20) —
-    * an exception message carrying a raw control char would otherwise make
-    * the err row unparseable (same escaper as Verify's).
-    */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   /** Per-query regression baseline: `tools/bench_prev.json` holds the last
     * FULL (unfiltered) run's per-query seconds, keyed by sf dir so a local
@@ -91,17 +77,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Per-query trial count: the reported number is the MEDIAN of n in-JVM
     // runs, which survives a transient load spike on one trial (a single
     // timing cannot distinguish "slow plan" from "busy machine").
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional comma-separated name filter for local iteration; the driver
+    // sets no filter and benches everything
+    val only = SparkEntry.only(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = LocalSession()
     // Untimed warmup: JVM/JIT + parquet reader + the shared hash/vector
     // kernels. Without it, 5-10 s of one-time compilation lands on whichever
     // query happens to run first, making per-query numbers incomparable
@@ -123,12 +106,6 @@ object Bench {
           vecDot(col("embedding"), col("embedding")).as("d"))
         .agg(sum("n"), sum("d")).count()
     } catch { case _: Throwable => () }
-    // optional comma-separated name filter for local iteration; the driver
-    // sets no filter and benches everything (an empty/blank value means
-    // unfiltered too — "exported but empty" must not silently bench nothing)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
     val loadBefore = loadavg
     // A query that THROWS must never look like a win: a plan-time failure
     // returns in milliseconds, and silently recording that as its "time"

@@ -68,4 +68,17 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     ParityQueries.oracleSql ++ graft.queries.EventQueries.oracleSql ++ graft.ext.ExtQueries.oracleSql
+
+  /** The queries a comma-separated name list selects (`SPARK_GRAFT_ONLY`,
+    * Inspect's list), in the order given; `None`, meaning every query, when
+    * the list is unset or names none. An unknown name is rejected, so a
+    * typo fails before any session is built instead of selecting nothing.
+    */
+  def only(spec: Option[String]): Option[Seq[String]] = {
+    val names = spec.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).distinct
+    val known = queries
+    val unknown = names.filterNot(known.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    Some(names).filter(_.nonEmpty)
+  }
 }

@@ -54,16 +54,7 @@ object Recovery {
     * `json.dumps({"tables": table_results}, indent=2)`.
     */
   def tableResultsJson(results: Seq[TableResult]): String = {
-    def q(s: String): String =
-      "\"" + s.flatMap {
-        case '"'          => "\\\""
-        case '\\'         => "\\\\"
-        case '\n'         => "\\n"
-        case '\r'         => "\\r"
-        case '\t'         => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c            => c.toString
-      } + "\""
+    import Json.{quote => q}
     val entries = results.map { r =>
       val err = r.initialFetchError.map(q).getOrElse("null")
       s"""    ${q(r.table)}: {

@@ -180,24 +180,6 @@ final case class VersionedCatalog(root: String) {
       .where(col("_commit_version").between(start, end))
   }
 
-  /** Latest committed version (max over snapshots and change commits). */
-  def latestVersion(spark: SparkSession, table: String): Long = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snaps = {
-      val p = new Path(tablePath(table), "snap")
-      if (fs.exists(p)) fs.listStatus(p).toSeq.map(_.getPath.getName).collect {
-        case VersionDir(v) => v.toLong
-      } else Seq.empty
-    }
-    val commits = {
-      val p = new Path(cdfRoot(table))
-      if (fs.exists(p)) fs.listStatus(p).toSeq.map(_.getPath.getName).collect {
-        case CommitDir(v) => v.toLong
-      } else Seq.empty
-    }
-    (snaps ++ commits).foldLeft(0L)(math.max)
-  }
-
   /** The reference's `fetch_data` dispatch (`unload_databricks_data_to_s3.py:196-200`):
     * `start == 0` ⇒ snapshot at `end`; else CDF window `[start, end]`.
     */

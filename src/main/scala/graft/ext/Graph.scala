@@ -43,29 +43,10 @@ object Graph {
       iters: Int = 3,
       scale: Long = 1L << 20,
       dampNum: Long = 1L,
-      dampDen: Long = 2L): DataFrame = {
-    require(iters >= 1, "need at least one iteration")
-    require(dampNum > 0 && dampDen > dampNum, "damping must be a rational in (0,1)")
-    require(scale % dampDen == 0, "scale must be a multiple of dampDen (exact base)")
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct()
-    val outdeg = e.groupBy("__src").agg(count(lit(1)).as("__outdeg"))
-    val base = scale / dampDen * (dampDen - dampNum)
-    var scores = nodes.withColumn("score", lit(scale))
-    (1 to iters).foreach { _ =>
-      val contribs = e
-        .join(scores.withColumnRenamed("node", "__src"), "__src")
-        .join(outdeg, "__src")
-        .select(col("__dst").as("node"),
-          expr(s"(score * $dampNum) div ($dampDen * __outdeg)").as("__c"))
-        .groupBy("node").agg(sum("__c").as("__in"))
-      scores = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + coalesce(col("__in"), lit(0L))).as("score"))
-    }
-    scores
-  }
+      dampDen: Long = 2L): DataFrame =
+    // every weight 1: each edge adds 1 · ((score·dampNum) div (dampDen·outdeg))
+    pageRankIntWeighted(edges.withColumn("__unit_w", lit(1L)), srcCol, dstCol,
+      "__unit_w", iters, scale, dampNum, dampDen)
 
   /** `iters` rounds of integer PageRank over WEIGHTED edges (src, dst, w) —
     * the exact multigraph equivalent of [[pageRankIntFixed]] with `w`

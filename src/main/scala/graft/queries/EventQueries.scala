@@ -277,8 +277,8 @@ object EventQueries {
 
   /** A fixture-scale gate's registry entry: `q` runs in a session of its
     * own ([[graft.streaming.CdcStream.fixtureSession]]: a copy of the
-    * caller's conf at shuffle width 8, with the RocksDB provider when
-    * `rocksDb`), created once per (caller session, fixture dir) through
+    * caller's conf at shuffle width min(8, cores), with the RocksDB
+    * provider when `rocksDb`), created once per (caller session, fixture dir) through
     * [[Staging.inSession]] so its staged artifacts and warm state outlive
     * one call. The caller's session conf is never written. The result is a
     * frame of that session.

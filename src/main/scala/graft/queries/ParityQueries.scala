@@ -1409,7 +1409,7 @@ object ParityQueries {
     // over the materialized relation (r16, §2.4/§5): checkpointing
     // renorm's output executed the edge⋈score SortMergeJoin + sum twice
     // per half-step — once in the main arm and once inside the max's
-    // BroadcastExchange subtree (ExecPlanPeek-verified: no ReusedExchange
+    // BroadcastExchange subtree (`Inspect plans`: no ReusedExchange
     // fires across the two). With the raw score relation checkpointed
     // first, the expensive join-agg runs exactly once per half-step and
     // the renorm re-evaluations the next half-step/output trigger are a

@@ -475,24 +475,26 @@ object CdcStream {
 
   /** A session of its own for a fixture-scale gate: a `newSession()` over
     * `spark`'s context carrying a copy of `spark`'s runtime conf, with
-    * `spark.sql.shuffle.partitions` at 8 and, when `rocksDb`, the RocksDB
-    * state-store provider (`transformWithState`, [[runningTotals]],
-    * requires it). Work planned in it — a stream's state-store count and
+    * `spark.sql.shuffle.partitions` at `min(8, defaultParallelism)` and,
+    * when `rocksDb`, the RocksDB state-store provider
+    * (`transformWithState`, [[runningTotals]], requires it). Work planned in it — a stream's state-store count and
     * micro-batch shuffle width, fixed at query start with no adaptive
     * coalescing, and any batch step around the stream — takes that width,
     * while `spark`'s own conf is never written.
     *
-    * Why 8: at fixture scale per-partition state-store open/commit and task
-    * setup dominate. Unpinned, the stateful gates drained 2-3x slower at an
-    * oversubscribed `local[32]` (sf0.1 on a 4-core host, e.g. q89 4.0 →
-    * 12.4 s) and q228's peel ~0.8 s slower at both `local[4]` and
-    * `local[32]`. Results do not depend on the width: nothing in this
-    * module reads a partition id.
+    * Why at most 8: at fixture scale per-partition state-store open/commit
+    * and task setup dominate. Unpinned, the stateful gates drained 2-3x
+    * slower at an oversubscribed `local[32]` (sf0.1 on a 4-core host, e.g.
+    * q89 4.0 → 12.4 s). At `local[4]` the session's own width is no slower
+    * than 8 (q89 3.49 vs 4.09 s; q228 5.17 vs 5.04 s, inside the spread).
+    * Results do not depend on the width: nothing in this module reads a
+    * partition id.
     */
   def fixtureSession(spark: SparkSession, rocksDb: Boolean = false): SparkSession = {
     val s = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) => if (spark.conf.isModifiable(k)) s.conf.set(k, v) }
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s.conf.set("spark.sql.shuffle.partitions",
+      math.min(8, spark.sparkContext.defaultParallelism).toString)
     if (rocksDb)
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
