@@ -1,8 +1,14 @@
 package graft.engine
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.engine.JobSpec.TableVersionRange
 
@@ -21,15 +27,13 @@ import graft.engine.JobSpec.TableVersionRange
   *
   * Change files carry `_change_type` (insert | update_preimage |
   * update_postimage | delete) and `_commit_timestamp` as data columns;
-  * `_commit_version` is the Hive-style partition column, so a version-range
-  * read is partition-pruned: a `[start, end]` window READS only the
-  * window's files. It still LISTS the whole history — [[changes]] builds
-  * its file index over the table's `cdf/` root, every commit directory
-  * included, before the pruning filter applies — so listing cost is
-  * O(history), not O(window) (a 4-file window over a 65-file history lists
-  * all 65 files in one listing job). Delta's CDF file skipping prunes at
-  * listing time from its log; this layout does not yet. With Delta OSS on
-  * the cluster this object collapses to
+  * `_commit_version` is the Hive-style partition column. A `[start, end]`
+  * window is read from the window's own commit directories (`basePath` set
+  * to the `cdf/` root keeps `_commit_version` a partition column), so both
+  * listing and reading cost O(window), never O(history): a 2-commit window
+  * over a 1000-commit history lists the window's files and nothing else.
+  * Delta gets the same from its log; here the directory names are the log.
+  * With Delta OSS on the cluster this object collapses to
   * `spark.read.format("delta").option("versionAsOf"|"readChangeFeed", ...)`.
   */
 final case class VersionedCatalog(root: String) {
@@ -39,6 +43,8 @@ final case class VersionedCatalog(root: String) {
   def tablePath(table: String): String = s"$root/${table.replace('.', '/')}"
   def snapshotPath(table: String, version: Long): String = s"${tablePath(table)}/snap/v=$version"
   def cdfRoot(table: String): String = s"${tablePath(table)}/cdf"
+  def commitPath(table: String, version: Long): String =
+    s"${cdfRoot(table)}/_commit_version=$version"
 
   // ---- write side (used by tests / pipeline demos to author versions) ----
 
@@ -50,18 +56,22 @@ final case class VersionedCatalog(root: String) {
     * `_commit_timestamp`; `_commit_version` is materialized by the layout.
     *
     * Also upserts the table's [[manifestPath commit manifest]]: the commit
-    * time is read back from the just-written directory (ONE commit's
-    * footers, partition-local — never the table history), mirroring how
-    * Delta appends a log entry per commit.
+    * time is observed on the write itself (`Dataset.observe`, a
+    * per-partition accumulator merge), so a commit does not read its own
+    * directory back, mirroring how Delta appends a log entry per commit.
     */
   def commitChanges(df: DataFrame, table: String, version: Long): Unit = {
     require(df.columns.contains(CdcFilter.ChangeTypeCol), "change frame needs _change_type")
-    val dir = s"${cdfRoot(table)}/_commit_version=$version"
-    df.write.mode("overwrite").parquet(dir)
+    val dir = commitPath(table, version)
+    val observation = new Observation(s"graft_commit_${System.nanoTime()}")
+    df.observe(observation, maxCommitMicros.as("us")).write.mode("overwrite").parquet(dir)
     val spark = df.sparkSession
-    val maxTs = spark.read.parquet(dir)
-      .agg(max(unix_micros(col("_commit_timestamp").cast("timestamp"))))
-      .head()
+    // the listener that fulfils the observation fires asynchronously after
+    // the write: a bounded wait, so a lost metric degrades to reading the
+    // commit back instead of a hang
+    val maxTs =
+      try Await.result(observation.future, Duration(10, "s"))
+      catch { case _: TimeoutException => spark.read.parquet(dir).agg(maxCommitMicros).head() }
     // a commit whose timestamps are all null/uncastable gets NO manifest
     // entry — the scan path excludes such commits from as-of resolution via
     // SQL null comparison, and the manifest must agree with it
@@ -161,23 +171,35 @@ final case class VersionedCatalog(root: String) {
   }
 
   /** S2: change rows for versions [start, end] (`table_changes` analogue).
-    * Partition pruning on `_commit_version` keeps the files READ to the
-    * window, but the file index lists every commit under the `cdf/` root,
-    * so building the frame costs O(history) in listing.
+    * The file index is built over the window's commit directories only, and
+    * the missing-version check stats those same directories: O(window) in
+    * catalog metadata whatever the history length.
     */
   def changes(spark: SparkSession, table: String, start: Long, end: Long): DataFrame = {
-    val rootPath = cdfRoot(table)
-    if (!exists(spark, rootPath))
-      throw new MissingCdfFilesException(
-        s"$MissingCdfFileSignature: no change data for $table ($rootPath)")
-    val available = listCommitVersions(spark, rootPath)
-    val missing = (start to end).filterNot(available.contains)
+    require(start <= end, s"empty change window for $table: $start-$end")
+    val dirs = (start to end).map(v => v -> commitPath(table, v))
+    val missing = dirs.collect { case (v, dir) if !exists(spark, dir) => v }
     if (missing.nonEmpty)
       throw new MissingCdfFilesException(
         s"$MissingCdfFileSignature: $table missing change files for versions ${missing.mkString(",")}")
     spark.read
-      .parquet(rootPath)
+      .option("basePath", cdfRoot(table))
+      .parquet(dirs.map(_._2): _*)
       .where(col("_commit_version").between(start, end))
+  }
+
+  /** Schema of [[changes]]' frame, `_commit_version` included, probed from
+    * the newest commit alone: one non-recursive listing of the `cdf/` root
+    * plus that commit's footer. A file stream needs its schema up front; a
+    * commit-less table raises the missing-CDF signature the recovery
+    * protocol classifies on.
+    */
+  def changeSchema(spark: SparkSession, table: String): StructType = {
+    val rootPath = cdfRoot(table)
+    val newest = if (exists(spark, rootPath)) listCommitVersions(spark, rootPath).maxOption else None
+    val version = newest.getOrElse(throw new MissingCdfFilesException(
+      s"$MissingCdfFileSignature: no change data for $table ($rootPath)"))
+    spark.read.option("basePath", rootPath).parquet(commitPath(table, version)).schema
   }
 
   /** The reference's `fetch_data` dispatch (`unload_databricks_data_to_s3.py:196-200`):
@@ -267,6 +289,11 @@ object VersionedCatalog {
   val SparkFileNotExistSignature = "FAILED_READ_FILE.DBR_FILE_NOT_EXIST"
 
   final class MissingCdfFilesException(msg: String) extends RuntimeException(msg)
+
+  /** Max `_commit_timestamp` of a commit, as epoch micros: the manifest's
+    * `committed_at_us`.
+    */
+  private def maxCommitMicros: Column = max(unix_micros(col("_commit_timestamp").cast("timestamp")))
 
   private val VersionDir = "v=(\\d+)".r
   private val CommitDir = "_commit_version=(\\d+)".r

@@ -29,11 +29,14 @@ import graft.engine.JobSpec.DataType
   *     `flatMapGroupsWithState` — the streaming counterpart of the q12 batch
   *     query (same 30-minute-gap semantics over epoch-micros).
   *
-  * Scale notes: the file source tracks seen files in the checkpoint log (no
-  * relisting of old commits); state for sessionization is per-user O(1)
-  * (last timestamp + counter); windowed aggregation state is bounded by the
-  * watermark horizon. All transforms are the same Catalyst expressions the
-  * batch path uses — micro-batch execution reuses the whole batch plan.
+  * Scale notes: the file source lists the whole `cdf/` tree, old commits
+  * included, when the stream is built and again on every trigger; its
+  * seen-files log only filters those listings, so discovery costs
+  * O(history) per drain (a version-offset source would make it O(new
+  * commits)). State for sessionization is per-user O(1) (last timestamp +
+  * counter); windowed aggregation state is bounded by the watermark
+  * horizon. All transforms are the same Catalyst expressions the batch
+  * path uses — micro-batch execution reuses the whole batch plan.
   *
   * State-store provider: every stateful operator here is provider-agnostic —
   * none touches the state store API directly, so the 100 TB-class keyspace
@@ -51,7 +54,7 @@ import graft.engine.JobSpec.DataType
 object CdcStream {
 
   /** Streaming CDF scan: the continuous analogue of S2 + P1/P2. The schema
-    * is probed from the existing commits (a file stream needs one up front).
+    * is probed from the newest commit (a file stream needs one up front).
     */
   def readChanges(
       spark: SparkSession,
@@ -64,9 +67,8 @@ object CdcStream {
     // probe via the catalog so a commit-less table raises the typed
     // missing-CDF signature the recovery protocol classifies on, not a raw
     // schema-inference AnalysisException
-    val schema = catalog.changes(spark, table, start = 1L, end = 0L).schema
     val raw = spark.readStream
-      .schema(schema)
+      .schema(catalog.changeSchema(spark, table))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(root)
     // single source of truth for P1/P5 semantics — the same call the batch

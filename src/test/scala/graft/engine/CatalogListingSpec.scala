@@ -1,0 +1,175 @@
+package graft.engine
+
+import java.net.URI
+import java.nio.file.{Files, Path => JPath}
+
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, LocatedFileStatus, Path, RawLocalFileSystem,
+  RemoteIterator}
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+
+import graft.SparkSpec
+import graft.streaming.CdcStream
+
+/** The counting file system: the local file system under the test-only
+  * `countfs:` scheme, recording every directory listed through it and the
+  * statuses each listing returned.
+  */
+class CountingFileSystem extends FilterFileSystem(new RawLocalFileSystem {
+  override def getUri: URI = CountingFileSystem.Uri
+}) {
+  import CountingFileSystem.record
+
+  override def listStatus(p: Path): Array[FileStatus] = record(p, super.listStatus(p))
+  override def listLocatedStatus(p: Path): RemoteIterator[LocatedFileStatus] = {
+    val statuses = record(p, super.listStatus(p))
+      .map(s => new LocatedFileStatus(s, getFileBlockLocations(s, 0, s.getLen)))
+    new RemoteIterator[LocatedFileStatus] {
+      private val it = statuses.iterator
+      def hasNext: Boolean = it.hasNext
+      def next(): LocatedFileStatus = it.next()
+    }
+  }
+  override def listStatusIterator(p: Path): RemoteIterator[FileStatus] = {
+    val it = listStatus(p).iterator
+    new RemoteIterator[FileStatus] {
+      def hasNext: Boolean = it.hasNext
+      def next(): FileStatus = it.next()
+    }
+  }
+}
+
+object CountingFileSystem {
+  val Scheme = "countfs"
+  val Uri: URI = URI.create(s"$Scheme:///")
+
+  /** (listed directory, statuses returned), in call order. */
+  private val listings = mutable.ArrayBuffer.empty[(String, Int)]
+
+  private def record[T](p: Path, statuses: Array[T]): Array[T] = {
+    listings.synchronized(listings += (p.toUri.getPath -> statuses.length))
+    statuses
+  }
+
+  /** The listings `body` makes, and its result. */
+  def counted[T](body: => T): (Seq[(String, Int)], T) = {
+    val before = listings.synchronized(listings.size)
+    val result = body
+    (listings.synchronized(listings.drop(before).toList), result)
+  }
+}
+
+/** Catalog metadata cost counted, not timed: the listings a CDF window read
+  * and the stream's schema probe make over 10-, 100- and 1000-commit
+  * histories, through a counting file system.
+  */
+class CatalogListingSpec extends SparkSpec with BeforeAndAfterAll {
+  import spark.implicits._
+
+  private var work: JPath = _
+  private val table = "main.test.history"
+  private val implKey = s"fs.${CountingFileSystem.Scheme}.impl"
+
+  override def beforeAll(): Unit = {
+    work = Files.createTempDirectory("graft-listing")
+    // on the context's Hadoop configuration, which every session-built
+    // Hadoop conf copies; spark.conf stays as it was
+    spark.sparkContext.hadoopConfiguration.set(implKey, classOf[CountingFileSystem].getName)
+  }
+  override def afterAll(): Unit = {
+    spark.sparkContext.hadoopConfiguration.unset(implKey)
+    rmTree(work)
+  }
+
+  /** A catalog over `countfs:` whose table has commits 1..n, each commit
+    * directory holding a copy of one small part file (the version comes
+    * from the path).
+    */
+  private def history(n: Int): VersionedCatalog = {
+    val local = VersionedCatalog(s"$work/h$n")
+    val seed = s"$work/seed$n"
+    Seq((1L, "insert"), (2L, "delete")).toDF("id", "_change_type")
+      .withColumn("_commit_timestamp", lit("2024-01-01"))
+      .coalesce(1).write.parquet(seed)
+    val part = Files.list(java.nio.file.Paths.get(seed))
+      .filter(_.getFileName.toString.startsWith("part-")).findFirst().get
+    (1 to n).foreach { v =>
+      val dir = Files.createDirectories(java.nio.file.Paths.get(local.commitPath(table, v)))
+      Files.copy(part, dir.resolve(part.getFileName))
+    }
+    VersionedCatalog(s"${CountingFileSystem.Scheme}://${local.root}")
+  }
+
+  private lazy val catalogs = Seq(10, 100, 1000).map(n => n -> history(n))
+
+  test("a 2-commit window lists the same directories and files at every history length") {
+    val perLength = catalogs.map { case (n, cat) =>
+      val (listed, files) = CountingFileSystem.counted {
+        cat.changes(spark, table, n - 1L, n.toLong).inputFiles
+      }
+      assert(files.length === 2, s"$n commits: ${files.toSeq}")
+      // the same calls, named relative to the window's first version
+      n -> listed.map { case (dir, statuses) =>
+        dir.stripPrefix(cat.cdfRoot(table).stripPrefix(s"${CountingFileSystem.Scheme}://"))
+          .replace(s"_commit_version=${n - 1}", "first")
+          .replace(s"_commit_version=$n", "second") -> statuses
+      }
+    }
+    val (_, shortest) = perLength.head
+    assert(shortest === Seq("/first" -> 1, "/second" -> 1), s"listings: $shortest")
+    perLength.foreach { case (n, listed) =>
+      assert(listed === shortest, s"$n commits listed $listed")
+    }
+  }
+
+  test("the window frame's schema is the whole tree's schema") {
+    catalogs.foreach { case (n, cat) =>
+      val window = cat.changes(spark, table, 2L, 3L)
+      assert(window.schema === spark.read.parquet(cat.cdfRoot(table)).schema, s"$n commits")
+      assert(window.select("_commit_version").distinct().as[Int].collect().sorted === Array(2, 3))
+    }
+  }
+
+  test("the stream's schema probe lists the root and the newest commit, nothing else") {
+    catalogs.foreach { case (n, cat) =>
+      val root = cat.cdfRoot(table).stripPrefix(s"${CountingFileSystem.Scheme}://")
+      val (listed, schema) = CountingFileSystem.counted(cat.changeSchema(spark, table))
+      assert(listed.map(_._1) === Seq(root, s"$root/_commit_version=$n"), s"$n commits")
+      assert(schema === spark.read.parquet(cat.cdfRoot(table)).schema)
+    }
+    val (_, cat) = catalogs.head
+    assert(CdcStream.readChanges(spark, cat, table, JobSpec.Event).isStreaming)
+  }
+
+  test("a commit lists only its own write's temporary files, never reads itself back") {
+    val (_, cat) = catalogs.head
+    val commits = "main.test.commits"
+    def frame(v: Long) = Seq((v, "insert")).toDF("id", "_change_type")
+      .withColumn("_commit_timestamp", lit(s"2024-01-0$v"))
+    // the first commit backfills the manifest from the tree; the second
+    // has a manifest to update
+    cat.commitChanges(frame(1L), commits, 1L)
+    val (listed, _) = CountingFileSystem.counted(cat.commitChanges(frame(2L), commits, 2L))
+    val staging = s"${cat.commitPath(commits, 2L).stripPrefix(s"${CountingFileSystem.Scheme}://")}/_temporary"
+    assert(listed.nonEmpty && listed.forall(_._1.startsWith(staging)), s"listed: $listed")
+    assert(cat.versionAsOf(spark, commits, java.sql.Timestamp.valueOf("2024-01-02 00:00:00")) === 2L)
+  }
+
+  test("a missing window version and a commit-less table classify as missing CDF") {
+    val (n, cat) = catalogs.head
+    def classified(read: => Any): Unit = {
+      val e = intercept[VersionedCatalog.MissingCdfFilesException](read)
+      assert(Recovery.missingCdfSignature(e).contains(Recovery.MissingCdfFileSignature), e)
+    }
+    classified(cat.changes(spark, table, n.toLong, n + 1L))
+    classified(cat.changes(spark, "main.test.none", 1L, 2L))
+    classified(cat.changeSchema(spark, "main.test.none"))
+    classified(CdcStream.readChanges(spark, cat, "main.test.none", JobSpec.Event))
+    // a cdf root without a single commit directory is commit-less too
+    Files.createDirectories(java.nio.file.Paths.get(
+      VersionedCatalog(s"$work/h$n").cdfRoot("main.test.empty")))
+    classified(cat.changeSchema(spark, "main.test.empty"))
+  }
+}

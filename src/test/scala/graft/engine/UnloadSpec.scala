@@ -92,15 +92,48 @@ class UnloadSpec extends SparkSpec with BeforeAndAfterAll {
     assert(cat.versionAsOf(spark, table, ts("2")) === 2L)
   }
 
+  test("observed commit times write the manifest the read-back wrote: normal, all-null, empty") {
+    val cat = freshCatalog("cobs")
+    val manifest = Paths.get(s"$work/cobs/${table.replace('.', '/')}/_commits.json")
+    // the manifest a commit that read its own directory back would write:
+    // per commit the max commit micros, and no entry when that is null
+    def readBack(versions: Seq[Long]): String = versions.flatMap { v =>
+      val r = spark.read.parquet(cat.commitPath(table, v))
+        .agg(max(unix_micros(col("_commit_timestamp").cast("timestamp")))).head()
+      if (r.isNullAt(0)) None else Some(s"""{"version":$v,"committed_at_us":${r.getLong(0)}}""")
+    }.mkString("\n")
+    def frame(ids: Seq[Long], ts: org.apache.spark.sql.Column) =
+      ids.map(i => (i, s"name_$i", "insert")).toDF("id", "name", "_change_type")
+        .withColumn("_commit_timestamp", ts)
+    val commits = Seq(
+      4L -> frame(Seq(20L, 21L), lit("2024-01-04 06:30:00.123456")),
+      5L -> frame(Seq(22L), lit(null).cast("string")),
+      6L -> frame(Seq.empty, lit("2024-01-06")))
+    def ts(d: String) = java.sql.Timestamp.valueOf(s"2024-01-0$d 12:00:00")
+    commits.foreach { case (v, df) =>
+      cat.commitChanges(df, table, v)
+      assert(Files.readString(manifest) === readBack(2L to v), s"manifest after commit $v")
+    }
+    assert(Files.readAllLines(manifest).size === 3, "all-null and empty commits get no entry")
+    val viaManifest = (2 to 9).map(d => cat.versionAsOf(spark, table, ts(d.toString)))
+    assert(viaManifest === Seq(2L, 3L, 4L, 4L, 4L, 4L, 4L, 4L))
+    // the scan of the commit tree resolves the same without the manifest
+    val aside = manifest.resolveSibling("_commits.json.aside")
+    Files.move(manifest, aside)
+    try assert((2 to 9).map(d => cat.versionAsOf(spark, table, ts(d.toString))) === viaManifest)
+    finally Files.move(aside, manifest)
+  }
+
   test("CDF range read (S2) prunes to the requested window") {
     val cat = freshCatalog("c2")
     val win = cat.changes(spark, table, 2L, 2L)
     assert(win.select("id").as[Long].collect().sorted === Array(11L, 12L))
     assert(win.columns.contains("_commit_version"))
-    // pruning reaches the file listing: only one commit dir is scanned
-    val scanned = win.queryExecution.executedPlan.collectLeaves().head.toString
+    // pruning reaches the file index: only the window's commit dir is listed
+    val scanned = win.inputFiles
+    assert(scanned.nonEmpty && scanned.forall(_.contains("/_commit_version=2/")),
+      s"files outside the window: ${scanned.toSeq}")
     assert(cat.changes(spark, table, 2L, 3L).count() === 5)
-    assert(scanned.nonEmpty)
   }
 
   test("missing CDF window raises a classified error") {
