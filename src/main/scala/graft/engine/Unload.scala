@@ -39,10 +39,12 @@ object Unload {
     val t0 = System.nanoTime()
     log.info("Starting unload job")
     val results = mutable.LinkedHashMap.empty[String, TableResult]
+    // the temp views both attempts register, dropped however the run ends
+    val views = mutable.LinkedHashSet.empty[String]
 
     val retried =
       try {
-        writeExportData(spark, catalog, config, results, forceLatestOnly = false, log.info)
+        writeExportData(spark, catalog, config, results, views, forceLatestOnly = false, log.info)
         false
       } catch {
         case e: Throwable =>
@@ -51,10 +53,10 @@ object Unload {
             case Some(sig) =>
               log.info(s"Failed with CDF missing-file signature ($sig). " +
                 "Retrying with latest-only (start=end=end_version) for all tables.")
-              writeExportData(spark, catalog, config, results, forceLatestOnly = true, log.info)
+              writeExportData(spark, catalog, config, results, views, forceLatestOnly = true, log.info)
               true
           }
-      }
+      } finally views.foreach(spark.catalog.dropTempView)
 
     log.info(f"Total job time: ${(System.nanoTime() - t0) / 1e9}%.2f seconds")
     log.info("Unload job completed successfully")
@@ -69,10 +71,11 @@ object Unload {
       catalog: VersionedCatalog,
       config: JobConfig,
       results: mutable.LinkedHashMap[String, TableResult],
+      views: mutable.Set[String],
       forceLatestOnly: Boolean,
       log: String => Unit): Unit = {
 
-    val sqlToRun = buildViewsForTables(spark, catalog, config, results, forceLatestOnly, log)
+    val sqlToRun = buildViewsForTables(spark, catalog, config, results, forceLatestOnly, log, views)
 
     log("Creating DataFrame with SQL transformation (execution deferred)")
     var exportData: DataFrame = spark.sql(sqlToRun)
@@ -162,7 +165,7 @@ object Unload {
   }
 
   /** Stage 1+2: per-table fetch/filter/view with O3 fallback; returns the
-    * rewritten SQL.
+    * rewritten SQL and adds each temp view it registers to `views`.
     */
   private[engine] def buildViewsForTables(
       spark: SparkSession,
@@ -170,7 +173,8 @@ object Unload {
       config: JobConfig,
       results: mutable.LinkedHashMap[String, TableResult],
       forceLatestOnly: Boolean,
-      log: String => Unit): String = {
+      log: String => Unit,
+      views: mutable.Set[String] = mutable.Set.empty): String = {
 
     val epoch = System.currentTimeMillis()
     val bindings = mutable.LinkedHashMap.empty[String, String]
@@ -186,6 +190,7 @@ object Unload {
         if (!config.mutabilityMode) df = CdcFilter.filterData(df, config.dataType)
         val view = SqlRewrite.tempViewName(table, epoch)
         df.createOrReplaceTempView(view)
+        views += view
         view
       }
 

@@ -126,16 +126,19 @@ object UnloadCli {
     job.s3Creds.foreach(S3Conf.configure(spark, _))
     if (job.streaming) {
       // continuous analogue: drain new commits since the checkpoint, stop,
-      // write the same K4 audit sidecars (no per-table version results —
-      // the checkpoint, not the map, owns positions in this mode)
+      // write the same K4 audit sidecars. The checkpoint, not the map, owns
+      // positions in this mode; the per-table results record the versions
+      // this drain exported (none for a table with no new commit)
       val log = new RunLog
       log.info("Starting streaming unload (AvailableNow)")
-      graft.streaming.CdcStream.unloadAvailableNow(
+      val exported = graft.streaming.CdcStream.unloadAvailableNow(
         spark, VersionedCatalog(job.catalogRoot), job.config,
         job.checkpoint.get, log.info)
+      val results = exported.map(r =>
+        Recovery.TableResult(r.table, r.start, r.end, None, r.start, r.end))
       val auditPath = Writers.writeAudit(
-        spark, job.config.outputPath, job.config.runId, Seq.empty, log.lines)
-      Unload.UnloadReport(Seq.empty, retriedLatestOnly = false, auditPath)
+        spark, job.config.outputPath, job.config.runId, results, log.lines)
+      Unload.UnloadReport(results, retriedLatestOnly = false, auditPath)
     } else
       Unload.run(spark, VersionedCatalog(job.catalogRoot), job.config)
   }

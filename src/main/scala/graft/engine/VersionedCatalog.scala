@@ -72,19 +72,22 @@ final case class VersionedCatalog(root: String) {
     val maxTs =
       try Await.result(observation.future, Duration(10, "s"))
       catch { case _: TimeoutException => spark.read.parquet(dir).agg(maxCommitMicros).head() }
-    // a commit whose timestamps are all null/uncastable gets NO manifest
-    // entry — the scan path excludes such commits from as-of resolution via
-    // SQL null comparison, and the manifest must agree with it
+    // a commit whose timestamps are all null/uncastable (or that has no
+    // rows) is recorded with a null time: it is committed, so the stream
+    // must see it, but as-of resolution skips it, as the scan path's SQL
+    // null comparison does
     val tsUs = if (maxTs.isNullAt(0)) None else Some(maxTs.getLong(0))
     upsertManifest(spark, table, version, tsUs)
   }
 
   /** Tiny per-table commit manifest (JSONL: one `{"version":v,
-    * "committed_at_us":t}` line per commit, rewritten on each commit —
-    * tens of bytes per entry). [[versionAsOf]] resolves from this single
-    * small file; without it, resolution must LIST the whole `cdf/` tree
-    * and read a footer per commit — O(history) driver-side metadata work
-    * on a 10k-commit table.
+    * "committed_at_us":t}` line per commit, `t` null when the commit has no
+    * timestamp, rewritten on each commit — tens of bytes per entry). It is
+    * the commit point: an entry is written only after its commit's data is
+    * in place, so the stream source takes its positions from it.
+    * [[versionAsOf]] resolves from this single small file; without it,
+    * resolution must LIST the whole `cdf/` tree and read a footer per
+    * commit — O(history) driver-side metadata work on a 10k-commit table.
     */
   private def manifestPath(table: String): String = s"${tablePath(table)}/_commits.json"
 
@@ -95,9 +98,9 @@ final case class VersionedCatalog(root: String) {
     // metadata columns) — a partial manifest would otherwise shadow the
     // tree and as-of resolution would lose the history
     val existing = readManifest(spark, table).getOrElse(backfillFromTree(spark, table, version))
-    val entries = existing.filterNot(_._1 == version) ++ tsUs.map(version -> _)
+    val entries = existing.filterNot(_._1 == version) :+ (version -> tsUs)
     val body = entries.sortBy(_._1)
-      .map { case (v, t) => s"""{"version":$v,"committed_at_us":$t}""" }
+      .map { case (v, t) => s"""{"version":$v,"committed_at_us":${t.getOrElse("null")}}""" }
       .mkString("\n")
     val p = new Path(manifestPath(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -116,25 +119,29 @@ final case class VersionedCatalog(root: String) {
 
   /** Per-version max commit micros of every ALREADY-written commit except
     * `excludeVersion` (the one being committed right now — its entry is
-    * supplied by the caller). Null-timestamp versions are dropped, matching
-    * the scan path's null comparison.
+    * supplied by the caller). Every commit directory gets an entry; one
+    * without a timestamp gets a null time.
     */
   private def backfillFromTree(
-      spark: SparkSession, table: String, excludeVersion: Long): Seq[(Long, Long)] = {
+      spark: SparkSession, table: String, excludeVersion: Long): Seq[(Long, Option[Long])] = {
     val rootPath = cdfRoot(table)
     val others = if (exists(spark, rootPath))
       listCommitVersions(spark, rootPath) - excludeVersion else Set.empty[Long]
     if (others.isEmpty) Seq.empty
-    else spark.read.parquet(rootPath)
-      .filter(col("_commit_version").cast("long") =!= excludeVersion)
-      .groupBy(col("_commit_version").cast("long").as("v"))
-      .agg(max(unix_micros(col("_commit_timestamp").cast("timestamp"))).as("t"))
-      .filter(col("t").isNotNull)
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    else {
+      val times = spark.read.parquet(rootPath)
+        .filter(col("_commit_version").cast("long") =!= excludeVersion)
+        .groupBy(col("_commit_version").cast("long").as("v"))
+        .agg(max(unix_micros(col("_commit_timestamp").cast("timestamp"))).as("t"))
+        .filter(col("t").isNotNull)
+        .collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      others.toSeq.map(v => v -> times.get(v))
+    }
   }
 
-  private def readManifest(spark: SparkSession, table: String): Option[Seq[(Long, Long)]] = {
+  private def readManifest(
+      spark: SparkSession, table: String): Option[Seq[(Long, Option[Long])]] = {
     val p = new Path(manifestPath(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
@@ -144,14 +151,13 @@ final case class VersionedCatalog(root: String) {
         try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
         finally in.close()
       val entries = body.linesIterator.flatMap {
-        case ManifestLine(v, t) => Some(v.toLong -> t.toLong)
+        case ManifestLine(v, t) => Some(v.toLong -> Option(t).map(_.toLong))
         case _ => None
       }.toSeq
         // drop legacy Long.MinValue sentinels (written by an earlier
-        // manifest format for all-null-timestamp commits): the scan path
-        // excludes such commits from as-of resolution, and a sentinel
-        // entry would match ANY timestamp
-        .filterNot(_._2 == Long.MinValue)
+        // manifest format for all-null-timestamp commits): as a time a
+        // sentinel would match ANY timestamp
+        .filterNot(_._2.contains(Long.MinValue))
       // an exists-but-entry-less file (torn write, all-sentinel legacy) is
       // NOT a manifest: callers must fall back to backfill/scan rather
       // than let it shadow the commit tree
@@ -173,33 +179,52 @@ final case class VersionedCatalog(root: String) {
   /** S2: change rows for versions [start, end] (`table_changes` analogue).
     * The file index is built over the window's commit directories only, and
     * the missing-version check stats those same directories: O(window) in
-    * catalog metadata whatever the history length.
+    * catalog metadata whatever the history length. With a `schema` (a
+    * [[changeSchema]]) the frame takes it instead of inferring one from the
+    * window's footers: the stream source's batches keep the source's
+    * schema and read no footer before their scan.
     */
-  def changes(spark: SparkSession, table: String, start: Long, end: Long): DataFrame = {
+  def changes(
+      spark: SparkSession, table: String, start: Long, end: Long,
+      schema: Option[StructType] = None): DataFrame = {
     require(start <= end, s"empty change window for $table: $start-$end")
     val dirs = (start to end).map(v => v -> commitPath(table, v))
     val missing = dirs.collect { case (v, dir) if !exists(spark, dir) => v }
     if (missing.nonEmpty)
       throw new MissingCdfFilesException(
         s"$MissingCdfFileSignature: $table missing change files for versions ${missing.mkString(",")}")
-    spark.read
+    schema.fold(spark.read)(spark.read.schema(_))
       .option("basePath", cdfRoot(table))
       .parquet(dirs.map(_._2): _*)
       .where(col("_commit_version").between(start, end))
   }
 
+  /** Every committed version of `table`, ascending: the manifest's
+    * versions, or, for a catalog without one, the commit directories one
+    * non-recursive listing of the `cdf/` root finds. Empty when the table
+    * has no commit.
+    */
+  def commitVersions(spark: SparkSession, table: String): Seq[Long] =
+    readManifest(spark, table).map(_.map(_._1)).getOrElse {
+      val rootPath = cdfRoot(table)
+      if (exists(spark, rootPath)) listCommitVersions(spark, rootPath).toSeq else Seq.empty
+    }.sorted
+
   /** Schema of [[changes]]' frame, `_commit_version` included, probed from
-    * the newest commit alone: one non-recursive listing of the `cdf/` root
-    * plus that commit's footer. A file stream needs its schema up front; a
-    * commit-less table raises the missing-CDF signature the recovery
-    * protocol classifies on.
+    * the newest commit alone: its version from [[commitVersions]], then
+    * that commit's footer. A stream needs its schema up front; a
+    * commit-less table, or a newest commit whose directory is gone, raises
+    * the missing-CDF signature the recovery protocol classifies on.
     */
   def changeSchema(spark: SparkSession, table: String): StructType = {
-    val rootPath = cdfRoot(table)
-    val newest = if (exists(spark, rootPath)) listCommitVersions(spark, rootPath).maxOption else None
-    val version = newest.getOrElse(throw new MissingCdfFilesException(
-      s"$MissingCdfFileSignature: no change data for $table ($rootPath)"))
-    spark.read.option("basePath", rootPath).parquet(commitPath(table, version)).schema
+    val version = commitVersions(spark, table).lastOption.getOrElse(
+      throw new MissingCdfFilesException(
+        s"$MissingCdfFileSignature: no change data for $table (${cdfRoot(table)})"))
+    val dir = commitPath(table, version)
+    if (!exists(spark, dir))
+      throw new MissingCdfFilesException(
+        s"$MissingCdfFileSignature: $table missing change files for version $version")
+    spark.read.option("basePath", cdfRoot(table)).parquet(dir).schema
   }
 
   /** The reference's `fetch_data` dispatch (`unload_databricks_data_to_s3.py:196-200`):
@@ -251,8 +276,8 @@ final case class VersionedCatalog(root: String) {
         s"$MissingCdfFileSignature: no commit history for $table ($rootPath)")
     val tsUs = ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
     val resolved = readManifest(spark, table) match {
-      case Some(entries) if entries.nonEmpty =>
-        entries.filter(_._2 <= tsUs).map(_._1).maxOption
+      case Some(entries) =>
+        entries.collect { case (v, Some(t)) if t <= tsUs => v }.maxOption
       case _ =>
         // the Hive-style partition column discovers as INT for small
         // versions — normalize to long before the max
@@ -297,5 +322,5 @@ object VersionedCatalog {
 
   private val VersionDir = "v=(\\d+)".r
   private val CommitDir = "_commit_version=(\\d+)".r
-  private val ManifestLine = """\{"version":(\d+),"committed_at_us":(-?\d+)\}""".r
+  private val ManifestLine = """\{"version":(\d+),"committed_at_us":(?:null|(-?\d+))\}""".r
 }

@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger,
-  ValueState}
+  OutputMode, StatefulProcessor, StreamingQuery, StreamingQueryListener, StreamingQueryProgress,
+  TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 import graft.engine.{CdcFilter, VersionedCatalog}
 import graft.engine.JobSpec.DataType
@@ -14,14 +14,14 @@ import graft.engine.JobSpec.DataType
   * The reference consumes CDF strictly in bounded batch windows
   * (SURVEY §2.10: no streaming anywhere), because each Databricks run is a
   * scheduled export. The same layout, however, is naturally streamable: new
-  * `_commit_version=N` directories appear append-only under `cdf/`, which is
-  * exactly the contract of Spark's file stream source. This module is the
-  * continuous analogue of the batch pipeline:
+  * commits are appended as versions, which is how Delta streams its change
+  * data feed. This module is the continuous analogue of the batch pipeline:
   *
-  *   - [[readChanges]]: `readStream` over the CDF directory; new commits are
-  *     discovered incrementally (`maxFilesPerTrigger` bounds per-batch work);
-  *     the SAME [[CdcFilter]] semantics as the batch path, so EVENT vs
-  *     property filtering cannot drift between modes;
+  *   - [[readChanges]]: `readStream` over a table's change feed through
+  *     [[CdcSource]], whose offsets are commit versions
+  *     (`maxCommitsPerTrigger` bounds per-batch work); the SAME
+  *     [[CdcFilter]] semantics as the batch path, so EVENT vs property
+  *     filtering cannot drift between modes;
   *   - [[windowedCounts]]: watermarked tumbling-window aggregation — the
   *     canonical streaming rollup with bounded state (late rows beyond the
   *     watermark are dropped, closed windows are finalized and emitted);
@@ -29,14 +29,13 @@ import graft.engine.JobSpec.DataType
   *     `flatMapGroupsWithState` — the streaming counterpart of the q12 batch
   *     query (same 30-minute-gap semantics over epoch-micros).
   *
-  * Scale notes: the file source lists the whole `cdf/` tree, old commits
-  * included, when the stream is built and again on every trigger; its
-  * seen-files log only filters those listings, so discovery costs
-  * O(history) per drain (a version-offset source would make it O(new
-  * commits)). State for sessionization is per-user O(1) (last timestamp +
-  * counter); windowed aggregation state is bounded by the watermark
-  * horizon. All transforms are the same Catalyst expressions the batch
-  * path uses — micro-batch execution reuses the whole batch plan.
+  * Scale notes: a trigger reads the table's `_commits.json` for its latest
+  * version and lists only the new commits' directories, so a drain costs
+  * O(new commits) in catalog metadata, never O(history). State for
+  * sessionization is per-user O(1) (last timestamp + counter); windowed
+  * aggregation state is bounded by the watermark horizon. All transforms
+  * are the same Catalyst expressions the batch path uses — micro-batch
+  * execution reuses the whole batch plan.
   *
   * State-store provider: every stateful operator here is provider-agnostic —
   * none touches the state store API directly, so the 100 TB-class keyspace
@@ -53,8 +52,11 @@ import graft.engine.JobSpec.DataType
   */
 object CdcStream {
 
-  /** Streaming CDF scan: the continuous analogue of S2 + P1/P2. The schema
-    * is probed from the newest commit (a file stream needs one up front).
+  /** Streaming CDF scan: the continuous analogue of S2 + P1/P2, one
+    * [[CdcSource]] batch per at most `maxCommitsPerTrigger` commits. The
+    * schema is probed from the newest commit when the stream is built; a
+    * commit-less table raises the typed missing-CDF signature the recovery
+    * protocol classifies on.
     */
   def readChanges(
       spark: SparkSession,
@@ -62,15 +64,14 @@ object CdcStream {
       table: String,
       dataType: DataType,
       mutabilityMode: Boolean = false,
-      maxFilesPerTrigger: Int = 1000): DataFrame = {
-    val root = catalog.cdfRoot(table)
-    // probe via the catalog so a commit-less table raises the typed
-    // missing-CDF signature the recovery protocol classifies on, not a raw
-    // schema-inference AnalysisException
+      maxCommitsPerTrigger: Int = CdcSource.DefaultMaxCommitsPerTrigger): DataFrame = {
     val raw = spark.readStream
+      .format(classOf[CdcSourceProvider].getName)
       .schema(catalog.changeSchema(spark, table))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(root)
+      .option("root", catalog.root)
+      .option("table", table)
+      .option("maxCommitsPerTrigger", maxCommitsPerTrigger)
+      .load()
     // single source of truth for P1/P5 semantics — the same call the batch
     // path makes, so the two modes cannot drift
     CdcFilter.filterData(raw, dataType, mutabilityMode)
@@ -178,7 +179,9 @@ object CdcStream {
     * Within-state rows carry no version, so
     * each fold treats the accumulated state as version 0 and the batch's
     * real `_commit_version`s (> 0) win — correct as long as batches arrive
-    * in commit order, which the mtime-ordered file source guarantees.
+    * in commit order: [[readChanges]]' version offsets deliver commits in
+    * version order, and a staged file stream read one file per trigger
+    * delivers its files in modification-time order.
     *
     * Scale shape: each fold is one key-partitioned window over
     * state ∪ batch — the same one-shuffle compaction as batch
@@ -423,11 +426,14 @@ object CdcStream {
     * up where the checkpoint left off, exports every commit that has
     * landed since, and stops — the scheduled-export contract of the
     * reference (`unload_databricks_data_to_s3.py`'s per-run version
-    * windows) with the version BOOKKEEPING replaced by the checkpoint's
-    * file-source log. Consequently the `table_versions_map` ranges carry
-    * table NAMES only here; position is owned by `checkpointRoot` (one
-    * subdirectory per run id would restart from scratch — reuse one
-    * checkpoint per continuous export).
+    * windows) with the version BOOKKEEPING kept in the checkpoint's
+    * offsets, which are commit versions ([[CdcSource]]). The
+    * `table_versions_map` ranges therefore carry table NAMES only here;
+    * position is owned by `checkpointRoot` (one subdirectory per run id
+    * would restart from scratch — reuse one checkpoint per continuous
+    * export). Returns, per table that exported anything, the version range
+    * this drain exported, read from its first batch's start offset and its
+    * last batch's end offset.
     *
     * Stage parity with the batch path, same single sources of truth:
     * [[readChanges]] (CDC filter semantics), `SqlRewrite` (identifier-aware
@@ -437,42 +443,85 @@ object CdcStream {
     * path's overwrite-idempotence. Multi-table SQL is supported to the
     * extent Structured Streaming supports it (stream-stream joins need
     * watermarks on both sides; plain projections/filters/unions always
-    * work — the reference's transformation SQL is of that shape).
+    * work — the reference's transformation SQL is of that shape). The temp
+    * views it registers are dropped before it returns.
     */
   def unloadAvailableNow(
       spark: SparkSession,
       catalog: VersionedCatalog,
       config: graft.engine.JobSpec.JobConfig,
       checkpointRoot: String,
-      log: String => Unit = _ => ()): Unit = {
+      log: String => Unit = _ => ()): Seq[graft.engine.JobSpec.TableVersionRange] = {
     import graft.engine.{SqlRewrite, VoidScrub}
-    import graft.engine.JobSpec.{JsonFormat, ParquetFormat}
+    import graft.engine.JobSpec.{JsonFormat, ParquetFormat, TableVersionRange}
     val epoch = System.currentTimeMillis()
-    val bindings = config.tables.map { range =>
-      val table = range.table
-      log(s"Streaming table $table (position tracked by the checkpoint; " +
-        s"the map's version range ${range.start}-${range.end} does not apply)")
-      val df = readChanges(spark, catalog, table, config.dataType, config.mutabilityMode)
-      val view = SqlRewrite.tempViewName(table, epoch)
-      df.createOrReplaceTempView(view)
-      table -> view
-    }.toMap
-    val out = spark.sql(SqlRewrite.rewrite(config.sql, bindings))
-    val sink = config.format match {
-      case JsonFormat => out.writeStream.format("json")
-      case ParquetFormat =>
-        VoidScrub.dropVoidFields(out).writeStream.format("parquet")
-          .option("compression", "zstd")
-          .option("parquet.compression.codec.zstd.level", "3")
+    val views = scala.collection.mutable.ArrayBuffer.empty[String]
+    try {
+      val bindings = config.tables.map { range =>
+        val table = range.table
+        log(s"Streaming table $table from the checkpoint's position")
+        val df = readChanges(spark, catalog, table, config.dataType, config.mutabilityMode)
+        val view = SqlRewrite.tempViewName(table, epoch)
+        df.createOrReplaceTempView(view)
+        views += view
+        table -> view
+      }.toMap
+      val out = spark.sql(SqlRewrite.rewrite(config.sql, bindings))
+      val sink = config.format match {
+        case JsonFormat => out.writeStream.format("json")
+        case ParquetFormat =>
+          VoidScrub.dropVoidFields(out).writeStream.format("parquet")
+            .option("compression", "zstd")
+            .option("parquet.compression.codec.zstd.level", "3")
+      }
+      log(s"Starting available-now streaming export to ${config.outputPath}")
+      val progress = drainProgress(spark,
+        sink
+          .option("maxRecordsPerFile", config.maxRecordsPerFile)
+          .option("path", config.outputPath)
+          .outputMode(OutputMode.Append),
+        checkpointRoot)
+      log("Streaming export drained (AvailableNow) and stopped")
+      config.tables.map(_.table).distinct.flatMap { table =>
+        val moved = progress.flatMap(_.sources.filter(_.description == CdcSource.describe(table)))
+          .filter(s => s.endOffset != null && s.endOffset != s.startOffset)
+        val range = for {
+          first <- moved.headOption
+          last <- moved.lastOption
+          end <- CdcSource.versionOf(last.endOffset)
+          start <- Option(first.startOffset).flatMap(CdcSource.versionOf).map(_ + 1)
+            .orElse(catalog.commitVersions(spark, table).headOption)
+        } yield TableVersionRange(table, start, end)
+        log(range.fold(s"Streaming table $table: no new commit")(r =>
+          s"Streaming table $table: exported versions ${r.start}-${r.end}"))
+        range
+      }
+    } finally views.foreach(spark.catalog.dropTempView)
+  }
+
+  /** [[drain]], returning the progress of every batch the drain ran, in
+    * order. Progress reaches listeners asynchronously, so the listener bus
+    * is flushed before the listener is removed.
+    */
+  private def drainProgress(
+      spark: SparkSession,
+      writer: DataStreamWriter[_],
+      checkpoint: String): Seq[StreamingQueryProgress] = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[StreamingQueryProgress]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        seen.synchronized(seen += e.progress)
     }
-    log(s"Starting available-now streaming export to ${config.outputPath}")
-    drain(
-      sink
-        .option("maxRecordsPerFile", config.maxRecordsPerFile)
-        .option("path", config.outputPath)
-        .outputMode(OutputMode.Append),
-      checkpointRoot)
-    log("Streaming export drained (AvailableNow) and stopped")
+    spark.streams.addListener(listener)
+    val query =
+      try drain(writer, checkpoint)
+      finally {
+        org.apache.spark.GraftBus.waitUntilEmpty(spark.sparkContext)
+        spark.streams.removeListener(listener)
+      }
+    seen.synchronized(seen.filter(_.runId == query.runId).toList)
   }
 
   /** A session of its own for a fixture-scale gate: a `newSession()` over
@@ -564,9 +613,9 @@ object CdcStream {
     * O(hottest key × micro-batch volume) — the output streams lazily from
     * that one buffer, never materializing a second copy. A hot key is
     * bounded by bounding the micro-batch, not the operator: size
-    * `maxFilesPerTrigger` (file sources, as [[readChanges]] does) or
-    * `maxOffsetsPerTrigger` so one batch's share of any single key fits an
-    * executor. CDF commit-sized batches are far inside that envelope;
+    * `maxCommitsPerTrigger` ([[readChanges]]), `maxFilesPerTrigger` (file
+    * sources) or `maxOffsetsPerTrigger` so one batch's share of any single
+    * key fits an executor. CDF commit-sized batches are far inside that envelope;
     * CdcStreamSpec drives a deliberately hot key (one user, whole batch)
     * at volume as the regression guard.
     */

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions.lit
 import graft.engine.{Unload, VersionedCatalog}
 import graft.engine.JobSpec._
 
-/** A library call leaves its caller's `SparkSession` conf exactly as it found
-  * it: `spark.conf.getAll` is snapshotted around every streaming gate (and
-  * the q228 graph peel), `Unload.run` under every partition strategy and
-  * output format, and `CdcStream.unloadAvailableNow`, and must not change.
+/** A library call leaves its caller's `SparkSession` exactly as it found it:
+  * `spark.conf.getAll` and the session's temp-view names are snapshotted
+  * around every streaming gate (and the q228 graph peel), `Unload.run` under
+  * every partition strategy and output format, and
+  * `CdcStream.unloadAvailableNow`, and must not change.
   */
 class SessionConfSpec extends SparkSpec {
   import spark.implicits._
@@ -22,14 +23,21 @@ class SessionConfSpec extends SparkSpec {
     "q369_stream_heavy_hitters", "q383_stream_exact_substr", "q387_stream_bloom",
     "q400_stream_ivf_ingest")
 
+  private def tempViews: Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
   private def unchanged(what: String)(body: => Unit): Unit = {
     val before = spark.conf.getAll
+    val viewsBefore = tempViews
     body
     val after = spark.conf.getAll
     val diff = (before.keySet ++ after.keySet)
       .filter(k => before.get(k) != after.get(k))
       .map(k => s"$k: ${before.get(k)} -> ${after.get(k)}")
     assert(diff.isEmpty, s"$what changed the session conf:\n${diff.mkString("\n")}")
+    val views = tempViews
+    assert(views === viewsBefore, s"$what left temp views ${views -- viewsBefore} " +
+      s"and dropped ${viewsBefore -- views}")
   }
 
   test("gates, Unload.run under every strategy and unloadAvailableNow leave the session conf unchanged") {

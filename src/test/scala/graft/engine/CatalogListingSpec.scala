@@ -7,6 +7,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, LocatedFileStatus, Path, RawLocalFileSystem,
   RemoteIterator}
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
@@ -61,9 +62,9 @@ object CountingFileSystem {
   }
 }
 
-/** Catalog metadata cost counted, not timed: the listings a CDF window read
-  * and the stream's schema probe make over 10-, 100- and 1000-commit
-  * histories, through a counting file system.
+/** Catalog metadata cost counted, not timed: the listings a CDF window read,
+  * the stream's schema probe and a stream drain make over 10-, 100- and
+  * 1000-commit histories, through a counting file system.
   */
 class CatalogListingSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
@@ -87,9 +88,9 @@ class CatalogListingSpec extends SparkSpec with BeforeAndAfterAll {
     * directory holding a copy of one small part file (the version comes
     * from the path).
     */
-  private def history(n: Int): VersionedCatalog = {
+  private def history(n: Int, table: String = table): VersionedCatalog = {
     val local = VersionedCatalog(s"$work/h$n")
-    val seed = s"$work/seed$n"
+    val seed = s"$work/seed$n/${table.replace('.', '_')}"
     Seq((1L, "insert"), (2L, "delete")).toDF("id", "_change_type")
       .withColumn("_commit_timestamp", lit("2024-01-01"))
       .coalesce(1).write.parquet(seed)
@@ -171,5 +172,51 @@ class CatalogListingSpec extends SparkSpec with BeforeAndAfterAll {
     Files.createDirectories(java.nio.file.Paths.get(
       VersionedCatalog(s"$work/h$n").cdfRoot("main.test.empty")))
     classified(cat.changeSchema(spark, "main.test.empty"))
+  }
+
+  test("a 2-commit drain lists the same directories at every history length, no root") {
+    val streamed = "main.test.streamed"
+    def frame(v: Long) = Seq((v, "insert")).toDF("id", "_change_type")
+      .withColumn("_commit_timestamp", lit("2024-01-02"))
+    def commit(cat: VersionedCatalog, vs: Long*): Unit =
+      vs.foreach(v => cat.commitChanges(frame(v), streamed, v))
+    val perLength = Seq(10, 100, 1000).map { n =>
+      val cat = history(n, streamed)
+      val config = JobSpec.JobConfig(
+        tables = Seq(JobSpec.TableVersionRange(streamed, 1L, 1L)),
+        dataType = JobSpec.Event,
+        sql = s"SELECT id FROM $streamed",
+        outputPath = s"$work/drain$n/out")
+      def drain() = CdcStream.unloadAvailableNow(spark, cat, config, s"$work/drain$n/ckpt")
+      // the first commit backfills the manifest from the tree; the first
+      // drain exports the whole history, the second a 2-commit window
+      commit(cat, n + 1L)
+      assert(drain() === Seq(JobSpec.TableVersionRange(streamed, 1L, n + 1L)))
+      commit(cat, n + 2L, n + 3L)
+      drain()
+      commit(cat, n + 4L, n + 5L)
+      val jobs = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
+      val (listed, exported) = CountingFileSystem.counted(drain())
+      assert(exported === Seq(JobSpec.TableVersionRange(streamed, n + 4L, n + 5L)))
+      assert(HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount === jobs,
+        s"$n commits: a parallel listing job ran")
+      val root = cat.cdfRoot(streamed).stripPrefix(s"${CountingFileSystem.Scheme}://")
+      // the same calls, named relative to the history length
+      n -> listed.map { case (dir, statuses) =>
+        (n + 2 to n + 5).foldLeft(dir.stripPrefix(root)) { (d, v) =>
+          d.replace(s"_commit_version=$v", s"new${v - n}")
+        } -> statuses
+      }
+    }
+    val (_, shortest) = perLength.head
+    // the schema probe reads the newest commit; Spark re-announces the
+    // checkpoint's last batch (new2, new3) to a restarted v1 source before
+    // it asks for new offsets; the batch lists its two commits. Each commit
+    // dir holds a part file and _SUCCESS.
+    assert(shortest === Seq("/new5", "/new2", "/new3", "/new4", "/new5").map(_ -> 2),
+      s"listings: $shortest")
+    perLength.foreach { case (n, listed) =>
+      assert(listed === shortest, s"$n commits listed $listed")
+    }
   }
 }

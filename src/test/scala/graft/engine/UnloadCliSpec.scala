@@ -143,15 +143,22 @@ class UnloadCliSpec extends SparkSpec with BeforeAndAfterAll {
     // same rows the batch path exported from the same catalog
     assert(spark.read.json(out).select("id").as[Long].collect().sorted === Array(7L))
     assert(Files.exists(Paths.get(out, "logs", "run_cli_stream1", "logs.txt")))
-    assert(report.tableResults.isEmpty) // positions live in the checkpoint
+    // positions live in the checkpoint; the results record what it exported
+    def exported(r: Unload.UnloadReport) =
+      r.tableResults.map(t => (t.table, t.finalStartVersion, t.finalEndVersion))
+    assert(exported(report) === Seq((table, 2L, 2L))) // the only commit so far
+    val audit = Files.readString(Paths.get(out, "logs", "run_cli_stream1", "table_results.json"))
+    assert(audit === Recovery.tableResultsJson(report.tableResults))
     // a new commit lands; the SAME checkpoint drains only the delta
     VersionedCatalog(s"$work/catalog").commitChanges(
       Seq((8L, "n8", "insert"), (2L, "n2b", "update_postimage"))
         .toDF("id", "name", "_change_type")
         .withColumn("_commit_timestamp", org.apache.spark.sql.functions.lit("2024-01-03")),
       table, 3L)
-    runOnce("cli_stream2")
+    assert(exported(runOnce("cli_stream2")) === Seq((table, 3L, 3L)))
     assert(spark.read.json(out).select("id").as[Long].collect().sorted === Array(7L, 8L))
+    // nothing new: no range
+    assert(runOnce("cli_stream3").tableResults.isEmpty)
   }
 
   test("--streaming without --checkpoint fails fast; batch-only flags rejected") {

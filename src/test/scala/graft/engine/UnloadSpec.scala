@@ -96,11 +96,12 @@ class UnloadSpec extends SparkSpec with BeforeAndAfterAll {
     val cat = freshCatalog("cobs")
     val manifest = Paths.get(s"$work/cobs/${table.replace('.', '/')}/_commits.json")
     // the manifest a commit that read its own directory back would write:
-    // per commit the max commit micros, and no entry when that is null
-    def readBack(versions: Seq[Long]): String = versions.flatMap { v =>
+    // per commit the max commit micros, and a null entry when that is null
+    def readBack(versions: Seq[Long]): String = versions.map { v =>
       val r = spark.read.parquet(cat.commitPath(table, v))
         .agg(max(unix_micros(col("_commit_timestamp").cast("timestamp")))).head()
-      if (r.isNullAt(0)) None else Some(s"""{"version":$v,"committed_at_us":${r.getLong(0)}}""")
+      val t = if (r.isNullAt(0)) "null" else r.getLong(0).toString
+      s"""{"version":$v,"committed_at_us":$t}"""
     }.mkString("\n")
     def frame(ids: Seq[Long], ts: org.apache.spark.sql.Column) =
       ids.map(i => (i, s"name_$i", "insert")).toDF("id", "name", "_change_type")
@@ -114,7 +115,7 @@ class UnloadSpec extends SparkSpec with BeforeAndAfterAll {
       cat.commitChanges(df, table, v)
       assert(Files.readString(manifest) === readBack(2L to v), s"manifest after commit $v")
     }
-    assert(Files.readAllLines(manifest).size === 3, "all-null and empty commits get no entry")
+    assert(Files.readAllLines(manifest).size === 5, "all-null and empty commits get a null entry")
     val viaManifest = (2 to 9).map(d => cat.versionAsOf(spark, table, ts(d.toString)))
     assert(viaManifest === Seq(2L, 3L, 4L, 4L, 4L, 4L, 4L, 4L))
     // the scan of the commit tree resolves the same without the manifest

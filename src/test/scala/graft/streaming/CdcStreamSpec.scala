@@ -11,11 +11,12 @@ import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 import graft.engine.JobSpec.Event
-import graft.engine.VersionedCatalog
+import graft.engine.{Recovery, VersionedCatalog}
 
-/** Streaming surface: CDF file-stream ingest with CDC semantics, watermarked
-  * windows, stateful sessionization. All runs use MemoryStream or the file
-  * source with processAllAvailable, so assertions are deterministic. Every
+/** Streaming surface: CDF ingest through the version-offset source with CDC
+  * semantics, watermarked windows, stateful sessionization. All runs use
+  * MemoryStream, the CDF source or a file source with processAllAvailable or
+  * an AvailableNow drain, so assertions are deterministic. Every
   * test is wrapped in `failAfter` — a stream that never quiesces (e.g. a
   * timeout mode whose `shouldRunAnotherBatch` is always true) must FAIL the
   * suite, not stall it.
@@ -59,6 +60,87 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
       val out2 = spark.sql("SELECT id FROM cdc_stream").as[Long].collect().sorted
       assert(out2 === Array(1L, 3L))
     } finally query.stop()
+  }
+
+  /** `cat` with one insert per commit of `versions` into `table`, id = version. */
+  private def commitEach(cat: VersionedCatalog, table: String, versions: Long*): Unit =
+    versions.foreach { v =>
+      cat.commitChanges(Seq((v, "insert")).toDF("id", "_change_type")
+        .withColumn("_commit_timestamp", lit(s"2024-03-0$v")), table, v)
+    }
+
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+
+  stest("two drains over one checkpoint export each commit once, in order, one commit per trigger") {
+    val cat = VersionedCatalog(s"$work/cat_once")
+    val table = "main.stream.once"
+    val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[(Int, Long)])]
+    def drain(): Unit = CdcStream.drain(
+      CdcStream.readChanges(spark, cat, table, Event, mutabilityMode = true, maxCommitsPerTrigger = 1)
+        .writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          batches += id -> batch.select("_commit_version", "id").as[(Int, Long)].collect().toSeq
+          ()
+        },
+      s"$work/ckpt_once")
+    commitEach(cat, table, 1L, 2L, 3L)
+    drain()
+    commitEach(cat, table, 4L, 5L)
+    drain()
+    assert(batches.toSeq === (1 to 5).map(v => (v - 1L, Seq(v -> v.toLong))))
+  }
+
+  stest("a two-table drain reports each table's range and restarts after one table stood still") {
+    import graft.engine.JobSpec.{JobConfig, TableVersionRange}
+    val cat = VersionedCatalog(s"$work/cat_two")
+    val (a, b) = ("main.stream.a", "main.stream.b")
+    val out = s"$work/two_out"
+    val config = JobConfig(
+      tables = Seq(TableVersionRange(a, 1L, 1L), TableVersionRange(b, 1L, 1L)),
+      dataType = Event,
+      sql = s"SELECT id FROM $a UNION ALL SELECT id + 100 AS id FROM $b",
+      outputPath = out)
+    def drain() = CdcStream.unloadAvailableNow(spark, cat, config, s"$work/ckpt_two")
+    commitEach(cat, a, 1L)
+    commitEach(cat, b, 1L)
+    assert(drain() === Seq(TableVersionRange(a, 1L, 1L), TableVersionRange(b, 1L, 1L)))
+    commitEach(cat, a, 2L)
+    assert(drain() === Seq(TableVersionRange(a, 2L, 2L)))
+    // the restart re-announces the last batch, in which b's offset stood still
+    assert(drain() === Seq.empty)
+    assert(spark.read.parquet(out).as[Long].collect().sorted === Array(1L, 2L, 101L))
+  }
+
+  stest("a commit missing from the window fails the drain with the missing-CDF signature") {
+    val cat = VersionedCatalog(s"$work/cat_gap")
+    val table = "main.stream.gap"
+    commitEach(cat, table, 1L, 2L, 3L)
+    rmTree(Paths.get(cat.commitPath(table, 2L)))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      CdcStream.drain(
+        CdcStream.readChanges(spark, cat, table, Event).writeStream.format("noop"),
+        s"$work/ckpt_gap")
+    }
+    assert(Recovery.missingCdfSignature(e).contains(Recovery.MissingCdfFileSignature),
+      messages(e).mkString(" | "))
+  }
+
+  stest("a checkpoint written by the file stream source fails with one error that names it") {
+    val cat = VersionedCatalog(s"$work/cat_legacy")
+    val table = "main.stream.legacy"
+    val ckpt = s"$work/ckpt_legacy"
+    commitEach(cat, table, 1L)
+    CdcStream.drain(
+      spark.readStream.schema(cat.changeSchema(spark, table)).parquet(cat.cdfRoot(table))
+        .writeStream.format("noop"),
+      ckpt)
+    commitEach(cat, table, 2L)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      CdcStream.drain(
+        CdcStream.readChanges(spark, cat, table, Event).writeStream.format("noop"), ckpt)
+    }
+    val named = messages(e).filter(_.contains("file stream source"))
+    assert(named.nonEmpty && named.forall(_.contains(ckpt)), messages(e).mkString(" | "))
   }
 
   stest("streaming dedup drops within-watermark duplicates, first-seen wins") {
@@ -611,8 +693,6 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
           stateDir = s"$dir/state"),
         s"$dir/ckpt")
     }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("out of [0,64)")),
       s"expected the guard's raise_error, got: ${messages(e).mkString(" | ")}")
     // and the state was never corrupted: no state dir was ever committed
