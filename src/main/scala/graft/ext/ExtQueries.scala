@@ -570,7 +570,7 @@ object ExtQueries {
     */
   private def stagedExact(spark: SparkSession, dir: String, variant: String)(
       build: => DataFrame): DataFrame =
-    spark.read.parquet(Staging.dir(s"ann-exact-$variant", dir) { out =>
+    Staging.table(spark, Staging.dir(s"ann-exact-$variant", dir) { out =>
       build.write.mode("overwrite").parquet(out)
     })
 

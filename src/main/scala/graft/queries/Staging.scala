@@ -1,12 +1,15 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths}
-import java.nio.file.attribute.FileTime
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.util.concurrent.locks.ReentrantLock
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 
 /** The staging registry: the ONE cache for every artifact the query surface
   * stages once and reuses (dedup sketches, PQ/IVF models, ANN exact sides,
@@ -23,14 +26,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     The build writes into the directory it is handed; a build that
   *     throws memoizes nothing, and the retry starts from an emptied dir.
   *   - [[frame]] / [[frameWith]] — a RELATION artifact behind the scale
-  *     gate: parquet (a [[dir]] artifact, read back by the caller's
-  *     session) when the gating fixture table is at least
+  *     gate: parquet (a [[dir]] artifact, read back through [[table]] by
+  *     the caller's session) when the gating fixture table is at least
   *     `graft.staging.minBytes`, else an in-memory `localCheckpoint`.
   *     [[frameWith]] carries a driver-side value next to the frame (PQ
   *     codebooks, IVF centroids). Checkpoint blocks die with their session,
   *     so in-memory entries are keyed by the `SparkSession` object itself.
   *   - [[inSession]] — a value tied to one session, such as tables in its
   *     catalog (q110's bucketed fixture).
+  *   - [[table]] — a parquet table's relation (file index plus inferred
+  *     schema), resolved once per (session, path) and checked on every call
+  *     against one driver-side listing of the path. Every fixture read
+  *     ([[Tables.t]]) and every staged read-back goes through it.
   *   - [[streamInput]] — a streaming-gate input dir: each frame becomes ONE
   *     parquet file, each file's mtime pinned 10 s after the previous one,
   *     because the file stream source orders by modification time and a
@@ -44,8 +51,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet round-trip. The mirror of the reference's `target_partitions`
   * mode, which exists to skip a count job the workload size doesn't
   * justify (unload_databricks_data_to_s3.py:232-236). The gate reads
-  * FILESYSTEM metadata only (recursive byte-sum of the fixture table,
-  * cached per path). `graft.staging.minBytes` (default 256 KiB) lets specs
+  * FILESYSTEM metadata only: the byte-sum of the listing [[table]] checks
+  * its entries with. `graft.staging.minBytes` (default 256 KiB) lets specs
   * force either path: the driver fixtures sit at ~65 KB (documents) /
   * ~190 KB (embeddings) for sf≤0.01 vs ~595 KB / ~800 KB at sf0.1.
   *
@@ -67,22 +74,25 @@ object Staging {
   /** Default byte threshold below which frame artifacts stay in memory. */
   val DefaultMinBytes: Long = 256L * 1024
 
-  private val bytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** One driver-side listing of a dir (or file): every regular file under
+    * it with its length and mtime, sorted by path; empty when the local
+    * file system has nothing at `path`. Metadata only: no Spark job, no
+    * file opened. */
+  private def listing(path: String): Vector[(String, Long, Long)] = {
+    val p = Paths.get(path)
+    if (!Files.exists(p)) Vector.empty
+    else {
+      val s = Files.walk(p)
+      try s.iterator().asScala.flatMap { f =>
+        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+        if (a.isRegularFile) Some((f.toString, a.size, a.lastModifiedTime.toMillis)) else None
+      }.toVector.sortBy(_._1)
+      finally s.close()
+    }
+  }
 
-  /** Recursive byte-sum of a fixture dir/file — filesystem metadata only,
-    * cached per path (the driver's testdata never changes inside a JVM). */
-  def pathBytes(path: String): Long =
-    bytesCache.computeIfAbsent(path, _ => {
-      val p = Paths.get(path)
-      if (!Files.exists(p)) 0L
-      else {
-        val s = Files.walk(p)
-        try s.filter(Files.isRegularFile(_: Path))
-          .mapToLong(Files.size(_: Path)).sum()
-        finally s.close()
-      }
-    })
+  /** Recursive byte-sum of a fixture dir/file — filesystem metadata only. */
+  def pathBytes(path: String): Long = listing(path).iterator.map(_._2).sum
 
   /** The gate knob — read per call (NOT cached) so a spec can flip the
     * property and exercise both paths inside one JVM. */
@@ -138,8 +148,40 @@ object Staging {
   def inSession[T](name: String, spark: SparkSession, dir: String)(build: => T): T =
     once(Key(name, dir, Some(spark)), name)(build)
 
+  /** A parquet table at `path`, read by `spark`. The relation — the file
+    * index plus the schema inferred from a footer, i.e. the listing and the
+    * one-task schema job of a `spark.read.parquet` — is resolved on the
+    * first call per (session, path) and reused while the path's listing
+    * (file names, lengths, mtimes) stays the same; a changed listing
+    * resolves again and replaces the entry. Each call wraps the relation in
+    * a new plan with fresh attribute ids, so two calls behave as two
+    * separate reads (self-joins, Dataset-qualified columns). The relation
+    * carries its session, whose conf at resolve time fixed the inferred
+    * schema (`Tables.t` sets `nanosAsLong` before it resolves), hence one
+    * entry per session. A path the listing cannot see — absent, or not on
+    * the local file system — is a plain read on every call, so a missing
+    * table fails with Spark's PATH_NOT_FOUND as before. */
+  def table(spark: SparkSession, path: String): DataFrame = {
+    val files = listing(path)
+    if (files.isEmpty) spark.read.parquet(path)
+    else {
+      val key = Key("table", path, Some(spark))
+      lock.lock()
+      val relation = try memo.get(key) match {
+        case Some((`files`, r: BaseRelation)) => r
+        case _ =>
+          val r = spark.read.parquet(path).queryExecution.analyzed
+            .collectFirst { case l: LogicalRelation => l.relation }.get
+          memo(key) = (files, r)
+          r
+      } finally lock.unlock()
+      spark.baseRelationToDataFrame(relation)
+    }
+  }
+
   /** A relation artifact gated on `$dir/$gateTable.parquet`: parquet read
-    * back by `spark` above the gate, a per-session localCheckpoint below. */
+    * back through [[table]] by `spark` above the gate, a per-session
+    * localCheckpoint below. */
   def frame(name: String, spark: SparkSession, dir: String, gateTable: String)(
       fresh: => DataFrame): DataFrame =
     frameWith(name, spark, dir, gateTable)(((), fresh))._2
@@ -153,7 +195,7 @@ object Staging {
         df.write.mode("overwrite").parquet(out)
         v
       }
-      (v, spark.read.parquet(out))
+      (v, table(spark, out))
     } else inSession(s"$name-mem", spark, dir) {
       val (v, df) = build
       (v, df.localCheckpoint())

@@ -11,6 +11,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * `PushedFilters`), which is the property that matters when the same query
   * shape runs over 100 TB instead of 60k rows.
   *
+  * Each table is resolved once per session ([[Staging.table]]): the first
+  * reference lists the table and infers its schema, every later one reuses
+  * that relation after a driver-side listing shows the files unchanged —
+  * no Spark listing, no schema job. Each reference still gets its own
+  * attribute ids, as a separate read would.
+  *
   * **Event-time contract**: downstream query code never assumes a physical
   * timestamp encoding. The reference behaves the same way — its schema is
   * whatever the source serves, introspected at runtime
@@ -30,7 +36,7 @@ object Tables {
     // the driver may hand us a fresh session.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+    normalizeTs(Staging.table(spark, s"$dir/$name.parquet"))
   }
 
   /** Normalize a `ts` column (if present) to canonical BIGINT epoch-nanos.

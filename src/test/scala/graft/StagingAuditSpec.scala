@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     runs through `CdcStream.drain`;
   *   - `conf.set(` / `conf.unset(` in `graft/queries` and `graft/ext` only
   *     in Tables.scala (the fixture-read confs): a query never changes its
-  *     caller's session conf.
+  *     caller's session conf;
+  *   - `read.parquet(` anywhere but Tables.scala — a fixture read goes
+  *     through `Staging.table`, which resolves each table once per session.
   */
 class StagingAuditSpec extends AnyFunSuite {
 
@@ -34,7 +36,8 @@ class StagingAuditSpec extends AnyFunSuite {
     "setLastModifiedTime" -> named("Staging.scala"),
     "Trigger.AvailableNow()" -> named("CdcStream.scala"),
     "conf.set(" -> confAllowed,
-    "conf.unset(" -> confAllowed)
+    "conf.unset(" -> confAllowed,
+    "read.parquet(" -> (p => !named("Tables.scala")(p)))
 
   test("forbidden tokens appear only in the file the table allows") {
     import scala.jdk.CollectionConverters._
