@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.JobSpec._
 import graft.engine.{Unload, VersionedCatalog}
-import graft.queries.ParityQueries
+import graft.queries.{ParityQueries, Query}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -57,17 +57,20 @@ object SparkEntry {
     spark.read.json(s"$work/out")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2, plus the
+  /** One record per implemented operator from SURVEY.md §2, plus the
     * LLM-data-pipeline extensions (dedup / similarity / text / multimodal)
-    * and event analytics.
+    * and event analytics, each with its DuckDB oracle. Names are unique
+    * across the three modules (checked once, when this object loads).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ graft.queries.EventQueries.queries ++ graft.ext.ExtQueries.queries
+  private val byName: Map[String, Query] = Query.byName(
+    ParityQueries.records ++ graft.queries.EventQueries.records ++ graft.ext.ExtQueries.records)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, q) => n -> q.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    ParityQueries.oracleSql ++ graft.queries.EventQueries.oracleSql ++ graft.ext.ExtQueries.oracleSql
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = byName.map { case (n, q) => n -> q.oracle }
 
   /** The queries a comma-separated name list selects (`SPARK_GRAFT_ONLY`,
     * Inspect's list), in the order given; `None`, meaning every query, when

@@ -140,20 +140,9 @@ object Unload {
     // writer path). The partition count is the planned write fan-out, or
     // the physical partition count when no strategy resized.
     if (config.writeMeta) {
-      val observed = observation.flatMap { o =>
-        // the listener that materializes the metric fires asynchronously
-        // after the action — await with a bound rather than `get`
-        // (unbounded block) so a lost metric degrades to the fallback
-        // count instead of a hang
-        val rows =
-          try Some(scala.concurrent.Await
-            .result(o.future, scala.concurrent.duration.Duration(10, "s"))
-            .getAs[Long]("rows"))
-          catch { case _: java.util.concurrent.TimeoutException => None }
-        rows.foreach(n => log(
-          s"Meta row count from write-pass observation (no second scan): $n"))
-        rows
-      }
+      val observed = observation.flatMap(Writers.observed).map(_.getAs[Long]("rows"))
+      observed.foreach(n => log(
+        s"Meta row count from write-pass observation (no second scan): $n"))
       val eventCount = countedRows.orElse(observed).getOrElse {
         log("Meta row count fallback: standalone count() job")
         exportData.count()

@@ -1,10 +1,5 @@
 package graft.engine
 
-import java.util.concurrent.TimeoutException
-
-import scala.concurrent.Await
-import scala.concurrent.duration.Duration
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -66,12 +61,9 @@ final case class VersionedCatalog(root: String) {
     val observation = new Observation(s"graft_commit_${System.nanoTime()}")
     df.observe(observation, maxCommitMicros.as("us")).write.mode("overwrite").parquet(dir)
     val spark = df.sparkSession
-    // the listener that fulfils the observation fires asynchronously after
-    // the write: a bounded wait, so a lost metric degrades to reading the
-    // commit back instead of a hang
-    val maxTs =
-      try Await.result(observation.future, Duration(10, "s"))
-      catch { case _: TimeoutException => spark.read.parquet(dir).agg(maxCommitMicros).head() }
+    // a lost metric degrades to reading the commit back
+    val maxTs = Writers.observed(observation)
+      .getOrElse(spark.read.parquet(dir).agg(maxCommitMicros).head())
     // a commit whose timestamps are all null/uncastable (or that has no
     // rows) is recorded with a null time: it is committed, so the stream
     // must see it, but as-of resolution skips it, as the scan path's SQL

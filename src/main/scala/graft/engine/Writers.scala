@@ -1,9 +1,13 @@
 package graft.engine
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 
 import graft.engine.JobSpec._
 
@@ -24,54 +28,49 @@ import graft.engine.JobSpec._
   */
 object Writers {
 
-  /** K1/K2: write the export frame in the requested format; K5: cap every
-    * output file at `maxRecordsPerFile` rows when given. */
-  def writeData(
-      df: DataFrame,
-      format: OutputFormat,
-      path: String,
-      maxRecordsPerFile: Option[Long] = None): Unit = {
+  /** The sink contract for one export frame, shared by the batch writer
+    * ([[writeData]]) and the streaming export
+    * ([[graft.streaming.CdcStream.unloadAvailableNow]]): the frame to write,
+    * the file format, and its write options. K1: JSON as-is; K2: VOID fields
+    * scrubbed, then zstd level 3 parquet; K5: every output file capped at
+    * `maxRecordsPerFile` rows when given.
+    */
+  final case class Sink(df: DataFrame, format: String, options: Map[String, String])
+
+  def sink(df: DataFrame, format: OutputFormat, maxRecordsPerFile: Option[Long]): Sink = {
     val cap = maxRecordsPerFile.map(n => "maxRecordsPerFile" -> n.toString).toMap
     format match {
-      case JsonFormat =>
-        df.write.mode("overwrite").options(cap).json(path)
+      case JsonFormat => Sink(df, "json", cap)
       case ParquetFormat =>
         // The zstd level travels as a parquet-hadoop conf key: Spark copies
         // every write option into the job's Hadoop conf
         // (newHadoopConfWithOptions), where parquet-mr reads it. A
         // "compressionLevel" DataFrameWriter option would be silently ignored.
-        VoidScrub
-          .dropVoidFields(df)
-          .write
-          .mode("overwrite")
-          .options(cap)
-          .option("compression", "zstd")
-          .option("parquet.compression.codec.zstd.level", "3")
-          .parquet(path)
+        Sink(VoidScrub.dropVoidFields(df), "parquet", cap ++ Map(
+          "compression" -> "zstd",
+          "parquet.compression.codec.zstd.level" -> "3"))
     }
   }
 
-  /** Bucketed parquet table for co-located joins: both relations written
-    * with the same bucket count/columns hash-partition AT REST, so a join
-    * on the bucket columns reads bucket-aligned splits and plans with NO
-    * shuffle exchange on either side (asserted in WritersSpec). This is the
-    * 100 TB answer to repeated large-fact ⋈ large-fact joins — the shuffle
-    * is paid once at write time instead of per query. Requires a table
-    * catalog (`saveAsTable`); plain `.parquet(path)` cannot carry bucket
-    * metadata.
-    */
-  def writeBucketedTable(
+  /** K1/K2/K5: write the export frame under its [[sink]] contract. */
+  def writeData(
       df: DataFrame,
-      tableName: String,
-      bucketCols: Seq[String],
-      numBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
-    require(bucketCols.nonEmpty, "need at least one bucket column")
-    val w = df.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(tableName)
+      format: OutputFormat,
+      path: String,
+      maxRecordsPerFile: Option[Long] = None): Unit = {
+    val s = sink(df, format, maxRecordsPerFile)
+    s.df.write.mode("overwrite").format(s.format).options(s.options).save(path)
   }
+
+  /** The metrics `o` observed on a write, or `None` when they have not
+    * arrived within 10 s. The listener that fulfils an observation fires
+    * asynchronously after the action: a bounded wait (rather than `get`, an
+    * unbounded block), so a lost metric degrades to the caller's fallback
+    * instead of a hang.
+    */
+  def observed(o: Observation): Option[Row] =
+    try Some(Await.result(o.future, Duration(10, "s")))
+    catch { case _: TimeoutException => None }
 
   /** K3: optional meta sidecar `[{event_count, partition_count}]` at
     * `<path>/meta` — dead code in the reference (`export_meta_data`,

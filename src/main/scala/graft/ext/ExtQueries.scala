@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.queries.Staging
+import graft.queries.{EventQueries, Query, Staging}
 import graft.queries.Tables._
 
 /** LLM-data-pipeline extension queries (dedup / similarity / text analysis /
@@ -6820,325 +6820,167 @@ object ExtQueries {
 
   // ---------------- registry ----------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q332_cdc_chunk_dedup" -> (q332CdcChunkDedup _),
-    "q336_priority_sample" -> (q336PrioritySample _),
-    "q339_chunk_increment" -> (q339ChunkIncrement _),
-    "q340_kmv_overlap" -> (q340KmvOverlap _),
-    "q341_stream_kmv" -> graft.queries.EventQueries.fixtureGate(q341StreamKmvSketch),
-    "q346_incremental_ingest" -> (q346IncrementalIngest _),
-    "q333_cov_profile" -> (q333CovarianceProfile _),
-    "q357_power_iteration" -> (q357PowerIteration _),
-    "q328_modality_qa" -> (q328ModalityQa _),
-    "q327_dup_quality_cross" -> (q327DupQualityCross _),
-    "q326_langid_eval" -> (q326LangidEval _),
-    "q315_reshard_plan" -> (q315ReshardPlan _),
-    "q308_matryoshka_recall" -> (q308MatryoshkaRecall _),
-    "q307_calibration" -> (q307Calibration _),
-    "q306_classifier_eval" -> (q306ClassifierEval _),
-    "q305_rank_metrics" -> (q305RankMetrics _),
-    "q304_hybrid_rrf" -> (q304HybridRrf _),
-    "q300_dsir_select" -> (q300DsirSelect _),
-    "q299_bpe_encode" -> (q299BpeEncode _),
-    "q298_mix_executed" -> (q298MixExecuted _),
-    "q297_term_churn" -> (q297TermChurn _),
-    "q295_span_mask_plan" -> (q295SpanMaskPlan _),
-    "q282_mix_rebalancer" -> (q282MixRebalancer _),
-    "q283_dedup_savings" -> (q283DedupSavings _),
-    "q281_pretokenizer" -> (q281Pretokenizer _),
-    "q277_next_purchase" -> (q277NextPurchase _),
-    "q276_damerau_pairs" -> (q276DamerauPairs _),
-    "q271_flesch" -> (q271Flesch _),
-    "q275_ref_integrity" -> (q275RefIntegrity _),
-    "q269_filtered_ann" -> (q269FilteredAnn _),
-    "q270_power_iteration" -> (q270PowerIteration _),
-    "q267_impute_lang" -> (q267ImputeLang _),
-    "q259_prefix_jaccard" -> (q259PrefixJaccard _),
-    "q221_fuzzy_parts" -> (q221FuzzyParts _),
-    "q224_lsh_sweep" -> (q224LshSweep _),
-    "q225_entity_clusters" -> (q225EntityClusters _),
-    "q226_bm25" -> (q226Bm25 _),
-    "q227_bigram_cond" -> (q227BigramCond _),
-    "q366_textrank" -> (q366TextRank _),
-    "q369_stream_heavy_hitters" -> graft.queries.EventQueries.fixtureGate(q369StreamHeavyHitters),
-    "q374_snake_packing" -> (q374SnakePacking _),
-    "q375_rendezvous_shard" -> (q375RendezvousShard _),
-    "q378_exact_substr" -> (q378ExactSubstr _),
-    "q380_dup_coverage" -> (q380DupCoverage _),
-    "q381_epoch_shuffle" -> (q381EpochShuffle _),
-    "q382_apportion" -> (q382Apportion _),
-    "q383_stream_exact_substr" -> graft.queries.EventQueries.fixtureGate(q383StreamExactSubstr),
-    "q384_bloom_dedup" -> (q384BloomDedup _),
-    "q385_span_rewrite" -> (q385SpanRewrite _),
-    "q387_stream_bloom" -> graft.queries.EventQueries.fixtureGate(q387StreamBloom),
-    "q389_curriculum" -> (q389Curriculum _),
-    "q391_filter_redundancy" -> (q391FilterRedundancy _),
-    "q392_substr_reconcile" -> (q392SubstrReconcile _),
-    "q393_source_tvd" -> (q393SourceTvd _),
-    "q395_jl_ann" -> (q395JlAnn _),
-    "q386_quality_keeper" -> (q386QualityKeeper _),
-    "q229_pq_ann" -> (q229PqAnn _),
-    "q230_ivfpq_ann" -> (q230IvfPqAnn _),
-    "q233_stream_dedup_index" -> graft.queries.EventQueries.fixtureGate(q233StreamDedupIndex),
-    "q237_ks_test" -> (q237KsTest _),
-    "q241_burstiness" -> (q241Burstiness _),
-    "q242_hard_negatives" -> (q242HardNegatives _),
-    "q243_bpe_train" -> (q243BpeTrain _),
-    "q218_encoding_advisor" -> (q218EncodingAdvisor _),
-    "q20_dedup_exact" -> (q20DedupExact _),
-    "q26_dedup_keep" -> (q26DedupKeep _),
-    "q27_dup_clusters" -> (q27DupClusters _),
-    "q28_dedup_pipeline" -> (q28DedupPipeline _),
-    "q102_curation_pipeline" -> (q102CurationPipeline _),
-    "q29_dedup_incremental" -> (q29DedupIncremental _),
-    "q21_dedup_minhash" -> (q21DedupMinhash _),
-    "q22_dedup_simhash" -> (q22DedupSimhash _),
-    "q25_simhash_pairs" -> (q25SimhashPairs _),
-    "q23_ngram_jaccard" -> (q23NgramJaccard _),
-    "q95_edit_distance" -> (q95EditDistance _),
-    "q24_embed_neardup" -> (q24EmbedNearDup _),
-    "q74_semantic_dedup" -> (q74SemanticDedup _),
-    "q77_knn_classify" -> (q77KnnClassify _),
-    "q78_sq8_centroids" -> (q78Sq8Centroids _),
-    "q30_knn_brute" -> (q30KnnBruteForce _),
-    "q31_knn_lsh" -> (q31KnnLsh _),
-    "q32_knn_ivf" -> (q32KnnIvf _),
-    "q34_ivf_probe" -> (q34IvfProbe _),
-    "q33_sq8" -> (q33Sq8 _),
-    "q98_sql_kernels" -> (q98SqlKernels _),
-    "q40_lang_id" -> (q40LangId _),
-    "q41_quality" -> (q41Quality _),
-    "q46_ngram_lang" -> (q46NgramLang _),
-    "q42_token_stats" -> (q42TokenStats _),
-    "q43_fingerprint" -> (q43Fingerprint _),
-    "q44_hash_sample" -> (q44HashSample _),
-    "q45_stratified_quota" -> (q45StratifiedQuota _),
-    "q57_weighted_mix" -> (q57WeightedMix _),
-    "q80_split_assign" -> (q80SplitAssign _),
-    "q58_token_pack" -> (q58TokenPack _),
-    "q129_compaction_plan" -> (q129CompactionPlan _),
-    "q59_line_dedup" -> (q59LineDedup _),
-    "q104_chunk_overlap" -> (q104ChunkOverlap _),
-    "q75_commonness" -> (q75Commonness _),
-    "q76_collocations" -> (q76Collocations _),
-    "q85_gopher_rules" -> (q85GopherRules _),
-    "q47_profile" -> (q47Profile _),
-    "q48_decontaminate" -> (q48Decontaminate _),
-    "q49_contamination_report" -> (q49ContaminationReport _),
-    "q54_pii_redact" -> (q54PiiRedact _),
-    "q55_repetition" -> (q55Repetition _),
-    "q71_tfidf" -> (q71Tfidf _),
-    "q72_vocab" -> (q72Vocab _),
-    "q145_ngram_novelty" -> (q145NgramNovelty _),
-    "q146_pack_stats" -> (q146PackStats _),
-    "q155_cross_source" -> (q155CrossSource _),
-    "q156_padding_waste" -> (q156PaddingWaste _),
-    "q157_freq_spectrum" -> (q157FreqSpectrum _),
-    "q158_pack_segments" -> (q158PackSegments _),
-    "q172_phash_clusters" -> (q172PhashClusters _),
-    "q182_heaps_curve" -> (q182HeapsCurve _),
-    "q184_containment" -> (q184Containment _),
-    "q195_embed_norms" -> (q195EmbedNorms _),
-    "q198_audio_fingerprint" -> (q198AudioFingerprint _),
-    "q204_hilbert_key" -> (q204HilbertKey _),
-    "q205_layout_shootout" -> (q205LayoutShootout _),
-    "q211_bpe_round" -> (q211BpeRound _),
-    "q212_dataset_card" -> (q212DatasetCard _),
-    "q196_shard_skew" -> (q196ShardSkew _),
-    "q197_token_compression" -> (q197TokenCompression _),
-    "q168_freq_decay" -> (q168FreqDecay _),
-    "q169_embed_dim_stats" -> (q169EmbedDimStats _),
-    "q170_posting_lists" -> (q170PostingLists _),
-    "q171_zone_maps" -> (q171ZoneMaps _),
-    "q160_centroid_sep" -> (q160CentroidSep _),
-    "q161_percentile_floor" -> (q161PercentileFloor _),
-    "q162_balanced_sample" -> (q162BalancedSample _),
-    "q147_oov_rate" -> (q147OovRate _),
-    "q148_length_survival" -> (q148LengthSurvival _),
-    "q149_token_quota" -> (q149TokenQuota _),
-    "q150_shard_assign" -> (q150ShardAssign _),
-    "q151_mixture_plan" -> (q151MixturePlan _),
-    "q152_shard_append" -> (q152ShardAppend _),
-    "q61_asof_join" -> (q61AsofJoin _),
-    "q65_salted_join" -> (q65SaltedJoin _),
-    "q109_bloom_semi_join" -> (q109BloomSemiJoin _),
-    "q110_bucketed_join" -> (q110BucketedJoin _),
-    "q111_salted_distinct" -> (q111SaltedDistinct _),
-    "q116_zorder_key" -> (q116ZOrderKey _),
-    "q66_percentiles" -> (q66Percentiles _),
-    "q87_approx_percentiles" -> (q87ApproxPercentiles _),
-    "q62_range_join" -> (q62RangeJoin _),
-    "q50_multimodal" -> (q50Multimodal _),
-    "q51_frame_sample" -> (q51FrameSample _),
-    "q52_resize_extract" -> (q52ResizeExtract _),
-    "q53_image_decode" -> (q53ImageDecode _),
-    "q56_audio_decode" -> (q56AudioDecode _),
-    "q396_gif_frames" -> (q396GifFrames _),
-    "q397_jl_sweep" -> (q397JlSweep _),
-    "q398_frame_seq_dedup" -> (q398FrameSeqDedup _),
-    "q399_ivf_nprobe_sweep" -> (q399IvfNprobeSweep _),
-    "q400_stream_ivf_ingest" -> graft.queries.EventQueries.fixtureGate(q400StreamIvfIngest),
-    "q401_adaptive_probe" -> (q401AdaptiveProbe _)
+  val records: Seq[Query] = Seq(
+    Query("q332_cdc_chunk_dedup", q332CdcChunkDedup, q332Oracle),
+    Query("q336_priority_sample", q336PrioritySample, q336Oracle),
+    Query("q339_chunk_increment", q339ChunkIncrement, q339Oracle),
+    Query("q340_kmv_overlap", q340KmvOverlap, q340Oracle),
+    Query("q341_stream_kmv", EventQueries.fixtureGate(q341StreamKmvSketch), q341Oracle),
+    Query("q346_incremental_ingest", q346IncrementalIngest, q346Oracle),
+    Query("q333_cov_profile", q333CovarianceProfile, q333Oracle),
+    Query("q357_power_iteration", q357PowerIteration, q357Oracle),
+    Query("q328_modality_qa", q328ModalityQa, q328Oracle),
+    Query("q327_dup_quality_cross", q327DupQualityCross, q327Oracle),
+    Query("q326_langid_eval", q326LangidEval, q326Oracle),
+    Query("q315_reshard_plan", q315ReshardPlan, q315Oracle),
+    Query("q308_matryoshka_recall", q308MatryoshkaRecall, q308Oracle),
+    Query("q307_calibration", q307Calibration, q307Oracle),
+    Query("q306_classifier_eval", q306ClassifierEval, q306Oracle),
+    Query("q305_rank_metrics", q305RankMetrics, q305Oracle),
+    Query("q304_hybrid_rrf", q304HybridRrf, q304Oracle),
+    Query("q300_dsir_select", q300DsirSelect, q300Oracle),
+    Query("q299_bpe_encode", q299BpeEncode, q299Oracle),
+    Query("q298_mix_executed", q298MixExecuted, q298Oracle),
+    Query("q297_term_churn", q297TermChurn, q297Oracle),
+    Query("q295_span_mask_plan", q295SpanMaskPlan, q295Oracle),
+    Query("q282_mix_rebalancer", q282MixRebalancer, q282Oracle),
+    Query("q283_dedup_savings", q283DedupSavings, q283Oracle),
+    Query("q281_pretokenizer", q281Pretokenizer, q281Oracle),
+    Query("q277_next_purchase", q277NextPurchase, q277Oracle),
+    Query("q276_damerau_pairs", q276DamerauPairs, q276Oracle),
+    Query("q271_flesch", q271Flesch, q271Oracle),
+    Query("q275_ref_integrity", q275RefIntegrity, q275Oracle),
+    Query("q269_filtered_ann", q269FilteredAnn, q269Oracle),
+    Query("q270_power_iteration", q270PowerIteration, q270Oracle),
+    Query("q267_impute_lang", q267ImputeLang, q267Oracle),
+    Query("q259_prefix_jaccard", q259PrefixJaccard, q259Oracle),
+    Query("q221_fuzzy_parts", q221FuzzyParts, q221Oracle),
+    Query("q224_lsh_sweep", q224LshSweep, q224Oracle),
+    Query("q225_entity_clusters", q225EntityClusters, q225Oracle),
+    Query("q226_bm25", q226Bm25, q226Oracle),
+    Query("q227_bigram_cond", q227BigramCond, q227Oracle),
+    Query("q366_textrank", q366TextRank, q366Oracle),
+    Query("q369_stream_heavy_hitters", EventQueries.fixtureGate(q369StreamHeavyHitters),
+      q369Oracle),
+    Query("q374_snake_packing", q374SnakePacking, q374Oracle),
+    Query("q375_rendezvous_shard", q375RendezvousShard, q375Oracle),
+    Query("q378_exact_substr", q378ExactSubstr, q378Oracle),
+    Query("q380_dup_coverage", q380DupCoverage, q380Oracle),
+    Query("q381_epoch_shuffle", q381EpochShuffle, q381Oracle),
+    Query("q382_apportion", q382Apportion, q382Oracle),
+    Query("q383_stream_exact_substr", EventQueries.fixtureGate(q383StreamExactSubstr), q383Oracle),
+    Query("q384_bloom_dedup", q384BloomDedup, q384Oracle),
+    Query("q385_span_rewrite", q385SpanRewrite, q385Oracle),
+    Query("q387_stream_bloom", EventQueries.fixtureGate(q387StreamBloom), q387Oracle),
+    Query("q389_curriculum", q389Curriculum, q389Oracle),
+    Query("q391_filter_redundancy", q391FilterRedundancy, q391Oracle),
+    Query("q392_substr_reconcile", q392SubstrReconcile, q392Oracle),
+    Query("q393_source_tvd", q393SourceTvd, q393Oracle),
+    Query("q395_jl_ann", q395JlAnn, annRecallOracle),
+    Query("q386_quality_keeper", q386QualityKeeper, q386Oracle),
+    Query("q229_pq_ann", q229PqAnn, annRecallOracle),
+    Query("q230_ivfpq_ann", q230IvfPqAnn, annRecallOracle),
+    Query("q233_stream_dedup_index", EventQueries.fixtureGate(q233StreamDedupIndex), q233Oracle),
+    Query("q237_ks_test", q237KsTest, q237Oracle),
+    Query("q241_burstiness", q241Burstiness, q241Oracle),
+    Query("q242_hard_negatives", q242HardNegatives, q242Oracle),
+    Query("q243_bpe_train", q243BpeTrain, q243Oracle),
+    Query("q218_encoding_advisor", q218EncodingAdvisor, q218Oracle),
+    Query("q20_dedup_exact", q20DedupExact, q20Oracle),
+    Query("q26_dedup_keep", q26DedupKeep, q26Oracle),
+    Query("q27_dup_clusters", q27DupClusters, q27Oracle),
+    Query("q28_dedup_pipeline", q28DedupPipeline, q28Oracle),
+    Query("q102_curation_pipeline", q102CurationPipeline, q102Oracle),
+    Query("q29_dedup_incremental", q29DedupIncremental, q29Oracle),
+    Query("q21_dedup_minhash", q21DedupMinhash, q21Oracle),
+    Query("q22_dedup_simhash", q22DedupSimhash, q22Oracle),
+    Query("q25_simhash_pairs", q25SimhashPairs, q25Oracle),
+    Query("q23_ngram_jaccard", q23NgramJaccard, q23Oracle),
+    Query("q95_edit_distance", q95EditDistance, q95Oracle),
+    Query("q24_embed_neardup", q24EmbedNearDup, q24Oracle),
+    Query("q74_semantic_dedup", q74SemanticDedup, q74Oracle),
+    Query("q77_knn_classify", q77KnnClassify, q77Oracle),
+    Query("q78_sq8_centroids", q78Sq8Centroids, q78Oracle),
+    Query("q30_knn_brute", q30KnnBruteForce, q30Oracle),
+    Query("q31_knn_lsh", q31KnnLsh, annRecallOracle),
+    Query("q32_knn_ivf", q32KnnIvf, annRecallOracle),
+    Query("q34_ivf_probe", q34IvfProbe, annRecallOracle),
+    Query("q33_sq8", q33Sq8, q33Oracle),
+    Query("q98_sql_kernels", q98SqlKernels, q98Oracle),
+    Query("q40_lang_id", q40LangId, q40Oracle),
+    Query("q41_quality", q41Quality, q41Oracle),
+    Query("q46_ngram_lang", q46NgramLang, q46Oracle),
+    Query("q42_token_stats", q42TokenStats, q42Oracle),
+    Query("q43_fingerprint", q43Fingerprint, q43Oracle),
+    Query("q44_hash_sample", q44HashSample, q44Oracle),
+    Query("q45_stratified_quota", q45StratifiedQuota, q45Oracle),
+    Query("q57_weighted_mix", q57WeightedMix, q57Oracle),
+    Query("q80_split_assign", q80SplitAssign, q80Oracle),
+    Query("q58_token_pack", q58TokenPack, q58Oracle),
+    Query("q129_compaction_plan", q129CompactionPlan, q129Oracle),
+    Query("q59_line_dedup", q59LineDedup, q59Oracle),
+    Query("q104_chunk_overlap", q104ChunkOverlap, q104Oracle),
+    Query("q75_commonness", q75Commonness, q75Oracle),
+    Query("q76_collocations", q76Collocations, q76Oracle),
+    Query("q85_gopher_rules", q85GopherRules, q85Oracle),
+    Query("q47_profile", q47Profile, q47Oracle),
+    Query("q48_decontaminate", q48Decontaminate, q48Oracle),
+    Query("q49_contamination_report", q49ContaminationReport, q49Oracle),
+    Query("q54_pii_redact", q54PiiRedact, q54Oracle),
+    Query("q55_repetition", q55Repetition, q55Oracle),
+    Query("q71_tfidf", q71Tfidf, q71Oracle),
+    Query("q72_vocab", q72Vocab, q72Oracle),
+    Query("q145_ngram_novelty", q145NgramNovelty, q145Oracle),
+    Query("q146_pack_stats", q146PackStats, q146Oracle),
+    Query("q155_cross_source", q155CrossSource, q155Oracle),
+    Query("q156_padding_waste", q156PaddingWaste, q156Oracle),
+    Query("q157_freq_spectrum", q157FreqSpectrum, q157Oracle),
+    Query("q158_pack_segments", q158PackSegments, q158Oracle),
+    Query("q172_phash_clusters", q172PhashClusters, q172Oracle),
+    Query("q182_heaps_curve", q182HeapsCurve, q182Oracle),
+    Query("q184_containment", q184Containment, q184Oracle),
+    Query("q195_embed_norms", q195EmbedNorms, q195Oracle),
+    Query("q198_audio_fingerprint", q198AudioFingerprint, q198Oracle),
+    Query("q204_hilbert_key", q204HilbertKey, q204Oracle),
+    Query("q205_layout_shootout", q205LayoutShootout, q205Oracle),
+    Query("q211_bpe_round", q211BpeRound, q211Oracle),
+    Query("q212_dataset_card", q212DatasetCard, q212Oracle),
+    Query("q196_shard_skew", q196ShardSkew, q196Oracle),
+    Query("q197_token_compression", q197TokenCompression, q197Oracle),
+    Query("q168_freq_decay", q168FreqDecay, q168Oracle),
+    Query("q169_embed_dim_stats", q169EmbedDimStats, q169Oracle),
+    Query("q170_posting_lists", q170PostingLists, q170Oracle),
+    Query("q171_zone_maps", q171ZoneMaps, q171Oracle),
+    Query("q160_centroid_sep", q160CentroidSep, q160Oracle),
+    Query("q161_percentile_floor", q161PercentileFloor, q161Oracle),
+    Query("q162_balanced_sample", q162BalancedSample, q162Oracle),
+    Query("q147_oov_rate", q147OovRate, q147Oracle),
+    Query("q148_length_survival", q148LengthSurvival, q148Oracle),
+    Query("q149_token_quota", q149TokenQuota, q149Oracle),
+    Query("q150_shard_assign", q150ShardAssign, q150Oracle),
+    Query("q151_mixture_plan", q151MixturePlan, q151Oracle),
+    Query("q152_shard_append", q152ShardAppend, q152Oracle),
+    Query("q61_asof_join", q61AsofJoin, q61Oracle),
+    Query("q65_salted_join", q65SaltedJoin, q65Oracle),
+    Query("q109_bloom_semi_join", q109BloomSemiJoin, q109Oracle),
+    Query("q110_bucketed_join", q110BucketedJoin, q110Oracle),
+    Query("q111_salted_distinct", q111SaltedDistinct, q111Oracle),
+    Query("q116_zorder_key", q116ZOrderKey, q116Oracle),
+    Query("q66_percentiles", q66Percentiles, q66Oracle),
+    Query("q87_approx_percentiles", q87ApproxPercentiles, q87Oracle),
+    Query("q62_range_join", q62RangeJoin, q62Oracle),
+    Query("q50_multimodal", q50Multimodal, q50Oracle),
+    Query("q51_frame_sample", q51FrameSample, q51Oracle),
+    Query("q52_resize_extract", q52ResizeExtract, q52Oracle),
+    Query("q53_image_decode", q53ImageDecode, q53Oracle),
+    Query("q56_audio_decode", q56AudioDecode, q56Oracle),
+    Query("q396_gif_frames", q396GifFrames, q396Oracle),
+    Query("q397_jl_sweep", q397JlSweep, q397Oracle),
+    Query("q398_frame_seq_dedup", q398FrameSeqDedup, q398Oracle),
+    Query("q399_ivf_nprobe_sweep", q399IvfNprobeSweep, q399Oracle),
+    Query("q400_stream_ivf_ingest", EventQueries.fixtureGate(q400StreamIvfIngest), q400Oracle),
+    Query("q401_adaptive_probe", q401AdaptiveProbe, q401Oracle)
   )
 
-  val oracleSql: Map[String, String] = Map(
-    "q332_cdc_chunk_dedup" -> q332Oracle,
-    "q336_priority_sample" -> q336Oracle,
-    "q339_chunk_increment" -> q339Oracle,
-    "q340_kmv_overlap" -> q340Oracle,
-    "q341_stream_kmv" -> q341Oracle,
-    "q346_incremental_ingest" -> q346Oracle,
-    "q333_cov_profile" -> q333Oracle,
-    "q357_power_iteration" -> q357Oracle,
-    "q328_modality_qa" -> q328Oracle,
-    "q327_dup_quality_cross" -> q327Oracle,
-    "q326_langid_eval" -> q326Oracle,
-    "q315_reshard_plan" -> q315Oracle,
-    "q308_matryoshka_recall" -> q308Oracle,
-    "q307_calibration" -> q307Oracle,
-    "q306_classifier_eval" -> q306Oracle,
-    "q305_rank_metrics" -> q305Oracle,
-    "q304_hybrid_rrf" -> q304Oracle,
-    "q300_dsir_select" -> q300Oracle,
-    "q299_bpe_encode" -> q299Oracle,
-    "q298_mix_executed" -> q298Oracle,
-    "q297_term_churn" -> q297Oracle,
-    "q295_span_mask_plan" -> q295Oracle,
-    "q282_mix_rebalancer" -> q282Oracle,
-    "q283_dedup_savings" -> q283Oracle,
-    "q281_pretokenizer" -> q281Oracle,
-    "q277_next_purchase" -> q277Oracle,
-    "q276_damerau_pairs" -> q276Oracle,
-    "q271_flesch" -> q271Oracle,
-    "q275_ref_integrity" -> q275Oracle,
-    "q269_filtered_ann" -> q269Oracle,
-    "q270_power_iteration" -> q270Oracle,
-    "q267_impute_lang" -> q267Oracle,
-    "q259_prefix_jaccard" -> q259Oracle,
-    "q218_encoding_advisor" -> q218Oracle,
-    "q221_fuzzy_parts" -> q221Oracle,
-    "q224_lsh_sweep" -> q224Oracle,
-    "q225_entity_clusters" -> q225Oracle,
-    "q226_bm25" -> q226Oracle,
-    "q227_bigram_cond" -> q227Oracle,
-    "q366_textrank" -> q366Oracle,
-    "q369_stream_heavy_hitters" -> q369Oracle,
-    "q374_snake_packing" -> q374Oracle,
-    "q375_rendezvous_shard" -> q375Oracle,
-    "q378_exact_substr" -> q378Oracle,
-    "q380_dup_coverage" -> q380Oracle,
-    "q381_epoch_shuffle" -> q381Oracle,
-    "q382_apportion" -> q382Oracle,
-    "q383_stream_exact_substr" -> q383Oracle,
-    "q384_bloom_dedup" -> q384Oracle,
-    "q385_span_rewrite" -> q385Oracle,
-    "q387_stream_bloom" -> q387Oracle,
-    "q389_curriculum" -> q389Oracle,
-    "q391_filter_redundancy" -> q391Oracle,
-    "q392_substr_reconcile" -> q392Oracle,
-    "q393_source_tvd" -> q393Oracle,
-    "q395_jl_ann" -> annRecallOracle,
-    "q386_quality_keeper" -> q386Oracle,
-    "q229_pq_ann" -> annRecallOracle,
-    "q230_ivfpq_ann" -> annRecallOracle,
-    "q233_stream_dedup_index" -> q233Oracle,
-    "q237_ks_test" -> q237Oracle,
-    "q241_burstiness" -> q241Oracle,
-    "q242_hard_negatives" -> q242Oracle,
-    "q243_bpe_train" -> q243Oracle,
-    "q20_dedup_exact" -> q20Oracle,
-    "q26_dedup_keep" -> q26Oracle,
-    "q27_dup_clusters" -> q27Oracle,
-    "q28_dedup_pipeline" -> q28Oracle,
-    "q102_curation_pipeline" -> q102Oracle,
-    "q29_dedup_incremental" -> q29Oracle,
-    "q21_dedup_minhash" -> q21Oracle,
-    "q22_dedup_simhash" -> q22Oracle,
-    "q25_simhash_pairs" -> q25Oracle,
-    "q23_ngram_jaccard" -> q23Oracle,
-    "q95_edit_distance" -> q95Oracle,
-    "q24_embed_neardup" -> q24Oracle,
-    "q74_semantic_dedup" -> q74Oracle,
-    "q77_knn_classify" -> q77Oracle,
-    "q78_sq8_centroids" -> q78Oracle,
-    "q30_knn_brute" -> q30Oracle,
-    "q31_knn_lsh" -> annRecallOracle,
-    "q32_knn_ivf" -> annRecallOracle,
-    "q34_ivf_probe" -> annRecallOracle,
-    "q33_sq8" -> q33Oracle,
-    "q98_sql_kernels" -> q98Oracle,
-    "q40_lang_id" -> q40Oracle,
-    "q41_quality" -> q41Oracle,
-    "q46_ngram_lang" -> q46Oracle,
-    "q42_token_stats" -> q42Oracle,
-    "q43_fingerprint" -> q43Oracle,
-    "q44_hash_sample" -> q44Oracle,
-    "q45_stratified_quota" -> q45Oracle,
-    "q57_weighted_mix" -> q57Oracle,
-    "q80_split_assign" -> q80Oracle,
-    "q58_token_pack" -> q58Oracle,
-    "q129_compaction_plan" -> q129Oracle,
-    "q59_line_dedup" -> q59Oracle,
-    "q104_chunk_overlap" -> q104Oracle,
-    "q75_commonness" -> q75Oracle,
-    "q76_collocations" -> q76Oracle,
-    "q85_gopher_rules" -> q85Oracle,
-    "q47_profile" -> q47Oracle,
-    "q48_decontaminate" -> q48Oracle,
-    "q49_contamination_report" -> q49Oracle,
-    "q54_pii_redact" -> q54Oracle,
-    "q71_tfidf" -> q71Oracle,
-    "q72_vocab" -> q72Oracle,
-    "q145_ngram_novelty" -> q145Oracle,
-    "q146_pack_stats" -> q146Oracle,
-    "q155_cross_source" -> q155Oracle,
-    "q156_padding_waste" -> q156Oracle,
-    "q157_freq_spectrum" -> q157Oracle,
-    "q158_pack_segments" -> q158Oracle,
-    "q172_phash_clusters" -> q172Oracle,
-    "q182_heaps_curve" -> q182Oracle,
-    "q184_containment" -> q184Oracle,
-    "q195_embed_norms" -> q195Oracle,
-    "q198_audio_fingerprint" -> q198Oracle,
-    "q204_hilbert_key" -> q204Oracle,
-    "q205_layout_shootout" -> q205Oracle,
-    "q211_bpe_round" -> q211Oracle,
-    "q212_dataset_card" -> q212Oracle,
-    "q196_shard_skew" -> q196Oracle,
-    "q197_token_compression" -> q197Oracle,
-    "q168_freq_decay" -> q168Oracle,
-    "q169_embed_dim_stats" -> q169Oracle,
-    "q170_posting_lists" -> q170Oracle,
-    "q171_zone_maps" -> q171Oracle,
-    "q160_centroid_sep" -> q160Oracle,
-    "q161_percentile_floor" -> q161Oracle,
-    "q162_balanced_sample" -> q162Oracle,
-    "q147_oov_rate" -> q147Oracle,
-    "q148_length_survival" -> q148Oracle,
-    "q149_token_quota" -> q149Oracle,
-    "q150_shard_assign" -> q150Oracle,
-    "q151_mixture_plan" -> q151Oracle,
-    "q152_shard_append" -> q152Oracle,
-    "q55_repetition" -> q55Oracle,
-    "q61_asof_join" -> q61Oracle,
-    "q65_salted_join" -> q65Oracle,
-    "q109_bloom_semi_join" -> q109Oracle,
-    "q110_bucketed_join" -> q110Oracle,
-    "q111_salted_distinct" -> q111Oracle,
-    "q116_zorder_key" -> q116Oracle,
-    "q66_percentiles" -> q66Oracle,
-    "q87_approx_percentiles" -> q87Oracle,
-    "q62_range_join" -> q62Oracle,
-    "q50_multimodal" -> q50Oracle,
-    "q51_frame_sample" -> q51Oracle,
-    "q52_resize_extract" -> q52Oracle,
-    "q53_image_decode" -> q53Oracle,
-    "q56_audio_decode" -> q56Oracle,
-    "q396_gif_frames" -> q396Oracle,
-    "q397_jl_sweep" -> q397Oracle,
-    "q398_frame_seq_dedup" -> q398Oracle,
-    "q399_ivf_nprobe_sweep" -> q399Oracle,
-    "q400_stream_ivf_ingest" -> q400Oracle,
-    "q401_adaptive_probe" -> q401Oracle
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Query.runs(records)
 }

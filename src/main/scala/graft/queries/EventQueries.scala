@@ -7214,320 +7214,167 @@ object EventQueries {
       |  min(CASE WHEN rnk = (99 * n + 99) // 100 THEN cents END)::BIGINT AS p99_cents
       |FROM r CROSS JOIN n GROUP BY n""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q376_aa_calibration" -> (q376AaCalibration _),
-    "q388_exact_quantiles" -> (q388ExactQuantiles _),
-    "q379_dunnett" -> (q379Dunnett _),
-    "q394_chi_squared" -> (q394ChiSquared _),
-    "q373_bh_fdr" -> (q373BhFdr _),
-    "q370_kruskal_wallis" -> (q370KruskalWallis _),
-    "q371_mcnemar" -> (q371McNemar _),
-    "q372_cuped" -> (q372Cuped _),
-    "q367_stl_decompose" -> (q367StlDecompose _),
-    "q344_twap" -> (q344Twap _),
-    "q347_holt_winters" -> (q347HoltWinters _),
-    "q348_seasonal_bakeoff" -> (q348SeasonalBakeoff _),
-    "q349_lead_lag" -> (q349LeadLag _),
-    "q350_forecast_intervals" -> (q350ForecastIntervals _),
-    "q351_kaplan_meier" -> (q351KaplanMeier _),
-    "q352_stratified_ate" -> (q352StratifiedAte _),
-    "q353_top_paths" -> (q353TopPaths _),
-    "q354_time_to_convert" -> (q354TimeToConvert _),
-    "q355_interarrival" -> (q355Interarrival _),
-    "q356_engagement_gini" -> (q356EngagementGini _),
-    "q358_hour_of_week" -> (q358HourOfWeek _),
-    "q359_association_rules" -> (q359AssociationRules _),
-    "q360_shapley_attribution" -> (q360ShapleyAttribution _),
-    "q361_interval_coverage" -> (q361IntervalCoverage _),
-    "q362_acf_ljung_box" -> (q362AcfLjungBox _),
-    "q363_log_hist_quantile" -> (q363LogHistQuantile _),
-    "q364_null_handling" -> (q364NullHandlingParity _),
-    "q345_ohlc_bars" -> (q345OhlcBars _),
-    "q337_hll_accuracy" -> (q337HllAccuracy _),
-    "q338_rolling_active" -> (q338RollingActive _),
-    "q334_markov_stationary" -> (q334MarkovStationary _),
-    "q335_drift_monitor" -> (q335DriftMonitor _),
-    "q330_forecast_mase" -> (q330ForecastMase _),
-    "q331_runs_test" -> (q331RunsTest _),
-    "q325_forecast_backtest" -> (q325ForecastBacktest _),
-    "q324_rate_decomposition" -> (q324RateDecomposition _),
-    "q323_theil_sen" -> (q323TheilSen _),
-    "q322_permutation_test" -> (q322PermutationTest _),
-    "q321_mann_kendall" -> (q321MannKendall _),
-    "q320_srm_check" -> (q320SrmCheck _),
-    "q319_sequential_test" -> (q319SequentialTest _),
-    "q318_power_analysis" -> (q318PowerAnalysis _),
-    "q317_cluster_bootstrap" -> (q317ClusterBootstrap _),
-    "q314_variant_roundtrip" -> (q314VariantRoundtrip _),
-    "q312_time_decay_attribution" -> (q312TimeDecayAttribution _),
-    "q311_markov_attribution" -> (q311MarkovAttribution _),
-    "q310_dp_release" -> (q310DpRelease _),
-    "q309_holt_forecast" -> (q309HoltForecast _),
-    "q303_poisson_bootstrap" -> (q303PoissonBootstrap _),
-    "q301_stream_tws" -> fixtureGate(q301StreamTws, rocksDb = true),
-    "q302_t_closeness" -> (q302TCloseness _),
-    "q293_null_ordering" -> (q293NullOrdering _),
-    "q294_forget_audit" -> (q294ForgetAudit _),
-    "q292_stream_bitmap" -> fixtureGate(q292StreamBitmap),
-    "q287_bounce_rate" -> (q287BounceRate _),
-    "q284_spearman" -> (q284Spearman _),
-    "q286_decayed_score" -> (q286DecayedScore _),
-    "q280_activity_bitmap" -> (q280ActivityBitmap _),
-    "q278_convert_lag" -> (q278ConvertLag _),
-    "q279_dwell_time" -> (q279DwellTime _),
-    "q264_peak_concurrency" -> (q264PeakConcurrency _),
-    "q266_rfm_segments" -> (q266RfmSegments _),
-    "q256_mann_whitney" -> (q256MannWhitney _),
-    "q257_ema_feature" -> (q257EmaFeature _),
-    "q258_mad_anomalies" -> (q258MadAnomalies _),
-    "q240_gini_split" -> (q240GiniSplit _),
-    "q239_chi2_independence" -> (q239Chi2Independence _),
-    "q231_feature_hash" -> (q231FeatureHash _),
-    "q232_target_encoding" -> (q232TargetEncoding _),
-    "q222_sequence_support" -> (q222SequenceSupport _),
-    "q216_kaplan_meier" -> (q216KaplanMeier _),
-    "q217_l_diversity" -> (q217LDiversity _),
-    "q220_position_attribution" -> (q220PositionAttribution _),
-    "q208_weekly_bands" -> (q208WeeklyBands _),
-    "q209_new_returning" -> (q209NewReturning _),
-    "q210_growth_accounting" -> (q210GrowthAccounting _),
-    "q206_hll_sweep" -> (q206HllSweep _),
-    "q207_decile_gains" -> (q207DecileGains _),
-    "q201_coverage_cut" -> (q201CoverageCut _),
-    "q203_feature_store" -> (q203FeatureStore _),
-    "q200_recent_history" -> (q200RecentHistory _),
-    "q192_windowed_funnel" -> (q192WindowedFunnel _),
-    "q193_sequence_match" -> (q193SequenceMatch _),
-    "q189_weighted_median" -> (q189WeightedMedian _),
-    "q190_change_point" -> (q190ChangePoint _),
-    "q185_k_anonymity" -> (q185KAnonymity _),
-    "q186_late_arrivals" -> (q186LateArrivals _),
-    "q187_negative_samples" -> (q187NegativeSamples _),
-    "q188_burst_rate" -> (q188BurstRate _),
-    "q183_linear_attribution" -> (q183LinearAttribution _),
-    "q180_type_affinity" -> (q180TypeAffinity _),
-    "q174_trend_slope" -> (q174TrendSlope _),
-    "q175_activity_heatmap" -> (q175ActivityHeatmap _),
-    "q176_simpson_diversity" -> (q176SimpsonDiversity _),
-    "q163_rfm_segments" -> (q163RfmSegments _),
-    "q164_retention_matrix" -> (q164RetentionMatrix _),
-    "q165_market_basket" -> (q165MarketBasket _),
-    "q166_seasonal_anomaly" -> (q166SeasonalAnomaly _),
-    "q167_benford" -> (q167Benford _),
-    "q159_max_concurrent" -> (q159MaxConcurrent _),
-    "q141_drift_report" -> (q141DriftReport _),
-    "q142_ab_ztest" -> (q142AbZtest _),
-    "q143_stickiness" -> (q143Stickiness _),
-    "q144_cohort_ltv" -> (q144CohortLtv _),
-    "q133_gap_fill" -> (q133GapFill _),
-    "q134_sliding_hll" -> (q134SlidingHll _),
-    "q136_locf" -> (q136Locf _),
-    "q137_transitions" -> (q137Transitions _),
-    "q138_winsorize" -> (q138Winsorize _),
-    "q139_audience_overlap" -> (q139AudienceOverlap _),
-    "q140_top_journeys" -> (q140TopJourneys _),
-    "q131_expectations" -> (q131Expectations _),
-    "q125_cms_frequency" -> (q125CmsFrequency _),
-    "q126_per_key_sample" -> (q126PerKeySample _),
-    "q127_window_dedup" -> (q127WindowDedup _),
-    "q128_mad_outliers" -> (q128MadOutliers _),
-    "q60_retention" -> (q60Retention _),
-    "q117_stream_session_window" -> fixtureGate(q117StreamSessionWindow),
-    "q118_topk_per_key" -> (q118TopKPerKey _),
-    "q119_next_event_label" -> (q119NextEventLabel _),
-    "q120_group_kfold" -> (q120GroupKFold _),
-    "q121_temporal_split" -> (q121TemporalSplit _),
-    "q122_skew_diagnostics" -> (q122SkewDiagnostics _),
-    "q112_hll_merge" -> (q112HllMerge _),
-    "q113_approx_topk" -> (q113ApproxTopK _),
-    "q114_decayed_score" -> (q114DecayedScore _),
-    "q115_last_touch" -> (q115LastTouch _),
-    "q67_pivot" -> (q67Pivot _),
-    "q12_sessionize" -> (q12Sessionize _),
-    "q13_funnel" -> (q13Funnel _),
-    "q14_json_props" -> (q14JsonProps _),
-    "q15_scalar_suite" -> (q15ScalarSuite _),
-    "q69_stream_sessionize" -> fixtureGate(q69StreamSessionize),
-    "q70_stream_windows" -> fixtureGate(q70StreamWindows),
-    "q73_stream_dedup" -> fixtureGate(q73StreamDedup),
-    "q79_rolling_features" -> (q79RollingFeatures _),
-    "q81_stream_enrich" -> (q81StreamEnrich _),
-    "q83_approx_users" -> (q83ApproxUsers _),
-    "q86_unpivot" -> (q86Unpivot _),
-    "q88_full_outer" -> (q88FullOuter _),
-    "q89_stream_stream_join" -> fixtureGate(q89StreamStreamJoin),
-    "q90_deciles" -> (q90Deciles _),
-    "q91_histogram" -> (q91Histogram _),
-    "q92_user_gini" -> (q92UserGini _),
-    "q93_rank_family" -> (q93RankFamily _),
-    "q96_schema_evolution" -> (q96SchemaEvolution _),
-    "q97_collect_types" -> (q97CollectTypes _),
-    "q103_quantile_bins" -> (q103QuantileBins _),
-    "q105_session_features" -> (q105SessionFeatures _),
-    "q106_funnel3" -> (q106Funnel3 _),
-    "q107_dispersion" -> (q107Dispersion _),
-    "q108_correlation" -> (q108Correlation _)
+  val records: Seq[Query] = Seq(
+    Query("q376_aa_calibration", q376AaCalibration, q376Oracle),
+    Query("q388_exact_quantiles", q388ExactQuantiles, q388Oracle),
+    Query("q379_dunnett", q379Dunnett, q379Oracle),
+    Query("q394_chi_squared", q394ChiSquared, q394Oracle),
+    Query("q373_bh_fdr", q373BhFdr, q373Oracle),
+    Query("q370_kruskal_wallis", q370KruskalWallis, q370Oracle),
+    Query("q371_mcnemar", q371McNemar, q371Oracle),
+    Query("q372_cuped", q372Cuped, q372Oracle),
+    Query("q367_stl_decompose", q367StlDecompose, q367Oracle),
+    Query("q344_twap", q344Twap, q344Oracle),
+    Query("q347_holt_winters", q347HoltWinters, q347Oracle),
+    Query("q348_seasonal_bakeoff", q348SeasonalBakeoff, q348Oracle),
+    Query("q349_lead_lag", q349LeadLag, q349Oracle),
+    Query("q350_forecast_intervals", q350ForecastIntervals, q350Oracle),
+    Query("q351_kaplan_meier", q351KaplanMeier, q351Oracle),
+    Query("q352_stratified_ate", q352StratifiedAte, q352Oracle),
+    Query("q353_top_paths", q353TopPaths, q353Oracle),
+    Query("q354_time_to_convert", q354TimeToConvert, q354Oracle),
+    Query("q355_interarrival", q355Interarrival, q355Oracle),
+    Query("q356_engagement_gini", q356EngagementGini, q356Oracle),
+    Query("q358_hour_of_week", q358HourOfWeek, q358Oracle),
+    Query("q359_association_rules", q359AssociationRules, q359Oracle),
+    Query("q360_shapley_attribution", q360ShapleyAttribution, q360Oracle),
+    Query("q361_interval_coverage", q361IntervalCoverage, q361Oracle),
+    Query("q362_acf_ljung_box", q362AcfLjungBox, q362Oracle),
+    Query("q363_log_hist_quantile", q363LogHistQuantile, q363Oracle),
+    Query("q364_null_handling", q364NullHandlingParity, q364Oracle),
+    Query("q345_ohlc_bars", q345OhlcBars, q345Oracle),
+    Query("q337_hll_accuracy", q337HllAccuracy, q337Oracle),
+    Query("q338_rolling_active", q338RollingActive, q338Oracle),
+    Query("q334_markov_stationary", q334MarkovStationary, q334Oracle),
+    Query("q335_drift_monitor", q335DriftMonitor, q335Oracle),
+    Query("q330_forecast_mase", q330ForecastMase, q330Oracle),
+    Query("q331_runs_test", q331RunsTest, q331Oracle),
+    Query("q325_forecast_backtest", q325ForecastBacktest, q325Oracle),
+    Query("q324_rate_decomposition", q324RateDecomposition, q324Oracle),
+    Query("q323_theil_sen", q323TheilSen, q323Oracle),
+    Query("q322_permutation_test", q322PermutationTest, q322Oracle),
+    Query("q321_mann_kendall", q321MannKendall, q321Oracle),
+    Query("q320_srm_check", q320SrmCheck, q320Oracle),
+    Query("q319_sequential_test", q319SequentialTest, q319Oracle),
+    Query("q318_power_analysis", q318PowerAnalysis, q318Oracle),
+    Query("q317_cluster_bootstrap", q317ClusterBootstrap, q317Oracle),
+    Query("q314_variant_roundtrip", q314VariantRoundtrip, q314Oracle),
+    Query("q312_time_decay_attribution", q312TimeDecayAttribution, q312Oracle),
+    Query("q311_markov_attribution", q311MarkovAttribution, q311Oracle),
+    Query("q310_dp_release", q310DpRelease, q310Oracle),
+    Query("q309_holt_forecast", q309HoltForecast, q309Oracle),
+    Query("q303_poisson_bootstrap", q303PoissonBootstrap, q303Oracle),
+    // the transformWithState totals must land exactly on the batch aggregate
+    Query("q301_stream_tws", fixtureGate(q301StreamTws, rocksDb = true), q301Oracle),
+    Query("q302_t_closeness", q302TCloseness, q302Oracle),
+    Query("q293_null_ordering", q293NullOrdering, q293Oracle),
+    Query("q294_forget_audit", q294ForgetAudit, q294Oracle),
+    // the streamed bitmap must land exactly on the one-shot batch bitmap
+    Query("q292_stream_bitmap", fixtureGate(q292StreamBitmap), q280Oracle),
+    Query("q287_bounce_rate", q287BounceRate, q287Oracle),
+    Query("q284_spearman", q284Spearman, q284Oracle),
+    Query("q286_decayed_score", q286DecayedScore, q286Oracle),
+    Query("q280_activity_bitmap", q280ActivityBitmap, q280Oracle),
+    Query("q278_convert_lag", q278ConvertLag, q278Oracle),
+    Query("q279_dwell_time", q279DwellTime, q279Oracle),
+    Query("q264_peak_concurrency", q264PeakConcurrency, q264Oracle),
+    Query("q266_rfm_segments", q266RfmSegments, q266Oracle),
+    Query("q256_mann_whitney", q256MannWhitney, q256Oracle),
+    Query("q257_ema_feature", q257EmaFeature, q257Oracle),
+    Query("q258_mad_anomalies", q258MadAnomalies, q258Oracle),
+    Query("q240_gini_split", q240GiniSplit, q240Oracle),
+    Query("q239_chi2_independence", q239Chi2Independence, q239Oracle),
+    Query("q231_feature_hash", q231FeatureHash, q231Oracle),
+    Query("q232_target_encoding", q232TargetEncoding, q232Oracle),
+    Query("q222_sequence_support", q222SequenceSupport, q222Oracle),
+    Query("q216_kaplan_meier", q216KaplanMeier, q216Oracle),
+    Query("q217_l_diversity", q217LDiversity, q217Oracle),
+    Query("q220_position_attribution", q220PositionAttribution, q220Oracle),
+    Query("q208_weekly_bands", q208WeeklyBands, q208Oracle),
+    Query("q209_new_returning", q209NewReturning, q209Oracle),
+    Query("q210_growth_accounting", q210GrowthAccounting, q210Oracle),
+    Query("q206_hll_sweep", q206HllSweep, q206Oracle),
+    Query("q207_decile_gains", q207DecileGains, q207Oracle),
+    Query("q201_coverage_cut", q201CoverageCut, q201Oracle),
+    Query("q203_feature_store", q203FeatureStore, q203Oracle),
+    Query("q200_recent_history", q200RecentHistory, q200Oracle),
+    Query("q192_windowed_funnel", q192WindowedFunnel, q192Oracle),
+    Query("q193_sequence_match", q193SequenceMatch, q193Oracle),
+    Query("q189_weighted_median", q189WeightedMedian, q189Oracle),
+    Query("q190_change_point", q190ChangePoint, q190Oracle),
+    Query("q185_k_anonymity", q185KAnonymity, q185Oracle),
+    Query("q186_late_arrivals", q186LateArrivals, q186Oracle),
+    Query("q187_negative_samples", q187NegativeSamples, q187Oracle),
+    Query("q188_burst_rate", q188BurstRate, q188Oracle),
+    Query("q183_linear_attribution", q183LinearAttribution, q183Oracle),
+    Query("q180_type_affinity", q180TypeAffinity, q180Oracle),
+    Query("q174_trend_slope", q174TrendSlope, q174Oracle),
+    Query("q175_activity_heatmap", q175ActivityHeatmap, q175Oracle),
+    Query("q176_simpson_diversity", q176SimpsonDiversity, q176Oracle),
+    Query("q163_rfm_segments", q163RfmSegments, q163Oracle),
+    Query("q164_retention_matrix", q164RetentionMatrix, q164Oracle),
+    Query("q165_market_basket", q165MarketBasket, q165Oracle),
+    Query("q166_seasonal_anomaly", q166SeasonalAnomaly, q166Oracle),
+    Query("q167_benford", q167Benford, q167Oracle),
+    Query("q159_max_concurrent", q159MaxConcurrent, q159Oracle),
+    Query("q141_drift_report", q141DriftReport, q141Oracle),
+    Query("q142_ab_ztest", q142AbZtest, q142Oracle),
+    Query("q143_stickiness", q143Stickiness, q143Oracle),
+    Query("q144_cohort_ltv", q144CohortLtv, q144Oracle),
+    Query("q133_gap_fill", q133GapFill, q133Oracle),
+    Query("q134_sliding_hll", q134SlidingHll, q134Oracle),
+    Query("q136_locf", q136Locf, q136Oracle),
+    Query("q137_transitions", q137Transitions, q137Oracle),
+    Query("q138_winsorize", q138Winsorize, q138Oracle),
+    Query("q139_audience_overlap", q139AudienceOverlap, q139Oracle),
+    Query("q140_top_journeys", q140TopJourneys, q140Oracle),
+    Query("q131_expectations", q131Expectations, q131Oracle),
+    Query("q125_cms_frequency", q125CmsFrequency, q125Oracle),
+    Query("q126_per_key_sample", q126PerKeySample, q126Oracle),
+    Query("q127_window_dedup", q127WindowDedup, q127Oracle),
+    Query("q128_mad_outliers", q128MadOutliers, q128Oracle),
+    Query("q60_retention", q60Retention, q60Oracle),
+    Query("q117_stream_session_window", fixtureGate(q117StreamSessionWindow), q117Oracle),
+    Query("q118_topk_per_key", q118TopKPerKey, q118Oracle),
+    Query("q119_next_event_label", q119NextEventLabel, q119Oracle),
+    Query("q120_group_kfold", q120GroupKFold, q120Oracle),
+    Query("q121_temporal_split", q121TemporalSplit, q121Oracle),
+    Query("q122_skew_diagnostics", q122SkewDiagnostics, q122Oracle),
+    Query("q112_hll_merge", q112HllMerge, q112Oracle),
+    Query("q113_approx_topk", q113ApproxTopK, q113Oracle),
+    Query("q114_decayed_score", q114DecayedScore, q114Oracle),
+    Query("q115_last_touch", q115LastTouch, q115Oracle),
+    Query("q67_pivot", q67Pivot, q67Oracle),
+    Query("q12_sessionize", q12Sessionize, q12Oracle),
+    Query("q13_funnel", q13Funnel, q13Oracle),
+    Query("q14_json_props", q14JsonProps, q14Oracle),
+    Query("q15_scalar_suite", q15ScalarSuite, q15Oracle),
+    // streaming must reproduce the batch gap semantics exactly
+    Query("q69_stream_sessionize", fixtureGate(q69StreamSessionize), q12Oracle),
+    // and watermarked windows must reproduce the batch tumbling counts
+    Query("q70_stream_windows", fixtureGate(q70StreamWindows), q70Oracle),
+    // streaming dedup must keep exactly one row per batch-tier fingerprint
+    Query("q73_stream_dedup", fixtureGate(q73StreamDedup), q73Oracle),
+    Query("q79_rolling_features", q79RollingFeatures, q79Oracle),
+    // stream-static join gated value-for-value against the batch join
+    Query("q81_stream_enrich", q81StreamEnrich, q81Oracle),
+    Query("q83_approx_users", q83ApproxUsers, q83Oracle),
+    Query("q86_unpivot", q86Unpivot, q86Oracle),
+    Query("q88_full_outer", q88FullOuter, q88Oracle),
+    // stream-stream interval join must emit exactly the batch join result
+    Query("q89_stream_stream_join", fixtureGate(q89StreamStreamJoin), q89Oracle),
+    Query("q90_deciles", q90Deciles, q90Oracle),
+    Query("q91_histogram", q91Histogram, q91Oracle),
+    Query("q92_user_gini", q92UserGini, q92Oracle),
+    Query("q93_rank_family", q93RankFamily, q93Oracle),
+    Query("q96_schema_evolution", q96SchemaEvolution, q96Oracle),
+    Query("q97_collect_types", q97CollectTypes, q97Oracle),
+    Query("q103_quantile_bins", q103QuantileBins, q103Oracle),
+    Query("q105_session_features", q105SessionFeatures, q105Oracle),
+    Query("q106_funnel3", q106Funnel3, q106Oracle),
+    Query("q107_dispersion", q107Dispersion, q107Oracle),
+    Query("q108_correlation", q108Correlation, q108Oracle)
   )
 
-  val oracleSql: Map[String, String] = Map(
-    "q293_null_ordering" -> q293Oracle,
-    "q294_forget_audit" -> q294Oracle,
-    // the transformWithState totals must land exactly on the batch aggregate
-    "q301_stream_tws" -> q301Oracle,
-    "q302_t_closeness" -> q302Oracle,
-    "q303_poisson_bootstrap" -> q303Oracle,
-    "q309_holt_forecast" -> q309Oracle,
-    "q310_dp_release" -> q310Oracle,
-    "q311_markov_attribution" -> q311Oracle,
-    "q312_time_decay_attribution" -> q312Oracle,
-    "q314_variant_roundtrip" -> q314Oracle,
-    "q317_cluster_bootstrap" -> q317Oracle,
-    "q318_power_analysis" -> q318Oracle,
-    "q319_sequential_test" -> q319Oracle,
-    "q320_srm_check" -> q320Oracle,
-    "q321_mann_kendall" -> q321Oracle,
-    "q322_permutation_test" -> q322Oracle,
-    "q323_theil_sen" -> q323Oracle,
-    "q324_rate_decomposition" -> q324Oracle,
-    "q325_forecast_backtest" -> q325Oracle,
-    "q376_aa_calibration" -> q376Oracle,
-    "q379_dunnett" -> q379Oracle,
-    "q394_chi_squared" -> q394Oracle,
-    "q388_exact_quantiles" -> q388Oracle,
-    "q373_bh_fdr" -> q373Oracle,
-    "q370_kruskal_wallis" -> q370Oracle,
-    "q371_mcnemar" -> q371Oracle,
-    "q372_cuped" -> q372Oracle,
-    "q367_stl_decompose" -> q367Oracle,
-    "q344_twap" -> q344Oracle,
-    "q347_holt_winters" -> q347Oracle,
-    "q348_seasonal_bakeoff" -> q348Oracle,
-    "q349_lead_lag" -> q349Oracle,
-    "q350_forecast_intervals" -> q350Oracle,
-    "q351_kaplan_meier" -> q351Oracle,
-    "q352_stratified_ate" -> q352Oracle,
-    "q353_top_paths" -> q353Oracle,
-    "q354_time_to_convert" -> q354Oracle,
-    "q355_interarrival" -> q355Oracle,
-    "q356_engagement_gini" -> q356Oracle,
-    "q358_hour_of_week" -> q358Oracle,
-    "q359_association_rules" -> q359Oracle,
-    "q360_shapley_attribution" -> q360Oracle,
-    "q361_interval_coverage" -> q361Oracle,
-    "q362_acf_ljung_box" -> q362Oracle,
-    "q363_log_hist_quantile" -> q363Oracle,
-    "q364_null_handling" -> q364Oracle,
-    "q345_ohlc_bars" -> q345Oracle,
-    "q337_hll_accuracy" -> q337Oracle,
-    "q338_rolling_active" -> q338Oracle,
-    "q334_markov_stationary" -> q334Oracle,
-    "q335_drift_monitor" -> q335Oracle,
-    "q330_forecast_mase" -> q330Oracle,
-    "q331_runs_test" -> q331Oracle,
-    // the streamed bitmap must land exactly on the one-shot batch bitmap
-    "q292_stream_bitmap" -> q280Oracle,
-    "q287_bounce_rate" -> q287Oracle,
-    "q284_spearman" -> q284Oracle,
-    "q286_decayed_score" -> q286Oracle,
-    "q280_activity_bitmap" -> q280Oracle,
-    "q278_convert_lag" -> q278Oracle,
-    "q279_dwell_time" -> q279Oracle,
-    "q264_peak_concurrency" -> q264Oracle,
-    "q266_rfm_segments" -> q266Oracle,
-    "q256_mann_whitney" -> q256Oracle,
-    "q257_ema_feature" -> q257Oracle,
-    "q258_mad_anomalies" -> q258Oracle,
-    "q240_gini_split" -> q240Oracle,
-    "q239_chi2_independence" -> q239Oracle,
-    "q231_feature_hash" -> q231Oracle,
-    "q232_target_encoding" -> q232Oracle,
-    "q222_sequence_support" -> q222Oracle,
-    "q216_kaplan_meier" -> q216Oracle,
-    "q217_l_diversity" -> q217Oracle,
-    "q220_position_attribution" -> q220Oracle,
-    "q192_windowed_funnel" -> q192Oracle,
-    "q200_recent_history" -> q200Oracle,
-    "q201_coverage_cut" -> q201Oracle,
-    "q203_feature_store" -> q203Oracle,
-    "q206_hll_sweep" -> q206Oracle,
-    "q207_decile_gains" -> q207Oracle,
-    "q208_weekly_bands" -> q208Oracle,
-    "q209_new_returning" -> q209Oracle,
-    "q210_growth_accounting" -> q210Oracle,
-    "q193_sequence_match" -> q193Oracle,
-    "q189_weighted_median" -> q189Oracle,
-    "q190_change_point" -> q190Oracle,
-    "q185_k_anonymity" -> q185Oracle,
-    "q186_late_arrivals" -> q186Oracle,
-    "q187_negative_samples" -> q187Oracle,
-    "q188_burst_rate" -> q188Oracle,
-    "q183_linear_attribution" -> q183Oracle,
-    "q180_type_affinity" -> q180Oracle,
-    "q174_trend_slope" -> q174Oracle,
-    "q175_activity_heatmap" -> q175Oracle,
-    "q176_simpson_diversity" -> q176Oracle,
-    "q163_rfm_segments" -> q163Oracle,
-    "q164_retention_matrix" -> q164Oracle,
-    "q165_market_basket" -> q165Oracle,
-    "q166_seasonal_anomaly" -> q166Oracle,
-    "q167_benford" -> q167Oracle,
-    "q141_drift_report" -> q141Oracle,
-    "q142_ab_ztest" -> q142Oracle,
-    "q143_stickiness" -> q143Oracle,
-    "q144_cohort_ltv" -> q144Oracle,
-    "q159_max_concurrent" -> q159Oracle,
-    "q60_retention" -> q60Oracle,
-    "q67_pivot" -> q67Oracle,
-    "q12_sessionize" -> q12Oracle,
-    "q13_funnel" -> q13Oracle,
-    "q14_json_props" -> q14Oracle,
-    "q15_scalar_suite" -> q15Oracle,
-    // streaming must reproduce the batch gap semantics exactly
-    "q69_stream_sessionize" -> q12Oracle,
-    // and watermarked windows must reproduce the batch tumbling counts
-    "q70_stream_windows" -> q70Oracle,
-    // streaming dedup must keep exactly one row per batch-tier fingerprint
-    "q73_stream_dedup" -> q73Oracle,
-    "q79_rolling_features" -> q79Oracle,
-    // stream-static join gated value-for-value against the batch join
-    "q81_stream_enrich" -> q81Oracle,
-    "q83_approx_users" -> q83Oracle,
-    "q86_unpivot" -> q86Oracle,
-    "q88_full_outer" -> q88Oracle,
-    // stream-stream interval join must emit exactly the batch join result
-    "q89_stream_stream_join" -> q89Oracle,
-    "q90_deciles" -> q90Oracle,
-    "q91_histogram" -> q91Oracle,
-    "q92_user_gini" -> q92Oracle,
-    "q93_rank_family" -> q93Oracle,
-    "q96_schema_evolution" -> q96Oracle,
-    "q97_collect_types" -> q97Oracle,
-    "q103_quantile_bins" -> q103Oracle,
-    "q105_session_features" -> q105Oracle,
-    "q106_funnel3" -> q106Oracle,
-    "q107_dispersion" -> q107Oracle,
-    "q108_correlation" -> q108Oracle,
-    "q112_hll_merge" -> q112Oracle,
-    "q113_approx_topk" -> q113Oracle,
-    "q114_decayed_score" -> q114Oracle,
-    "q115_last_touch" -> q115Oracle,
-    "q117_stream_session_window" -> q117Oracle,
-    "q118_topk_per_key" -> q118Oracle,
-    "q119_next_event_label" -> q119Oracle,
-    "q120_group_kfold" -> q120Oracle,
-    "q121_temporal_split" -> q121Oracle,
-    "q122_skew_diagnostics" -> q122Oracle,
-    "q125_cms_frequency" -> q125Oracle,
-    "q131_expectations" -> q131Oracle,
-    "q133_gap_fill" -> q133Oracle,
-    "q134_sliding_hll" -> q134Oracle,
-    "q136_locf" -> q136Oracle,
-    "q137_transitions" -> q137Oracle,
-    "q138_winsorize" -> q138Oracle,
-    "q139_audience_overlap" -> q139Oracle,
-    "q140_top_journeys" -> q140Oracle,
-    "q126_per_key_sample" -> q126Oracle,
-    "q127_window_dedup" -> q127Oracle,
-    "q128_mad_outliers" -> q128Oracle
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Query.runs(records)
 }

@@ -10,9 +10,9 @@ import graft.engine.JobSpec.{JobConfig, ParquetFormat, TableVersionRange}
 
 /** Relational-parity query surface (SURVEY.md §2.3-§2.7, §6 build-plan step 6).
   *
-  * Each query exists twice: the Spark implementation here and an equivalent
-  * DuckDB oracle in [[ParityQueries.oracleSql]] — the driver hash-compares
-  * both at sf0.01. Aggregated doubles are rounded on BOTH sides so that
+  * Each query is one [[Query]] record in [[ParityQueries.records]]: the
+  * Spark implementation here and an equivalent DuckDB oracle — the driver
+  * hash-compares both at sf0.01. Aggregated doubles are rounded on BOTH sides so that
   * engine-specific summation order can't flip the last ulp.
   *
   * Scale notes per query are inline; the common themes: small dims are
@@ -3115,147 +3115,61 @@ object ParityQueries {
        |ORDER BY bc DESC, node ASC LIMIT 20""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q377_betweenness" -> (q377Betweenness _),
-    "q368_sql_sugar" -> (q368SqlSugar _),
-    "q365_sssp_cheapest" -> (q365SsspCheapest _),
-    "q329_recursive_rollup" -> (q329RecursiveRollup _),
-    "q313_broadcast_advisor" -> (q313BroadcastAdvisor _),
-    "q316_pit_join" -> (q316PitJoin _),
-    "q296_hierarchy_shares" -> (q296HierarchyShares _),
-    "q289_relative_ranks" -> (q289RelativeRanks _),
-    "q290_ntile_parity" -> (q290NtileParity _),
-    "q291_explode_outer" -> (q291ExplodeOuter _),
-    "q288_spend_gini" -> (q288SpendGini _),
-    "q285_also_bought" -> (q285AlsoBought _),
-    "q273_schema_evolution" -> (q273SchemaEvolution _),
-    "q274_bfs_hops" -> (q274BfsHops _),
-    "q268_bag_setops" -> (q268BagSetOps _),
-    "q260_shipping_priority" -> (q260ShippingPriority _),
-    "q261_forecast_revenue" -> (q261ForecastRevenue _),
-    "q262_returned_items" -> (q262ReturnedItems _),
-    "q263_part_skyline" -> (q263PartSkyline _),
-    "q265_histogram_estimate" -> (q265HistogramEstimate _),
-    "q255_label_communities" -> (q255LabelCommunities _),
-    "q390_modularity" -> (q390Modularity _),
-    "q244_priority_check" -> (q244PriorityCheck _),
-    "q245_product_profit" -> (q245ProductProfit _),
-    "q246_lateness_by_priority" -> (q246LatenessByPriority _),
-    "q247_order_count_dist" -> (q247OrderCountDist _),
-    "q248_promo_share" -> (q248PromoShare _),
-    "q249_supplier_variety" -> (q249SupplierVariety _),
-    "q250_small_qty_revenue" -> (q250SmallQtyRevenue _),
-    "q251_disjunct_revenue" -> (q251DisjunctRevenue _),
-    "q253_idle_customers" -> (q253IdleCustomers _),
-    "q254_min_cost_supplier" -> (q254MinCostSupplier _),
-    "q199_corrupt_records" -> (q199CorruptRecords _),
-    "q194_join_size_profile" -> (q194JoinSizeProfile _),
-    "q178_column_profile" -> (q178ColumnProfile _),
-    "q179_incremental_join" -> (q179IncrementalJoin _),
-    "q181_stream_incremental_join" -> EventQueries.fixtureGate(q181StreamIncrementalJoin),
-    "q191_partitioned_write" -> (q191PartitionedWrite _),
-    "q173_local_supplier" -> (q173LocalSupplierRevenue _),
-    "q177_important_parts" -> (q177ImportantParts _),
-    "q213_volume_shipping" -> (q213VolumeShipping _),
-    "q214_market_share" -> (q214MarketShare _),
-    "q215_waiting_supplier" -> (q215WaitingSupplier _),
-    "q223_fd_profile" -> (q223FdProfile _),
-    "q228_kcore" -> EventQueries.fixtureGate(q228KCore),
-    "q234_top_supplier" -> (q234TopSupplier _),
-    "q236_eigencentrality" -> (q236Eigencentrality _),
-    "q238_hits" -> (q238Hits _),
-    "q235_big_orders" -> (q235BigOrders _),
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_star_join" -> (q02StarJoin _),
-    "q03_window_top_orders" -> (q03WindowTopOrders _),
-    "q04_topk" -> (q04TopK _),
-    "q05_setops" -> (q05SetOps _),
-    "q06_rollup" -> (q06Rollup _),
-    "q07_envelope" -> (q07Envelope _),
-    "q08_cdc_event" -> (q08CdcEvent _),
-    "q09_cdc_property" -> (q09CdcProperty _),
-    "q10_void_scrub" -> (q10VoidScrub _),
-    "q11_sql_rewrite" -> (q11SqlRewrite _),
-    "q342_pipe_syntax" -> (q342PipeSyntax _),
-    "q343_lateral_agg" -> (q343LateralAgg _),
-    "q18_semi_anti" -> (q18SemiAnti _),
-    "q19_cube" -> (q19Cube _),
-    "q82_grouping_sets" -> (q82GroupingSets _),
-    "q84_above_cust_avg" -> (q84AboveCustomerAvg _),
-    "q94_decimal_money" -> (q94DecimalMoney _),
-    "q16_snapshot_travel" -> (q16SnapshotTravel _),
-    "q17_cdf_window" -> (q17CdfWindow _),
-    "q63_timestamp_travel" -> (q63TimestampTravel _),
-    "q68_mutability_bypass" -> (q68MutabilityBypass _),
-    "q64_cdc_materialize" -> (q64CdcMaterialize _),
-    "q99_stream_materialize" -> EventQueries.fixtureGate(q99StreamMaterialize),
-    "q123_incremental_agg" -> (q123IncrementalAgg _),
-    "q124_scd2_history" -> (q124Scd2History _),
-    "q130_stream_incremental_agg" -> EventQueries.fixtureGate(q130StreamIncrementalAgg),
-    "q132_pagerank" -> (q132PageRank _),
-    "q154_triangles" -> (q154Triangles _),
-    "q135_snapshot_diff" -> (q135SnapshotDiff _),
-    "q100_csv_roundtrip" -> (q100CsvRoundtrip _),
-    "q101_orc_roundtrip" -> (q101OrcRoundtrip _),
-    "q153_jsonl_roundtrip" -> (q153JsonlRoundtrip _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q377_betweenness" -> q377Oracle,
-    "q368_sql_sugar" -> q368Oracle,
-    "q365_sssp_cheapest" -> q365Oracle,
-    "q342_pipe_syntax" -> q342Oracle,
-    "q343_lateral_agg" -> q343Oracle,
-    "q313_broadcast_advisor" -> q313Oracle,
-    "q329_recursive_rollup" -> q329Oracle,
-    "q316_pit_join" -> q316Oracle,
-    "q296_hierarchy_shares" -> q296Oracle,
-    "q289_relative_ranks" -> q289Oracle,
-    "q290_ntile_parity" -> q290Oracle,
-    "q291_explode_outer" -> q291Oracle,
-    "q288_spend_gini" -> q288Oracle,
-    "q285_also_bought" -> q285Oracle,
-    "q273_schema_evolution" -> q273Oracle,
-    "q274_bfs_hops" -> q274Oracle,
-    "q268_bag_setops" -> q268Oracle,
-    "q260_shipping_priority" -> q260Oracle,
-    "q261_forecast_revenue" -> q261Oracle,
-    "q262_returned_items" -> q262Oracle,
-    "q263_part_skyline" -> q263Oracle,
-    "q265_histogram_estimate" -> q265Oracle,
-    "q255_label_communities" -> q255Oracle,
-    "q390_modularity" -> q390Oracle,
-    "q244_priority_check" -> q244Oracle,
-    "q245_product_profit" -> q245Oracle,
-    "q246_lateness_by_priority" -> q246Oracle,
-    "q247_order_count_dist" -> q247Oracle,
-    "q248_promo_share" -> q248Oracle,
-    "q249_supplier_variety" -> q249Oracle,
-    "q250_small_qty_revenue" -> q250Oracle,
-    "q251_disjunct_revenue" -> q251Oracle,
-    "q253_idle_customers" -> q253Oracle,
-    "q254_min_cost_supplier" -> q254Oracle,
+  val records: Seq[Query] = Seq(
+    Query("q377_betweenness", q377Betweenness, q377Oracle),
+    Query("q368_sql_sugar", q368SqlSugar, q368Oracle),
+    Query("q365_sssp_cheapest", q365SsspCheapest, q365Oracle),
+    Query("q329_recursive_rollup", q329RecursiveRollup, q329Oracle),
+    Query("q313_broadcast_advisor", q313BroadcastAdvisor, q313Oracle),
+    Query("q316_pit_join", q316PitJoin, q316Oracle),
+    Query("q296_hierarchy_shares", q296HierarchyShares, q296Oracle),
+    Query("q289_relative_ranks", q289RelativeRanks, q289Oracle),
+    Query("q290_ntile_parity", q290NtileParity, q290Oracle),
+    Query("q291_explode_outer", q291ExplodeOuter, q291Oracle),
+    Query("q288_spend_gini", q288SpendGini, q288Oracle),
+    Query("q285_also_bought", q285AlsoBought, q285Oracle),
+    Query("q273_schema_evolution", q273SchemaEvolution, q273Oracle),
+    Query("q274_bfs_hops", q274BfsHops, q274Oracle),
+    Query("q268_bag_setops", q268BagSetOps, q268Oracle),
+    Query("q260_shipping_priority", q260ShippingPriority, q260Oracle),
+    Query("q261_forecast_revenue", q261ForecastRevenue, q261Oracle),
+    Query("q262_returned_items", q262ReturnedItems, q262Oracle),
+    Query("q263_part_skyline", q263PartSkyline, q263Oracle),
+    Query("q265_histogram_estimate", q265HistogramEstimate, q265Oracle),
+    Query("q255_label_communities", q255LabelCommunities, q255Oracle),
+    Query("q390_modularity", q390Modularity, q390Oracle),
+    Query("q244_priority_check", q244PriorityCheck, q244Oracle),
+    Query("q245_product_profit", q245ProductProfit, q245Oracle),
+    Query("q246_lateness_by_priority", q246LatenessByPriority, q246Oracle),
+    Query("q247_order_count_dist", q247OrderCountDist, q247Oracle),
+    Query("q248_promo_share", q248PromoShare, q248Oracle),
+    Query("q249_supplier_variety", q249SupplierVariety, q249Oracle),
+    Query("q250_small_qty_revenue", q250SmallQtyRevenue, q250Oracle),
+    Query("q251_disjunct_revenue", q251DisjunctRevenue, q251Oracle),
+    Query("q253_idle_customers", q253IdleCustomers, q253Oracle),
+    Query("q254_min_cost_supplier", q254MinCostSupplier, q254Oracle),
+    Query("q199_corrupt_records", q199CorruptRecords, q199Oracle),
     // the WHERE predicted=actual clause makes the oracle itself assert the
     // profile against the definitional join count — a mismatch empties it
-    "q194_join_size_profile" -> q194Oracle,
-    "q199_corrupt_records" -> q199Oracle,
-    "q178_column_profile" -> q178Oracle,
-    "q179_incremental_join" -> q179Oracle,
+    Query("q194_join_size_profile", q194JoinSizeProfile, q194Oracle),
+    Query("q178_column_profile", q178ColumnProfile, q178Oracle),
+    Query("q179_incremental_join", q179IncrementalJoin, q179Oracle),
     // streaming join maintenance must land exactly on the batch join
-    "q181_stream_incremental_join" -> q181Oracle,
-    "q191_partitioned_write" -> q191Oracle,
-    "q173_local_supplier" -> q173Oracle,
-    "q177_important_parts" -> q177Oracle,
-    "q213_volume_shipping" -> q213Oracle,
-    "q214_market_share" -> q214Oracle,
-    "q215_waiting_supplier" -> q215Oracle,
-    "q223_fd_profile" -> q223Oracle,
-    "q228_kcore" -> q228Oracle,
-    "q234_top_supplier" -> q234Oracle,
-    "q236_eigencentrality" -> q236Oracle,
-    "q238_hits" -> q238Oracle,
-    "q235_big_orders" -> q235Oracle,
-    "q01_pricing_summary" ->
+    Query("q181_stream_incremental_join", EventQueries.fixtureGate(q181StreamIncrementalJoin),
+      q181Oracle),
+    Query("q191_partitioned_write", q191PartitionedWrite, q191Oracle),
+    Query("q173_local_supplier", q173LocalSupplierRevenue, q173Oracle),
+    Query("q177_important_parts", q177ImportantParts, q177Oracle),
+    Query("q213_volume_shipping", q213VolumeShipping, q213Oracle),
+    Query("q214_market_share", q214MarketShare, q214Oracle),
+    Query("q215_waiting_supplier", q215WaitingSupplier, q215Oracle),
+    Query("q223_fd_profile", q223FdProfile, q223Oracle),
+    Query("q228_kcore", EventQueries.fixtureGate(q228KCore), q228Oracle),
+    Query("q234_top_supplier", q234TopSupplier, q234Oracle),
+    Query("q236_eigencentrality", q236Eigencentrality, q236Oracle),
+    Query("q238_hits", q238Hits, q238Oracle),
+    Query("q235_big_orders", q235BigOrders, q235Oracle),
+    Query("q01_pricing_summary", q01PricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |       round(sum(l_quantity), 2) AS sum_qty,
         |       round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -3263,8 +3177,8 @@ object ParityQueries {
         |       round(avg(l_quantity), 4) AS avg_qty,
         |       round(avg(l_discount), 4) AS avg_disc,
         |       count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_star_join" ->
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q02_star_join", q02StarJoin,
       """SELECT r_name, n_name,
         |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
         |       count(*) AS line_count
@@ -3273,91 +3187,78 @@ object ParityQueries {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation   ON c_nationkey = n_nationkey
         |JOIN region   ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-    "q03_window_top_orders" ->
+        |GROUP BY r_name, n_name""".stripMargin),
+    Query("q03_window_top_orders", q03WindowTopOrders,
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |         row_number() OVER (PARTITION BY o_custkey
         |                            ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        |  FROM orders) WHERE rn <= 3""".stripMargin,
-    "q04_topk" ->
+        |  FROM orders) WHERE rn <= 3""".stripMargin),
+    Query("q04_topk", q04TopK,
       """SELECT l_orderkey, l_linenumber, l_extendedprice
         |FROM lineitem
         |ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
-        |LIMIT 100""".stripMargin,
-    "q05_setops" ->
+        |LIMIT 100""".stripMargin),
+    Query("q05_setops", q05SetOps,
       """SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
         |UNION
         |SELECT c_custkey FROM customer WHERE c_acctbal > 5000
         |EXCEPT
-        |SELECT c_custkey FROM customer WHERE c_nationkey = 3""".stripMargin,
-    "q06_rollup" ->
+        |SELECT c_custkey FROM customer WHERE c_nationkey = 3""".stripMargin),
+    Query("q06_rollup", q06Rollup,
       """SELECT l_returnflag, l_linestatus,
         |       count(*) AS line_count,
         |       count(DISTINCT l_partkey) AS distinct_parts,
         |       round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q07_envelope" ->
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin),
+    Query("q07_envelope", q07Envelope,
       """SELECT 1704067200000 AS time,
         |       c_custkey AS user_id,
         |       'databricks_import_canary_test_event' AS event_type,
         |       printf('{"name":"%s","nation":%d,"segment":"%s"}',
         |              c_name, c_nationkey, c_mktsegment) AS user_properties
-        |FROM customer""".stripMargin,
-    "q08_cdc_event" ->
+        |FROM customer""".stripMargin),
+    Query("q08_cdc_event", q08CdcEvent,
       """SELECT event_id, user_id, event_type, value FROM events
         |WHERE (CASE WHEN event_id % 10 < 6 THEN 'insert'
         |            WHEN event_id % 10 < 8 THEN 'update_postimage'
         |            WHEN event_id % 10 = 8 THEN 'update_preimage'
-        |            ELSE 'delete' END) = 'insert'""".stripMargin,
-    "q09_cdc_property" ->
+        |            ELSE 'delete' END) = 'insert'""".stripMargin),
+    Query("q09_cdc_property", q09CdcProperty,
       """SELECT event_id, user_id, event_type, value FROM events
         |WHERE (CASE WHEN event_id % 10 < 6 THEN 'insert'
         |            WHEN event_id % 10 < 8 THEN 'update_postimage'
         |            WHEN event_id % 10 = 8 THEN 'update_preimage'
-        |            ELSE 'delete' END) IN ('insert', 'update_postimage')""".stripMargin,
-    "q10_void_scrub" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity AS s_q FROM lineitem",
-    "q11_sql_rewrite" ->
+        |            ELSE 'delete' END) IN ('insert', 'update_postimage')""".stripMargin),
+    Query("q10_void_scrub", q10VoidScrub,
+      "SELECT l_orderkey, l_linenumber, l_quantity AS s_q FROM lineitem"),
+    Query("q11_sql_rewrite", q11SqlRewrite,
       """SELECT l_returnflag, 'main.tpch.lineitem' AS src_table, count(*) AS cnt
-        |FROM lineitem WHERE l_quantity > 10 GROUP BY l_returnflag""".stripMargin,
-    "q19_cube" ->
-      """SELECT o_orderpriority, o_orderstatus,
-        |       grouping(o_orderpriority)::INT AS g_pri,
-        |       grouping(o_orderstatus)::INT AS g_st,
-        |       count(*) AS n,
-        |       round(sum(o_totalprice), 2) AS total
-        |FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)""".stripMargin,
-    "q82_grouping_sets" -> q82Oracle,
-    "q84_above_cust_avg" -> q84Oracle,
-    "q94_decimal_money" -> q94Oracle,
-    "q18_semi_anti" ->
+        |FROM lineitem WHERE l_quantity > 10 GROUP BY l_returnflag""".stripMargin),
+    Query("q342_pipe_syntax", q342PipeSyntax, q342Oracle),
+    Query("q343_lateral_agg", q343LateralAgg, q343Oracle),
+    Query("q18_semi_anti", q18SemiAnti,
       """WITH big AS (SELECT DISTINCT l_orderkey FROM lineitem WHERE l_quantity > 45),
         |s AS (SELECT o_orderpriority, count(*)::BIGINT AS n_semi FROM orders
         |      WHERE o_orderkey IN (SELECT l_orderkey FROM big) GROUP BY 1),
         |a AS (SELECT o_orderpriority, count(*)::BIGINT AS n_anti FROM orders
         |      WHERE o_orderkey NOT IN (SELECT l_orderkey FROM big) GROUP BY 1)
-        |SELECT o_orderpriority, n_semi, n_anti FROM s JOIN a USING (o_orderpriority)""".stripMargin,
-    "q63_timestamp_travel" ->
-      """SELECT event_type, count(*)::BIGINT AS n, sum(event_id)::BIGINT AS sum_id
-        |FROM events WHERE event_id % 2 = 0 GROUP BY event_type""".stripMargin,
-    "q64_cdc_materialize" -> q64Oracle,
-    // the per-commit streaming fold must reach the batch compaction exactly
-    "q99_stream_materialize" -> q64Oracle,
-    "q123_incremental_agg" -> q123Oracle,
-    "q124_scd2_history" -> q124Oracle,
-    "q130_stream_incremental_agg" -> q123Oracle,
-    "q132_pagerank" -> q132Oracle,
-    "q154_triangles" -> q154Oracle,
-    "q135_snapshot_diff" -> q135Oracle,
-    "q100_csv_roundtrip" -> q100Oracle,
-    "q101_orc_roundtrip" -> q101Oracle,
-    "q153_jsonl_roundtrip" -> q153Oracle,
-    "q16_snapshot_travel" ->
+        |SELECT o_orderpriority, n_semi, n_anti FROM s JOIN a USING (o_orderpriority)""".stripMargin),
+    Query("q19_cube", q19Cube,
+      """SELECT o_orderpriority, o_orderstatus,
+        |       grouping(o_orderpriority)::INT AS g_pri,
+        |       grouping(o_orderstatus)::INT AS g_st,
+        |       count(*) AS n,
+        |       round(sum(o_totalprice), 2) AS total
+        |FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)""".stripMargin),
+    Query("q82_grouping_sets", q82GroupingSets, q82Oracle),
+    Query("q84_above_cust_avg", q84AboveCustomerAvg, q84Oracle),
+    Query("q94_decimal_money", q94DecimalMoney, q94Oracle),
+    Query("q16_snapshot_travel", q16SnapshotTravel,
       """SELECT event_type, count(*)::BIGINT AS n, sum(event_id)::BIGINT AS sum_id,
         |       min(event_id)::BIGINT AS min_id, max(event_id)::BIGINT AS max_id
-        |FROM events WHERE event_id % 2 = 0 GROUP BY event_type""".stripMargin,
-    "q17_cdf_window" ->
+        |FROM events WHERE event_id % 2 = 0 GROUP BY event_type""".stripMargin),
+    Query("q17_cdf_window", q17CdfWindow,
       """SELECT event_type, count(*)::BIGINT AS n, sum(event_id)::BIGINT AS sum_id
         |FROM events
         |WHERE event_id % 3 IN (1, 2)
@@ -3365,14 +3266,32 @@ object ParityQueries {
         |            WHEN event_id % 10 < 8 THEN 'update_postimage'
         |            WHEN event_id % 10 = 8 THEN 'update_preimage'
         |            ELSE 'delete' END) = 'insert'
-        |GROUP BY event_type""".stripMargin,
-    "q68_mutability_bypass" ->
+        |GROUP BY event_type""".stripMargin),
+    Query("q63_timestamp_travel", q63TimestampTravel,
+      """SELECT event_type, count(*)::BIGINT AS n, sum(event_id)::BIGINT AS sum_id
+        |FROM events WHERE event_id % 2 = 0 GROUP BY event_type""".stripMargin),
+    Query("q68_mutability_bypass", q68MutabilityBypass,
       """SELECT event_id, user_id, event_type, value,
         |       CASE WHEN event_id % 10 < 6 THEN 'insert'
         |            WHEN event_id % 10 < 8 THEN 'update_postimage'
         |            WHEN event_id % 10 = 8 THEN 'update_preimage'
         |            ELSE 'delete' END AS _change_type,
         |       (event_id % 3 + 1)::BIGINT AS _commit_version
-        |FROM events WHERE event_id % 3 IN (1, 2)""".stripMargin
+        |FROM events WHERE event_id % 3 IN (1, 2)""".stripMargin),
+    Query("q64_cdc_materialize", q64CdcMaterialize, q64Oracle),
+    // the per-commit streaming fold must reach the batch compaction exactly
+    Query("q99_stream_materialize", EventQueries.fixtureGate(q99StreamMaterialize), q64Oracle),
+    Query("q123_incremental_agg", q123IncrementalAgg, q123Oracle),
+    Query("q124_scd2_history", q124Scd2History, q124Oracle),
+    Query("q130_stream_incremental_agg", EventQueries.fixtureGate(q130StreamIncrementalAgg),
+      q123Oracle),
+    Query("q132_pagerank", q132PageRank, q132Oracle),
+    Query("q154_triangles", q154Triangles, q154Oracle),
+    Query("q135_snapshot_diff", q135SnapshotDiff, q135Oracle),
+    Query("q100_csv_roundtrip", q100CsvRoundtrip, q100Oracle),
+    Query("q101_orc_roundtrip", q101OrcRoundtrip, q101Oracle),
+    Query("q153_jsonl_roundtrip", q153JsonlRoundtrip, q153Oracle)
   )
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Query.runs(records)
 }

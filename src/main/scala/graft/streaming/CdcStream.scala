@@ -403,24 +403,6 @@ object CdcStream {
     spark.read.parquet(s"$stateDir/${latest.get}")
   }
 
-  /** Continuous export: the streaming counterpart of the batch unload sink
-    * (K1) — newline-delimited JSON via Spark's native file sink, which gives
-    * exactly-once file output through the checkpoint's file-commit log (the
-    * batch path's idempotence contract, `mode("overwrite")` + full-job
-    * retry, is replaced by the sink's transactional manifest). The returned
-    * query streams until stopped.
-    */
-  def exportStream(
-      df: DataFrame,
-      outputPath: String,
-      checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .format("json")
-      .option("path", outputPath)
-      .option("checkpointLocation", checkpointPath)
-      .outputMode(OutputMode.Append)
-      .start()
-
   /** The OPERABLE streaming analogue of the batch [[graft.engine.Unload]]
     * pipeline, drained with `Trigger.AvailableNow`: each invocation picks
     * up where the checkpoint left off, exports every commit that has
@@ -437,11 +419,11 @@ object CdcStream {
     *
     * Stage parity with the batch path, same single sources of truth:
     * [[readChanges]] (CDC filter semantics), `SqlRewrite` (identifier-aware
-    * view rewrite), the K2 zstd(3) parquet / K1 raw-JSON sink contracts,
-    * and the K5 `maxRecordsPerFile` governor. Exactly-once output comes
-    * from the file sink's transactional commit log rather than the batch
-    * path's overwrite-idempotence. Multi-table SQL is supported to the
-    * extent Structured Streaming supports it (stream-stream joins need
+    * view rewrite), `Writers.sink` (the K2 zstd(3) parquet / K1 raw-JSON
+    * sink contracts and the K5 `maxRecordsPerFile` governor). Exactly-once
+    * output comes from the file sink's transactional commit log rather than
+    * the batch path's overwrite-idempotence. Multi-table SQL is supported to
+    * the extent Structured Streaming supports it (stream-stream joins need
     * watermarks on both sides; plain projections/filters/unions always
     * work — the reference's transformation SQL is of that shape). The temp
     * views it registers are dropped before it returns.
@@ -452,8 +434,8 @@ object CdcStream {
       config: graft.engine.JobSpec.JobConfig,
       checkpointRoot: String,
       log: String => Unit = _ => ()): Seq[graft.engine.JobSpec.TableVersionRange] = {
-    import graft.engine.{SqlRewrite, VoidScrub}
-    import graft.engine.JobSpec.{JsonFormat, ParquetFormat, TableVersionRange}
+    import graft.engine.{SqlRewrite, Writers}
+    import graft.engine.JobSpec.TableVersionRange
     val epoch = System.currentTimeMillis()
     val views = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
@@ -467,17 +449,10 @@ object CdcStream {
         table -> view
       }.toMap
       val out = spark.sql(SqlRewrite.rewrite(config.sql, bindings))
-      val sink = config.format match {
-        case JsonFormat => out.writeStream.format("json")
-        case ParquetFormat =>
-          VoidScrub.dropVoidFields(out).writeStream.format("parquet")
-            .option("compression", "zstd")
-            .option("parquet.compression.codec.zstd.level", "3")
-      }
+      val sink = Writers.sink(out, config.format, Some(config.maxRecordsPerFile))
       log(s"Starting available-now streaming export to ${config.outputPath}")
       val progress = drainProgress(spark,
-        sink
-          .option("maxRecordsPerFile", config.maxRecordsPerFile)
+        sink.df.writeStream.format(sink.format).options(sink.options)
           .option("path", config.outputPath)
           .outputMode(OutputMode.Append),
         checkpointRoot)

@@ -1,7 +1,10 @@
 package graft
 
+import graft.ext.ExtQueries
+import graft.queries.{EventQueries, ParityQueries, Query}
+
 /** Smoke coverage of the driver contract: flagship entry returns rows, every
-  * declared query runs at sf0.001, and every oracle key maps to a real query.
+  * declared query runs at sf0.001, and the query records form one registry.
   */
 class SparkEntrySpec extends SparkSpec {
 
@@ -21,6 +24,18 @@ class SparkEntrySpec extends SparkSpec {
   test("oracle keys are a subset of query keys") {
     val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(extra.isEmpty, s"oracles without queries: $extra")
+  }
+
+  test("query names are unique across the modules and every oracle is non-blank") {
+    val records = ParityQueries.records ++ EventQueries.records ++ ExtQueries.records
+    val repeated = records.groupBy(_.name).filter(_._2.size > 1).keySet
+    assert(repeated.isEmpty, s"query names listed more than once: $repeated")
+    assert(SparkEntry.queries.size === records.size)
+    val blank = records.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle: $blank")
+    // the registry rejects a repeated name instead of keeping one of the two
+    val dup = records.head.copy(oracle = "SELECT 1")
+    intercept[IllegalArgumentException](Query.byName(records :+ dup))
   }
 
   test("q113 premise: event_type cardinality stays below k, the sketch's exact regime") {

