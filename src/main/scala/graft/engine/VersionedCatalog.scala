@@ -1,9 +1,16 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSchema, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField,
+  StructType}
 
 import graft.engine.JobSpec.TableVersionRange
 
@@ -28,6 +35,9 @@ import graft.engine.JobSpec.TableVersionRange
   * listing and reading cost O(window), never O(history): a 2-commit window
   * over a 1000-commit history lists the window's files and nothing else.
   * Delta gets the same from its log; here the directory names are the log.
+  * Like Delta's log, the table's [[manifestPath commit manifest]] records
+  * each commit's schema, so a window whose commits share one is read
+  * without opening a footer.
   * With Delta OSS on the cluster this object collapses to
   * `spark.read.format("delta").option("versionAsOf"|"readChangeFeed", ...)`.
   */
@@ -50,10 +60,13 @@ final case class VersionedCatalog(root: String) {
   /** Persist one commit's change rows. `df` must carry `_change_type` and
     * `_commit_timestamp`; `_commit_version` is materialized by the layout.
     *
-    * Also upserts the table's [[manifestPath commit manifest]]: the commit
-    * time is observed on the write itself (`Dataset.observe`, a
-    * per-partition accumulator merge), so a commit does not read its own
-    * directory back, mirroring how Delta appends a log entry per commit.
+    * Also upserts the table's [[manifestPath commit manifest]] with the
+    * commit's time and schema. The time is observed on the write itself
+    * (`Dataset.observe`, a per-partition accumulator merge), so a commit
+    * does not read its own directory back, mirroring how Delta appends a
+    * log entry per commit. The schema is the frame's, made nullable as
+    * Spark's parquet reader makes it: what a footer read of the commit
+    * returns.
     */
   def commitChanges(df: DataFrame, table: String, version: Long): Unit = {
     require(df.columns.contains(CdcFilter.ChangeTypeCol), "change frame needs _change_type")
@@ -69,14 +82,24 @@ final case class VersionedCatalog(root: String) {
     // must see it, but as-of resolution skips it, as the scan path's SQL
     // null comparison does
     val tsUs = if (maxTs.isNullAt(0)) None else Some(maxTs.getLong(0))
-    upsertManifest(spark, table, version, tsUs)
+    upsertManifest(spark, table, version, tsUs, GraftSchema.asNullable(df.schema))
   }
 
-  /** Tiny per-table commit manifest (JSONL: one `{"version":v,
-    * "committed_at_us":t}` line per commit, `t` null when the commit has no
-    * timestamp, rewritten on each commit — tens of bytes per entry). It is
-    * the commit point: an entry is written only after its commit's data is
-    * in place, so the stream source takes its positions from it.
+  /** Tiny per-table commit manifest (JSONL, one line per commit, rewritten
+    * on each commit — tens of bytes per entry):
+    * {{{
+    *   {"version":v,"committed_at_us":t,"schema":"<id>","struct":<StructType JSON>}
+    *   {"version":v,"committed_at_us":t,"schema":"<id>"}
+    * }}}
+    * `t` is null when the commit has no timestamp. `schema` names the
+    * commit's data schema (what a footer read of its directory returns) by
+    * a short hash of its JSON; the lowest version naming an id carries the
+    * schema itself as `struct`, so each distinct schema is stored once.
+    * Entries from older manifests and from the pre-manifest backfill carry
+    * no schema, and a window over them reads a footer.
+    *
+    * It is the commit point: an entry is written only after its commit's
+    * data is in place, so the stream source takes its positions from it.
     * [[versionAsOf]] resolves from this single small file; without it,
     * resolution must LIST the whole `cdf/` tree and read a footer per
     * commit — O(history) driver-side metadata work on a 10k-commit table.
@@ -84,15 +107,26 @@ final case class VersionedCatalog(root: String) {
   private def manifestPath(table: String): String = s"${tablePath(table)}/_commits.json"
 
   private def upsertManifest(
-      spark: SparkSession, table: String, version: Long, tsUs: Option[Long]): Unit = {
+      spark: SparkSession, table: String, version: Long, tsUs: Option[Long],
+      schema: StructType): Unit = {
+    val id = schemaId(schema)
     // first manifest write on a PRE-manifest catalog: backfill the older
     // commits from the cdf tree (one-time migration scan of the two
     // metadata columns) — a partial manifest would otherwise shadow the
     // tree and as-of resolution would lose the history
-    val existing = readManifest(spark, table).getOrElse(backfillFromTree(spark, table, version))
-    val entries = existing.filterNot(_._1 == version) :+ (version -> tsUs)
-    val body = entries.sortBy(_._1)
-      .map { case (v, t) => s"""{"version":$v,"committed_at_us":${t.getOrElse("null")}}""" }
+    val existing = readManifest(spark, table)
+      .getOrElse(Manifest(backfillFromTree(spark, table, version), Map.empty))
+    val schemas = existing.schemas + (id -> schema.json)
+    val stored = scala.collection.mutable.Set.empty[String]
+    val body = (existing.commits.filterNot(_.version == version) :+ Commit(version, tsUs, Some(id)))
+      .sortBy(_.version)
+      .map { case Commit(v, t, id) =>
+        val named = id.fold("") { i =>
+          val struct = schemas.get(i).filter(_ => stored.add(i)).fold("")(j => s""","struct":$j""")
+          s""","schema":"$i"$struct"""
+        }
+        s"""{"version":$v,"committed_at_us":${t.getOrElse("null")}$named}"""
+      }
       .mkString("\n")
     val p = new Path(manifestPath(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -102,7 +136,7 @@ final case class VersionedCatalog(root: String) {
     // never to a partial manifest shadowing the tree)
     val tmp = new Path(manifestPath(table) + ".tmp")
     val out = fs.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(body.getBytes(UTF_8))
     finally out.close()
     fs.delete(p, false)
     if (!fs.rename(tmp, p))
@@ -112,10 +146,10 @@ final case class VersionedCatalog(root: String) {
   /** Per-version max commit micros of every ALREADY-written commit except
     * `excludeVersion` (the one being committed right now — its entry is
     * supplied by the caller). Every commit directory gets an entry; one
-    * without a timestamp gets a null time.
+    * without a timestamp gets a null time. No entry names a schema.
     */
   private def backfillFromTree(
-      spark: SparkSession, table: String, excludeVersion: Long): Seq[(Long, Option[Long])] = {
+      spark: SparkSession, table: String, excludeVersion: Long): Seq[Commit] = {
     val rootPath = cdfRoot(table)
     val others = if (exists(spark, rootPath))
       listCommitVersions(spark, rootPath) - excludeVersion else Set.empty[Long]
@@ -128,34 +162,47 @@ final case class VersionedCatalog(root: String) {
         .filter(col("t").isNotNull)
         .collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      others.toSeq.map(v => v -> times.get(v))
+      others.toSeq.map(v => Commit(v, times.get(v), None))
     }
   }
 
-  private def readManifest(
-      spark: SparkSession, table: String): Option[Seq[(Long, Option[Long])]] = {
+  private def readManifest(spark: SparkSession, table: String): Option[Manifest] = {
     val p = new Path(manifestPath(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
       val body =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        try new String(in.readAllBytes(), UTF_8)
         finally in.close()
-      val entries = body.linesIterator.flatMap {
-        case ManifestLine(v, t) => Some(v.toLong -> Option(t).map(_.toLong))
-        case _ => None
+      val lines = body.linesIterator.collect {
+        case ManifestLine(v, t, id, struct) =>
+          Commit(v.toLong, Option(t).map(_.toLong), Option(id)) -> Option(struct).map(id -> _)
       }.toSeq
+      val commits = lines.map(_._1)
         // drop legacy Long.MinValue sentinels (written by an earlier
         // manifest format for all-null-timestamp commits): as a time a
         // sentinel would match ANY timestamp
-        .filterNot(_._2.contains(Long.MinValue))
+        .filterNot(_.committedAtUs.contains(Long.MinValue))
       // an exists-but-entry-less file (torn write, all-sentinel legacy) is
       // NOT a manifest: callers must fall back to backfill/scan rather
       // than let it shadow the commit tree
-      if (entries.isEmpty) None else Some(entries)
+      if (commits.isEmpty) None else Some(Manifest(commits, lines.flatMap(_._2).toMap))
     }
   }
+
+  /** The data schema every commit of `versions` records, when they all
+    * name the same one; `None` sends the caller to a footer.
+    */
+  private def recordedSchema(
+      manifest: Option[Manifest], versions: Seq[Long]): Option[StructType] =
+    manifest.flatMap { m =>
+      val ids = m.commits.map(c => c.version -> c.schemaId).toMap
+      versions.map(ids.get(_).flatten).distinct match {
+        case Seq(Some(id)) => m.schemas.get(id).map(DataType.fromJson(_).asInstanceOf[StructType])
+        case _ => None
+      }
+    }
 
   // ---- read side ----
 
@@ -169,26 +216,64 @@ final case class VersionedCatalog(root: String) {
   }
 
   /** S2: change rows for versions [start, end] (`table_changes` analogue).
-    * The file index is built over the window's commit directories only, and
-    * the missing-version check stats those same directories: O(window) in
-    * catalog metadata whatever the history length. With a `schema` (a
-    * [[changeSchema]]) the frame takes it instead of inferring one from the
-    * window's footers: the stream source's batches keep the source's
-    * schema and read no footer before their scan.
+    * The file index covers the window's commit directories only, and the
+    * missing-version check stats those same directories: O(window) in
+    * catalog metadata whatever the history length.
+    *
+    * The frame's schema is the one the window's commits record in the
+    * manifest, with `_commit_version` typed as Spark's partition inference
+    * types it, so no footer is read. Only a window with no common recorded
+    * schema (a pre-manifest catalog, backfilled entries, a schema change
+    * inside the window) infers it from a footer. The window's directories
+    * are listed here, so a file lost after this call fails the read
+    * (recovery O4) instead of vanishing from the frame.
     */
-  def changes(
+  def changes(spark: SparkSession, table: String, start: Long, end: Long): DataFrame =
+    window(spark, table, start, end, None, listNow = true)
+
+  /** [[changes]] as a stream batch with the source's `schema` (a
+    * [[changeSchema]]), so it reads no footer either. The window is listed
+    * when the batch is planned, so a batch Spark builds and drops (a
+    * restarted source's re-announced batch) lists nothing.
+    */
+  private[graft] def streamBatch(
+      spark: SparkSession, table: String, start: Long, end: Long, schema: StructType): DataFrame =
+    window(spark, table, start, end, Some(schema), listNow = false)
+
+  /** The one builder of a window's frame. A known schema (given, or
+    * recorded for the whole window) makes a relation over a [[WindowIndex]];
+    * the footer read is kept for windows without one.
+    */
+  private def window(
       spark: SparkSession, table: String, start: Long, end: Long,
-      schema: Option[StructType] = None): DataFrame = {
+      schema: Option[StructType], listNow: Boolean): DataFrame = {
     require(start <= end, s"empty change window for $table: $start-$end")
     val dirs = (start to end).map(v => v -> commitPath(table, v))
     val missing = dirs.collect { case (v, dir) if !exists(spark, dir) => v }
     if (missing.nonEmpty)
       throw new MissingCdfFilesException(
         s"$MissingCdfFileSignature: $table missing change files for versions ${missing.mkString(",")}")
-    schema.fold(spark.read)(spark.read.schema(_))
-      .option("basePath", cdfRoot(table))
-      .parquet(dirs.map(_._2): _*)
-      .where(col("_commit_version").between(start, end))
+    val options = Map("basePath" -> cdfRoot(table))
+    val known = schema
+      .map { s =>
+        val (version, data) = s.partition(_.name == CommitVersionCol)
+        (StructType(data), version.headOption)
+      }
+      .orElse(recordedSchema(readManifest(spark, table), start to end).map(_ -> None))
+    val frame = known match {
+      case Some((data, version)) =>
+        val partition = StructType(Seq(version.getOrElse(versionField(spark, end))))
+        val paths = dirs.map { case (_, dir) =>
+          val p = new Path(dir)
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+        }
+        val index = new WindowIndex(spark, paths, options, partition)
+        if (listNow) index.inputFiles
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, partition,
+          GraftSchema.asNullable(data), None, new ParquetFileFormat, options)(spark))
+      case None => spark.read.options(options).parquet(dirs.map(_._2): _*)
+    }
+    frame.where(col(CommitVersionCol).between(start, end))
   }
 
   /** Every committed version of `table`, ascending: the manifest's
@@ -197,14 +282,15 @@ final case class VersionedCatalog(root: String) {
     * has no commit.
     */
   def commitVersions(spark: SparkSession, table: String): Seq[Long] =
-    readManifest(spark, table).map(_.map(_._1)).getOrElse {
+    readManifest(spark, table).map(_.commits.map(_.version)).getOrElse {
       val rootPath = cdfRoot(table)
       if (exists(spark, rootPath)) listCommitVersions(spark, rootPath).toSeq else Seq.empty
     }.sorted
 
-  /** Schema of [[changes]]' frame, `_commit_version` included, probed from
-    * the newest commit alone: its version from [[commitVersions]], then
-    * that commit's footer. A stream needs its schema up front; a
+  /** Schema of [[changes]]' frame, `_commit_version` included, for a window
+    * of the newest commit alone: its version from [[commitVersions]], then
+    * the schema that commit records, so no footer is read (a commit without
+    * one falls back to its footer). A stream needs its schema up front; a
     * commit-less table, or a newest commit whose directory is gone, raises
     * the missing-CDF signature the recovery protocol classifies on.
     */
@@ -212,11 +298,7 @@ final case class VersionedCatalog(root: String) {
     val version = commitVersions(spark, table).lastOption.getOrElse(
       throw new MissingCdfFilesException(
         s"$MissingCdfFileSignature: no change data for $table (${cdfRoot(table)})"))
-    val dir = commitPath(table, version)
-    if (!exists(spark, dir))
-      throw new MissingCdfFilesException(
-        s"$MissingCdfFileSignature: $table missing change files for version $version")
-    spark.read.option("basePath", cdfRoot(table)).parquet(dir).schema
+    window(spark, table, version, version, None, listNow = false).schema
   }
 
   /** The reference's `fetch_data` dispatch (`unload_databricks_data_to_s3.py:196-200`):
@@ -268,8 +350,8 @@ final case class VersionedCatalog(root: String) {
         s"$MissingCdfFileSignature: no commit history for $table ($rootPath)")
     val tsUs = ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
     val resolved = readManifest(spark, table) match {
-      case Some(entries) =>
-        entries.collect { case (v, Some(t)) if t <= tsUs => v }.maxOption
+      case Some(manifest) =>
+        manifest.commits.collect { case Commit(v, Some(t), _) if t <= tsUs => v }.maxOption
       case _ =>
         // the Hive-style partition column discovers as INT for small
         // versions — normalize to long before the max
@@ -312,7 +394,53 @@ object VersionedCatalog {
     */
   private def maxCommitMicros: Column = max(unix_micros(col("_commit_timestamp").cast("timestamp")))
 
+  private val CommitVersionCol = "_commit_version"
+
+  /** A schema's manifest id: the first 16 hex digits of its JSON's SHA-256. */
+  private[engine] def schemaId(schema: StructType): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(schema.json.getBytes(UTF_8))
+      .take(8).map("%02x".format(_)).mkString
+
+  /** `_commit_version` as Spark's partition inference types a window's
+    * directory names up to `newest`: the narrowest integral type holding
+    * them, or a string when the session turns type inference off.
+    */
+  private def versionField(spark: SparkSession, newest: Long): StructField = {
+    val inferred =
+      spark.conf.get("spark.sql.sources.partitionColumnTypeInference.enabled").toBoolean
+    StructField(CommitVersionCol,
+      if (!inferred) StringType else if (newest <= Int.MaxValue) IntegerType else LongType)
+  }
+
+  /** A commit's manifest entry. */
+  private final case class Commit(version: Long, committedAtUs: Option[Long], schemaId: Option[String])
+
+  /** A parsed manifest: its commits and the schema JSON each id names. */
+  private final case class Manifest(commits: Seq[Commit], schemas: Map[String, String])
+
+  /** A change window's file index, listing the window's commit directories
+    * (a Spark [[InMemoryFileIndex]]) on first use. `partitionSchema` is
+    * `_commit_version`'s field, known without a listing.
+    */
+  private final class WindowIndex(
+      spark: SparkSession,
+      dirs: Seq[Path],
+      options: Map[String, String],
+      override val partitionSchema: StructType) extends FileIndex {
+    private lazy val listed = new InMemoryFileIndex(
+      spark, dirs, options, Some(partitionSchema), FileStatusCache.getOrCreate(spark))
+
+    override def rootPaths: Seq[Path] = dirs
+    override def listFiles(
+        partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      listed.listFiles(partitionFilters, dataFilters)
+    override def inputFiles: Array[String] = listed.inputFiles
+    override def refresh(): Unit = listed.refresh()
+    override def sizeInBytes: Long = listed.sizeInBytes
+  }
+
   private val VersionDir = "v=(\\d+)".r
   private val CommitDir = "_commit_version=(\\d+)".r
-  private val ManifestLine = """\{"version":(\d+),"committed_at_us":(?:null|(-?\d+))\}""".r
+  private val ManifestLine =
+    """\{"version":(\d+),"committed_at_us":(?:null|(-?\d+))(?:,"schema":"(\w+)"(?:,"struct":(\{.*\}))?)?\}""".r
 }

@@ -17,10 +17,12 @@ import graft.engine.VersionedCatalog
   *     [[VersionedCatalog.commitVersions]], read from the table's
   *     `_commits.json`, which gets a commit's entry only once its data is in
   *     place. The first batch starts at the oldest committed version.
-  *   - A batch `(start, end]` is [[VersionedCatalog.changes]] over
-  *     `start+1 .. end` with the source's schema: it lists the window's
-  *     commit directories and nothing else, and a missing commit fails it
-  *     with the catalog's missing-CDF signature.
+  *   - A batch `(start, end]` is the [[VersionedCatalog.changes]] window
+  *     `start+1 .. end` with the source's schema: it reads no footer, lists
+  *     the window's commit directories and nothing else, and only when it
+  *     is planned, so the batch Spark re-announces to a restarted source
+  *     and drops lists nothing. A missing commit fails it with the
+  *     catalog's missing-CDF signature.
   *   - `maxCommitsPerTrigger` bounds a batch in commits. `Trigger.Once`
   *     reads everything in one batch; `Trigger.AvailableNow` drains the
   *     commits present when the query starts in bounded batches, then
@@ -75,7 +77,7 @@ final class CdcSource(
     // query stood still) and drops the frame
     val batch =
       if (first > last) spark.createDataFrame(java.util.List.of[Row](), schema)
-      else catalog.changes(spark, table, first, last, Some(schema))
+      else catalog.streamBatch(spark, table, first, last, schema)
     GraftStream.batchOf(batch, this)
   }
 
@@ -124,7 +126,8 @@ object CdcSource {
 /** `readStream.format(classOf[CdcSourceProvider].getName)` with the options
   * `root` (the catalog root) and `table`, and optionally
   * `maxCommitsPerTrigger` ([[CdcSource.DefaultMaxCommitsPerTrigger]]). Without a `.schema(...)` the
-  * schema is probed from the newest commit ([[VersionedCatalog.changeSchema]]).
+  * schema is read from the manifest: the one the newest commit records
+  * ([[VersionedCatalog.changeSchema]]).
   */
 final class CdcSourceProvider extends StreamSourceProvider {
 

@@ -54,9 +54,10 @@ object CdcStream {
 
   /** Streaming CDF scan: the continuous analogue of S2 + P1/P2, one
     * [[CdcSource]] batch per at most `maxCommitsPerTrigger` commits. The
-    * schema is probed from the newest commit when the stream is built; a
-    * commit-less table raises the typed missing-CDF signature the recovery
-    * protocol classifies on.
+    * schema is read from the manifest (the newest commit's record) when the
+    * stream is built, so building it runs no job; a commit-less table
+    * raises the typed missing-CDF signature the recovery protocol
+    * classifies on.
     */
   def readChanges(
       spark: SparkSession,

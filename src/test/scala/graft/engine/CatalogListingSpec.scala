@@ -174,49 +174,64 @@ class CatalogListingSpec extends SparkSpec with BeforeAndAfterAll {
     classified(cat.changeSchema(spark, "main.test.empty"))
   }
 
-  test("a 2-commit drain lists the same directories at every history length, no root") {
+  /** Per history length n, the listings of two drains of a stream that
+    * has exported commits 1..n+1 in one whole-history batch: the drain of
+    * commits n+2, n+3 (after the whole-history batch), then the drain of
+    * n+4, n+5 (after a 2-commit batch). Commit dirs are named new2..new5.
+    */
+  private lazy val drainListings: Seq[(Int, Seq[(String, Int)], Seq[(String, Int)])] = {
     val streamed = "main.test.streamed"
     def frame(v: Long) = Seq((v, "insert")).toDF("id", "_change_type")
       .withColumn("_commit_timestamp", lit("2024-01-02"))
     def commit(cat: VersionedCatalog, vs: Long*): Unit =
       vs.foreach(v => cat.commitChanges(frame(v), streamed, v))
-    val perLength = Seq(10, 100, 1000).map { n =>
+    Seq(10, 100, 1000).map { n =>
       val cat = history(n, streamed)
       val config = JobSpec.JobConfig(
         tables = Seq(JobSpec.TableVersionRange(streamed, 1L, 1L)),
         dataType = JobSpec.Event,
         sql = s"SELECT id FROM $streamed",
         outputPath = s"$work/drain$n/out")
-      def drain() = CdcStream.unloadAvailableNow(spark, cat, config, s"$work/drain$n/ckpt")
-      // the first commit backfills the manifest from the tree; the first
-      // drain exports the whole history, the second a 2-commit window
-      commit(cat, n + 1L)
-      assert(drain() === Seq(JobSpec.TableVersionRange(streamed, 1L, n + 1L)))
-      commit(cat, n + 2L, n + 3L)
-      drain()
-      commit(cat, n + 4L, n + 5L)
-      val jobs = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
-      val (listed, exported) = CountingFileSystem.counted(drain())
-      assert(exported === Seq(JobSpec.TableVersionRange(streamed, n + 4L, n + 5L)))
-      assert(HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount === jobs,
-        s"$n commits: a parallel listing job ran")
       val root = cat.cdfRoot(streamed).stripPrefix(s"${CountingFileSystem.Scheme}://")
-      // the same calls, named relative to the history length
-      n -> listed.map { case (dir, statuses) =>
-        (n + 2 to n + 5).foldLeft(dir.stripPrefix(root)) { (d, v) =>
-          d.replace(s"_commit_version=$v", s"new${v - n}")
-        } -> statuses
+      def drain(first: Long): Seq[(String, Int)] = {
+        val jobs = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
+        val (listed, exported) = CountingFileSystem.counted(
+          CdcStream.unloadAvailableNow(spark, cat, config, s"$work/drain$n/ckpt"))
+        assert(exported === Seq(JobSpec.TableVersionRange(streamed, n + first, n + first + 1)))
+        assert(HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount === jobs,
+          s"$n commits: a parallel listing job ran")
+        // the same calls, named relative to the history length
+        listed.map { case (dir, statuses) =>
+          (n + 2 to n + 5).foldLeft(dir.stripPrefix(root)) { (d, v) =>
+            d.replace(s"_commit_version=$v", s"new${v - n}")
+          } -> statuses
+        }
       }
+      // the first commit backfills the manifest from the tree; the first
+      // drain exports the whole history
+      commit(cat, n + 1L)
+      assert(CdcStream.unloadAvailableNow(spark, cat, config, s"$work/drain$n/ckpt") ===
+        Seq(JobSpec.TableVersionRange(streamed, 1L, n + 1L)))
+      commit(cat, n + 2L, n + 3L)
+      val afterHistory = drain(2L)
+      commit(cat, n + 4L, n + 5L)
+      (n, afterHistory, drain(4L))
     }
-    val (_, shortest) = perLength.head
-    // the schema probe reads the newest commit; Spark re-announces the
-    // checkpoint's last batch (new2, new3) to a restarted v1 source before
-    // it asks for new offsets; the batch lists its two commits. Each commit
-    // dir holds a part file and _SUCCESS.
-    assert(shortest === Seq("/new5", "/new2", "/new3", "/new4", "/new5").map(_ -> 2),
-      s"listings: $shortest")
-    perLength.foreach { case (n, listed) =>
-      assert(listed === shortest, s"$n commits listed $listed")
+  }
+
+  test("a 2-commit drain lists the same directories at every history length, no root") {
+    // the schema comes from the manifest and the batch Spark re-announces
+    // to the restarted source (new2, new3) is never planned: only the
+    // window's two commits are listed. Each commit dir holds a part file
+    // and _SUCCESS.
+    drainListings.foreach { case (n, _, listed) =>
+      assert(listed === Seq("/new4", "/new5").map(_ -> 2), s"$n commits listed $listed")
+    }
+  }
+
+  test("the drain after a whole-history batch lists only its own window") {
+    drainListings.foreach { case (n, listed, _) =>
+      assert(listed === Seq("/new2", "/new3").map(_ -> 2), s"$n commits listed $listed")
     }
   }
 }

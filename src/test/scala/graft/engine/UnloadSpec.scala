@@ -96,13 +96,19 @@ class UnloadSpec extends SparkSpec with BeforeAndAfterAll {
     val cat = freshCatalog("cobs")
     val manifest = Paths.get(s"$work/cobs/${table.replace('.', '/')}/_commits.json")
     // the manifest a commit that read its own directory back would write:
-    // per commit the max commit micros, and a null entry when that is null
-    def readBack(versions: Seq[Long]): String = versions.map { v =>
-      val r = spark.read.parquet(cat.commitPath(table, v))
-        .agg(max(unix_micros(col("_commit_timestamp").cast("timestamp")))).head()
-      val t = if (r.isNullAt(0)) "null" else r.getLong(0).toString
-      s"""{"version":$v,"committed_at_us":$t}"""
-    }.mkString("\n")
+    // per commit the max commit micros, and a null entry when that is null;
+    // the footer's schema by id, stored on the first line that names it
+    def readBack(versions: Seq[Long]): String = {
+      val stored = scala.collection.mutable.Set.empty[String]
+      versions.map { v =>
+        val commit = spark.read.parquet(cat.commitPath(table, v))
+        val r = commit.agg(max(unix_micros(col("_commit_timestamp").cast("timestamp")))).head()
+        val t = if (r.isNullAt(0)) "null" else r.getLong(0).toString
+        val id = VersionedCatalog.schemaId(commit.schema)
+        val struct = if (stored.add(id)) s""","struct":${commit.schema.json}""" else ""
+        s"""{"version":$v,"committed_at_us":$t,"schema":"$id"$struct}"""
+      }.mkString("\n")
+    }
     def frame(ids: Seq[Long], ts: org.apache.spark.sql.Column) =
       ids.map(i => (i, s"name_$i", "insert")).toDF("id", "name", "_change_type")
         .withColumn("_commit_timestamp", ts)

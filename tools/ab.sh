@@ -14,7 +14,9 @@
 # gap between the medians against the base's interquartile range, and how
 # many same-seed pairs the working tree won (ties count for neither side;
 # the direction is the metric's "better" in BENCHMARK.json). The clones are
-# deleted on exit.
+# deleted on exit. Exits 1 after the summary when any run printed no result,
+# failed its output check or had failed ops: such a side's timings are not
+# comparable.
 set -euo pipefail
 if [ $# -ne 3 ]; then
   echo "usage: $0 <base-ref> <workload> <pairs>" >&2
@@ -92,7 +94,13 @@ for m in names:
     print(f"  {m}: {quart('base')} -> {quart('tree')}{change}; "
           f"gap {abs(tree - base):.3f} vs IQR {q['base'][2] - q['base'][0]:.3f}; "
           f"working tree won {won}/{len(pairs)}")
+bad = 0
 for s, rs in runs.items():
     ok = sum(1 for r in rs.values() if r.get("correct") and r.get("failed") == 0)
+    bad += len(rs) - ok
     print(f"  {s}: {ok}/{len(rs)} runs correct with 0 failed ops")
+if bad:
+    print(f"{bad} run(s) printed no result, failed the output check or had failed ops",
+          file=sys.stderr)
+    sys.exit(1)
 EOF
