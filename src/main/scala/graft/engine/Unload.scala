@@ -75,12 +75,15 @@ object Unload {
       forceLatestOnly: Boolean,
       log: String => Unit): Unit = {
 
-    val sqlToRun = buildViewsForTables(spark, catalog, config, results, forceLatestOnly, log, views)
+    val viewRows = mutable.Map.empty[String, Long]
+    val sqlToRun =
+      buildViewsForTables(spark, catalog, config, results, forceLatestOnly, log, views, viewRows)
 
     log("Creating DataFrame with SQL transformation (execution deferred)")
     var exportData: DataFrame = spark.sql(sqlToRun)
 
     // count paid by the sizing step, if any — reused by the meta sidecar
+    // (a count the commit manifest records sizes only: see Partitioning)
     var countedRows: Option[Long] = None
     var plannedPartitions: Option[Int] = None
     // K5 file-size guard, passed to the one write (Coalesce only)
@@ -89,7 +92,7 @@ object Unload {
     exportData = config.strategy match {
       case Repartition =>
         val (n, cnt) = Partitioning.calculateNumPartitionsWithCount(
-          exportData, config.maxRecordsPerFile, config.targetPartitions, log)
+          exportData, config.maxRecordsPerFile, config.targetPartitions, log, viewRows.toMap)
         countedRows = cnt
         plannedPartitions = Some(n)
         log(s"Planning repartition to $n partitions (will execute during write)")
@@ -97,7 +100,7 @@ object Unload {
       case Coalesce =>
         maxRecordsPerFile = Some(config.maxRecordsPerFile)
         val (n, cnt) = Partitioning.calculateNumPartitionsWithCount(
-          exportData, config.maxRecordsPerFile, config.targetPartitions, log)
+          exportData, config.maxRecordsPerFile, config.targetPartitions, log, viewRows.toMap)
         countedRows = cnt
         plannedPartitions = Some(n)
         log(s"Planning coalesce to $n partitions (will execute during write)")
@@ -154,7 +157,9 @@ object Unload {
   }
 
   /** Stage 1+2: per-table fetch/filter/view with O3 fallback; returns the
-    * rewritten SQL and adds each temp view it registers to `views`.
+    * rewritten SQL and adds each temp view it registers to `views`, and to
+    * `viewRows` with its row count when the commit manifest records one
+    * for its whole CDF window (after the CDC filter).
     */
   private[engine] def buildViewsForTables(
       spark: SparkSession,
@@ -163,7 +168,8 @@ object Unload {
       results: mutable.LinkedHashMap[String, TableResult],
       forceLatestOnly: Boolean,
       log: String => Unit,
-      views: mutable.Set[String] = mutable.Set.empty): String = {
+      views: mutable.Set[String] = mutable.Set.empty,
+      viewRows: mutable.Map[String, Long] = mutable.Map.empty): String = {
 
     val epoch = System.currentTimeMillis()
     val bindings = mutable.LinkedHashMap.empty[String, String]
@@ -175,11 +181,13 @@ object Unload {
       log(s"Processing table: $table, version range: ${range.start}-${range.end}")
 
       def fetchAndCreateView(r: TableVersionRange): String = {
-        var df = catalog.fetchData(spark, r)
-        if (!config.mutabilityMode) df = CdcFilter.filterData(df, config.dataType)
+        val (fetched, counts) = catalog.fetchCounted(spark, r)
+        val df = if (config.mutabilityMode) fetched else CdcFilter.filterData(fetched, config.dataType)
         val view = SqlRewrite.tempViewName(table, epoch)
         df.createOrReplaceTempView(view)
         views += view
+        counts.foreach(c =>
+          viewRows(view) = CdcFilter.keptRows(c, config.dataType, config.mutabilityMode))
         view
       }
 

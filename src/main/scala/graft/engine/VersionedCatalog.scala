@@ -3,7 +3,7 @@ package graft.engine
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, GraftSchema, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSchema, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache, HadoopFsRelation,
   InMemoryFileIndex, PartitionDirectory}
@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField,
   StructType}
 
+import graft.engine.CdcFilter.ChangeCounts
 import graft.engine.JobSpec.TableVersionRange
 
 /** Versioned-table catalog: snapshot time travel + change-data-feed reads
@@ -36,8 +37,9 @@ import graft.engine.JobSpec.TableVersionRange
   * over a 1000-commit history lists the window's files and nothing else.
   * Delta gets the same from its log; here the directory names are the log.
   * Like Delta's log, the table's [[manifestPath commit manifest]] records
-  * each commit's schema, so a window whose commits share one is read
-  * without opening a footer.
+  * each commit's schema and row counts, so a window whose commits share a
+  * schema is read without opening a footer, and its size is known without
+  * reading its rows.
   * With Delta OSS on the cluster this object collapses to
   * `spark.read.format("delta").option("versionAsOf"|"readChangeFeed", ...)`.
   */
@@ -61,42 +63,51 @@ final case class VersionedCatalog(root: String) {
     * `_commit_timestamp`; `_commit_version` is materialized by the layout.
     *
     * Also upserts the table's [[manifestPath commit manifest]] with the
-    * commit's time and schema. The time is observed on the write itself
-    * (`Dataset.observe`, a per-partition accumulator merge), so a commit
-    * does not read its own directory back, mirroring how Delta appends a
-    * log entry per commit. The schema is the frame's, made nullable as
-    * Spark's parquet reader makes it: what a footer read of the commit
-    * returns.
+    * commit's time, row counts and schema. The time and the counts are
+    * observed on the write itself (`Dataset.observe`, a per-partition
+    * accumulator merge), so a commit does not read its own directory back,
+    * mirroring how Delta appends a log entry per commit. The schema is the
+    * frame's, made nullable as Spark's parquet reader makes it: what a
+    * footer read of the commit returns.
     */
   def commitChanges(df: DataFrame, table: String, version: Long): Unit = {
     require(df.columns.contains(CdcFilter.ChangeTypeCol), "change frame needs _change_type")
     val dir = commitPath(table, version)
     val observation = new Observation(s"graft_commit_${System.nanoTime()}")
-    df.observe(observation, maxCommitMicros.as("us")).write.mode("overwrite").parquet(dir)
+    df.observe(observation, commitMetrics.head, commitMetrics.tail: _*)
+      .write.mode("overwrite").parquet(dir)
     val spark = df.sparkSession
     // a lost metric degrades to reading the commit back
-    val maxTs = Writers.observed(observation)
-      .getOrElse(spark.read.parquet(dir).agg(maxCommitMicros).head())
+    val metrics = Writers.observed(observation)
+      .getOrElse(spark.read.parquet(dir).agg(commitMetrics.head, commitMetrics.tail: _*).head())
     // a commit whose timestamps are all null/uncastable (or that has no
     // rows) is recorded with a null time: it is committed, so the stream
     // must see it, but as-of resolution skips it, as the scan path's SQL
     // null comparison does
-    val tsUs = if (maxTs.isNullAt(0)) None else Some(maxTs.getLong(0))
-    upsertManifest(spark, table, version, tsUs, GraftSchema.asNullable(df.schema))
+    upsertManifest(spark, table, version, timeOf(metrics), countsOf(metrics),
+      GraftSchema.asNullable(df.schema))
   }
 
   /** Tiny per-table commit manifest (JSONL, one line per commit, rewritten
     * on each commit — tens of bytes per entry):
     * {{{
-    *   {"version":v,"committed_at_us":t,"schema":"<id>","struct":<StructType JSON>}
-    *   {"version":v,"committed_at_us":t,"schema":"<id>"}
+    *   {"version":v,"committed_at_us":t,"rows":{<counts>},"schema":"<id>","struct":<StructType JSON>}
+    *   {"version":v,"committed_at_us":t,"rows":{<counts>},"schema":"<id>"}
     * }}}
-    * `t` is null when the commit has no timestamp. `schema` names the
-    * commit's data schema (what a footer read of its directory returns) by
-    * a short hash of its JSON; the lowest version naming an id carries the
-    * schema itself as `struct`, so each distinct schema is stored once.
-    * Entries from older manifests and from the pre-manifest backfill carry
-    * no schema, and a window over them reads a footer.
+    * `t` is null when the commit has no timestamp. `rows` holds the
+    * commit's [[CdcFilter.ChangeCounts]] as
+    * `{"all":n,"null":n,"insert":n,"update_postimage":n}`: its rows, and
+    * those whose `_change_type` is null, `insert` and `update_postimage`.
+    * A window whose every commit records them has a known size after the
+    * CDC filter ([[fetchCounted]]), so an unload sizes its output without
+    * a count job. `schema` names the commit's data schema (what a footer
+    * read of its directory returns) by a short hash of its JSON; the lowest
+    * version naming an id carries the schema itself as `struct`, so each
+    * distinct schema is stored once.
+    * Entries from older manifests carry neither `rows` nor a schema, and
+    * entries from the pre-manifest backfill carry `rows` but no schema: a
+    * window over them reads a footer, and one over entries without `rows`
+    * is sized by a count job.
     *
     * It is the commit point: an entry is written only after its commit's
     * data is in place, so the stream source takes its positions from it.
@@ -108,24 +119,29 @@ final case class VersionedCatalog(root: String) {
 
   private def upsertManifest(
       spark: SparkSession, table: String, version: Long, tsUs: Option[Long],
-      schema: StructType): Unit = {
+      counts: ChangeCounts, schema: StructType): Unit = {
     val id = schemaId(schema)
     // first manifest write on a PRE-manifest catalog: backfill the older
-    // commits from the cdf tree (one-time migration scan of the two
+    // commits from the cdf tree (one-time migration scan of the
     // metadata columns) — a partial manifest would otherwise shadow the
     // tree and as-of resolution would lose the history
     val existing = readManifest(spark, table)
       .getOrElse(Manifest(backfillFromTree(spark, table, version), Map.empty))
     val schemas = existing.schemas + (id -> schema.json)
     val stored = scala.collection.mutable.Set.empty[String]
-    val body = (existing.commits.filterNot(_.version == version) :+ Commit(version, tsUs, Some(id)))
+    val body = (existing.commits.filterNot(_.version == version) :+
+        Commit(version, tsUs, Some(id), Some(counts)))
       .sortBy(_.version)
-      .map { case Commit(v, t, id) =>
+      .map { case Commit(v, t, id, rows) =>
+        val counted = rows.fold("") { c =>
+          s""","rows":{"all":${c.rows},"null":${c.untyped},"insert":${c.inserts},""" +
+            s""""update_postimage":${c.postimages}}"""
+        }
         val named = id.fold("") { i =>
           val struct = schemas.get(i).filter(_ => stored.add(i)).fold("")(j => s""","struct":$j""")
           s""","schema":"$i"$struct"""
         }
-        s"""{"version":$v,"committed_at_us":${t.getOrElse("null")}$named}"""
+        s"""{"version":$v,"committed_at_us":${t.getOrElse("null")}$counted$named}"""
       }
       .mkString("\n")
     val p = new Path(manifestPath(table))
@@ -143,10 +159,11 @@ final case class VersionedCatalog(root: String) {
       throw new java.io.IOException(s"could not move $tmp into place at $p")
   }
 
-  /** Per-version max commit micros of every ALREADY-written commit except
-    * `excludeVersion` (the one being committed right now — its entry is
-    * supplied by the caller). Every commit directory gets an entry; one
-    * without a timestamp gets a null time. No entry names a schema.
+  /** Per-version max commit micros and row counts of every ALREADY-written
+    * commit except `excludeVersion` (the one being committed right now —
+    * its entry is supplied by the caller), from one aggregate job. Every
+    * commit directory gets an entry; one without a timestamp gets a null
+    * time, one without rows no counts. No entry names a schema.
     */
   private def backfillFromTree(
       spark: SparkSession, table: String, excludeVersion: Long): Seq[Commit] = {
@@ -155,14 +172,16 @@ final case class VersionedCatalog(root: String) {
       listCommitVersions(spark, rootPath) - excludeVersion else Set.empty[Long]
     if (others.isEmpty) Seq.empty
     else {
-      val times = spark.read.parquet(rootPath)
+      val found = spark.read.parquet(rootPath)
         .filter(col("_commit_version").cast("long") =!= excludeVersion)
         .groupBy(col("_commit_version").cast("long").as("v"))
-        .agg(max(unix_micros(col("_commit_timestamp").cast("timestamp"))).as("t"))
-        .filter(col("t").isNotNull)
+        .agg(commitMetrics.head, commitMetrics.tail: _*)
         .collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      others.toSeq.map(v => Commit(v, times.get(v), None))
+        .map { r =>
+          val m = Row.fromSeq(r.toSeq.tail) // the metrics, after the version
+          r.getLong(0) -> Commit(r.getLong(0), timeOf(m), None, Some(countsOf(m)))
+        }.toMap
+      others.toSeq.map(v => found.getOrElse(v, Commit(v, None, None, None)))
     }
   }
 
@@ -176,8 +195,11 @@ final case class VersionedCatalog(root: String) {
         try new String(in.readAllBytes(), UTF_8)
         finally in.close()
       val lines = body.linesIterator.collect {
-        case ManifestLine(v, t, id, struct) =>
-          Commit(v.toLong, Option(t).map(_.toLong), Option(id)) -> Option(struct).map(id -> _)
+        case ManifestLine(v, t, all, untyped, inserts, postimages, id, struct) =>
+          val rows = Option(all).map(a =>
+            ChangeCounts(a.toLong, untyped.toLong, inserts.toLong, postimages.toLong))
+          Commit(v.toLong, Option(t).map(_.toLong), Option(id), rows) ->
+            Option(struct).map(id -> _)
       }.toSeq
       val commits = lines.map(_._1)
         // drop legacy Long.MinValue sentinels (written by an earlier
@@ -197,11 +219,18 @@ final case class VersionedCatalog(root: String) {
   private def recordedSchema(
       manifest: Option[Manifest], versions: Seq[Long]): Option[StructType] =
     manifest.flatMap { m =>
-      val ids = m.commits.map(c => c.version -> c.schemaId).toMap
-      versions.map(ids.get(_).flatten).distinct match {
+      versions.map(m.byVersion.get(_).flatMap(_.schemaId)).distinct match {
         case Seq(Some(id)) => m.schemas.get(id).map(DataType.fromJson(_).asInstanceOf[StructType])
         case _ => None
       }
+    }
+
+  /** The summed row counts of `versions`, when every one records them. */
+  private def recordedCounts(
+      manifest: Option[Manifest], versions: Seq[Long]): Option[ChangeCounts] =
+    manifest.flatMap { m =>
+      val counts = versions.map(m.byVersion.get(_).flatMap(_.rows))
+      if (counts.forall(_.isDefined)) counts.flatten.reduceOption(_ + _) else None
     }
 
   // ---- read side ----
@@ -229,7 +258,8 @@ final case class VersionedCatalog(root: String) {
     * (recovery O4) instead of vanishing from the frame.
     */
   def changes(spark: SparkSession, table: String, start: Long, end: Long): DataFrame =
-    window(spark, table, start, end, None, listNow = true)
+    window(spark, table, start, end,
+      recordedSchema(readManifest(spark, table), start to end), listNow = true)
 
   /** [[changes]] as a stream batch with the source's `schema` (a
     * [[changeSchema]]), so it reads no footer either. The window is listed
@@ -240,9 +270,10 @@ final case class VersionedCatalog(root: String) {
       spark: SparkSession, table: String, start: Long, end: Long, schema: StructType): DataFrame =
     window(spark, table, start, end, Some(schema), listNow = false)
 
-  /** The one builder of a window's frame. A known schema (given, or
-    * recorded for the whole window) makes a relation over a [[WindowIndex]];
-    * the footer read is kept for windows without one.
+  /** Makes every window's frame. A known schema (the stream's, or
+    * the one the whole window records, with or without `_commit_version`)
+    * makes a relation over a [[WindowIndex]]; the footer read is kept for
+    * windows without one.
     */
   private def window(
       spark: SparkSession, table: String, start: Long, end: Long,
@@ -254,12 +285,10 @@ final case class VersionedCatalog(root: String) {
       throw new MissingCdfFilesException(
         s"$MissingCdfFileSignature: $table missing change files for versions ${missing.mkString(",")}")
     val options = Map("basePath" -> cdfRoot(table))
-    val known = schema
-      .map { s =>
-        val (version, data) = s.partition(_.name == CommitVersionCol)
-        (StructType(data), version.headOption)
-      }
-      .orElse(recordedSchema(readManifest(spark, table), start to end).map(_ -> None))
+    val known = schema.map { s =>
+      val (version, data) = s.partition(_.name == CommitVersionCol)
+      (StructType(data), version.headOption)
+    }
     val frame = known match {
       case Some((data, version)) =>
         val partition = StructType(Seq(version.getOrElse(versionField(spark, end))))
@@ -282,31 +311,50 @@ final case class VersionedCatalog(root: String) {
     * has no commit.
     */
   def commitVersions(spark: SparkSession, table: String): Seq[Long] =
-    readManifest(spark, table).map(_.commits.map(_.version)).getOrElse {
+    versionsOf(spark, table, readManifest(spark, table))
+
+  private def versionsOf(spark: SparkSession, table: String, manifest: Option[Manifest]): Seq[Long] =
+    manifest.map(_.commits.map(_.version)).getOrElse {
       val rootPath = cdfRoot(table)
       if (exists(spark, rootPath)) listCommitVersions(spark, rootPath).toSeq else Seq.empty
     }.sorted
 
   /** Schema of [[changes]]' frame, `_commit_version` included, for a window
     * of the newest commit alone: its version from [[commitVersions]], then
-    * the schema that commit records, so no footer is read (a commit without
-    * one falls back to its footer). A stream needs its schema up front; a
+    * the schema that commit records, both from one read of the manifest, so
+    * no footer is read (a commit without one falls back to its footer). A
+    * stream needs its schema up front; a
     * commit-less table, or a newest commit whose directory is gone, raises
     * the missing-CDF signature the recovery protocol classifies on.
     */
   def changeSchema(spark: SparkSession, table: String): StructType = {
-    val version = commitVersions(spark, table).lastOption.getOrElse(
+    val manifest = readManifest(spark, table)
+    val version = versionsOf(spark, table, manifest).lastOption.getOrElse(
       throw new MissingCdfFilesException(
         s"$MissingCdfFileSignature: no change data for $table (${cdfRoot(table)})"))
-    window(spark, table, version, version, None, listNow = false).schema
+    window(spark, table, version, version, recordedSchema(manifest, Seq(version)),
+      listNow = false).schema
   }
 
   /** The reference's `fetch_data` dispatch (`unload_databricks_data_to_s3.py:196-200`):
     * `start == 0` ⇒ snapshot at `end`; else CDF window `[start, end]`.
     */
   def fetchData(spark: SparkSession, range: TableVersionRange): DataFrame =
-    if (range.isSnapshot) snapshot(spark, range.table, range.end)
-    else changes(spark, range.table, range.start, range.end)
+    fetchCounted(spark, range)._1
+
+  /** [[fetchData]] with the row counts of a CDF window: the sum of what its
+    * commits record, taken from the same read of the manifest as the
+    * window's schema. A snapshot, and a window with a commit that records
+    * no counts, have none.
+    */
+  def fetchCounted(spark: SparkSession, range: TableVersionRange): (DataFrame, Option[ChangeCounts]) =
+    if (range.isSnapshot) (snapshot(spark, range.table, range.end), None)
+    else {
+      val manifest = readManifest(spark, range.table)
+      val versions = range.start to range.end
+      (window(spark, range.table, range.start, range.end, recordedSchema(manifest, versions),
+        listNow = true), recordedCounts(manifest, versions))
+    }
 
   /** `TIMESTAMP AS OF` analogue (Delta's second time-travel axis; the
     * reference only pins by version): resolve `ts` to the greatest commit
@@ -351,7 +399,7 @@ final case class VersionedCatalog(root: String) {
     val tsUs = ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
     val resolved = readManifest(spark, table) match {
       case Some(manifest) =>
-        manifest.commits.collect { case Commit(v, Some(t), _) if t <= tsUs => v }.maxOption
+        manifest.commits.collect { case Commit(v, Some(t), _, _) if t <= tsUs => v }.maxOption
       case _ =>
         // the Hive-style partition column discovers as INT for small
         // versions — normalize to long before the max
@@ -389,10 +437,18 @@ object VersionedCatalog {
 
   final class MissingCdfFilesException(msg: String) extends RuntimeException(msg)
 
-  /** Max `_commit_timestamp` of a commit, as epoch micros: the manifest's
-    * `committed_at_us`.
+  /** A commit's manifest metrics: its max `_commit_timestamp` as epoch
+    * micros (`committed_at_us`), then its [[CdcFilter.ChangeCounts]].
     */
-  private def maxCommitMicros: Column = max(unix_micros(col("_commit_timestamp").cast("timestamp")))
+  private def commitMetrics: Seq[Column] =
+    max(unix_micros(col("_commit_timestamp").cast("timestamp"))).as("us") +:
+      CdcFilter.countColumns.zipWithIndex.map { case (c, i) => c.as(s"rows$i") }
+
+  /** The time and the counts of a [[commitMetrics]] row. */
+  private def timeOf(metrics: Row): Option[Long] =
+    if (metrics.isNullAt(0)) None else Some(metrics.getLong(0))
+  private def countsOf(metrics: Row): ChangeCounts =
+    ChangeCounts(metrics.getLong(1), metrics.getLong(2), metrics.getLong(3), metrics.getLong(4))
 
   private val CommitVersionCol = "_commit_version"
 
@@ -413,10 +469,14 @@ object VersionedCatalog {
   }
 
   /** A commit's manifest entry. */
-  private final case class Commit(version: Long, committedAtUs: Option[Long], schemaId: Option[String])
+  private final case class Commit(
+      version: Long, committedAtUs: Option[Long], schemaId: Option[String],
+      rows: Option[ChangeCounts])
 
   /** A parsed manifest: its commits and the schema JSON each id names. */
-  private final case class Manifest(commits: Seq[Commit], schemas: Map[String, String])
+  private final case class Manifest(commits: Seq[Commit], schemas: Map[String, String]) {
+    lazy val byVersion: Map[Long, Commit] = commits.map(c => c.version -> c).toMap
+  }
 
   /** A change window's file index, listing the window's commit directories
     * (a Spark [[InMemoryFileIndex]]) on first use. `partitionSchema` is
@@ -442,5 +502,7 @@ object VersionedCatalog {
   private val VersionDir = "v=(\\d+)".r
   private val CommitDir = "_commit_version=(\\d+)".r
   private val ManifestLine =
-    """\{"version":(\d+),"committed_at_us":(?:null|(-?\d+))(?:,"schema":"(\w+)"(?:,"struct":(\{.*\}))?)?\}""".r
+    ("""\{"version":(\d+),"committed_at_us":(?:null|(-?\d+))""" +
+      """(?:,"rows":\{"all":(\d+),"null":(\d+),"insert":(\d+),"update_postimage":(\d+)\})?""" +
+      """(?:,"schema":"(\w+)"(?:,"struct":(\{.*\}))?)?\}""").r
 }

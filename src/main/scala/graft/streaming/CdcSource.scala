@@ -16,7 +16,9 @@ import graft.engine.VersionedCatalog
   *   - The latest offset is the newest version of
   *     [[VersionedCatalog.commitVersions]], read from the table's
   *     `_commits.json`, which gets a commit's entry only once its data is in
-  *     place. The first batch starts at the oldest committed version.
+  *     place. The first batch starts at the oldest committed version. An
+  *     AvailableNow query reads the manifest once, when it starts, and
+  *     takes both versions from that read.
   *   - A batch `(start, end]` is the [[VersionedCatalog.changes]] window
   *     `start+1 .. end` with the source's schema: it reads no footer, lists
   *     the window's commit directories and nothing else, and only when it
@@ -43,22 +45,29 @@ final class CdcSource(
 
   require(maxCommitsPerTrigger > 0, s"maxCommitsPerTrigger must be positive: $maxCommitsPerTrigger")
 
-  /** The newest version when an AvailableNow query started: its bound. */
-  private var availableNowEnd: Option[Long] = None
+  /** The oldest and the newest version when an AvailableNow query
+    * started: the start of its first batch and its bound.
+    */
+  private var availableNow: Option[(Long, Long)] = None
 
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = catalog.commitVersions(spark, table).lastOption
+  override def prepareForTriggerAvailableNow(): Unit = {
+    val versions = catalog.commitVersions(spark, table)
+    availableNow = versions.headOption.map(_ -> versions.last)
+  }
 
   override def getDefaultReadLimit: ReadLimit = MaxCommits(maxCommitsPerTrigger)
 
   override def latestOffset(start: StreamOffset, limit: ReadLimit): StreamOffset = {
-    val versions = catalog.commitVersions(spark, table)
-    val first = Option(start).map(versionOf(_) + 1).orElse(versions.headOption)
+    // the manifest is read only when the offset or the AvailableNow bound
+    // leaves a version open
+    lazy val versions = catalog.commitVersions(spark, table)
+    val first = Option(start).map(versionOf(_) + 1)
+      .orElse(availableNow.map(_._1)).orElse(versions.headOption)
     val bound = limit match {
       case MaxCommits(n) => n.toLong
       case _ => Long.MaxValue // Trigger.Once's ReadLimit.allAvailable
     }
-    (first, availableNowEnd.orElse(versions.lastOption)) match {
+    (first, availableNow.map(_._2).orElse(versions.lastOption)) match {
       case (Some(f), Some(newest)) if f <= newest =>
         new CommitOffset(if (newest - f < bound) newest else f + bound - 1)
       case _ => start // nothing new; null before the first commit
@@ -70,7 +79,7 @@ final class CdcSource(
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val last = versionOf(end)
-    val first = start.map(versionOf(_) + 1)
+    val first = start.map(versionOf(_) + 1).orElse(availableNow.map(_._1))
       .getOrElse(catalog.commitVersions(spark, table).headOption.getOrElse(last))
     // equal offsets come only from Spark's restart call, which re-announces
     // the last committed batch (in which this source of a multi-source

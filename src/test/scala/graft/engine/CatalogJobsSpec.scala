@@ -15,8 +15,9 @@ import graft.engine.JobSpec._
 import graft.streaming.CdcStream
 
 /** Catalog reads counted in Spark jobs: a CDF window whose commits record
-  * their schema starts no job of its own, so an unload's first job is its
-  * sizing count and a drain runs one job, its batch.
+  * their schema and row counts starts no job of its own, so an unload that
+  * projects it runs only its write's jobs (a filtered one first runs its
+  * sizing count) and a drain runs one job, its batch.
   */
 class CatalogJobsSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
@@ -63,19 +64,28 @@ class CatalogJobsSpec extends SparkSpec with BeforeAndAfterAll {
 
   private def firstLines(jobs: Seq[String]): Seq[String] = jobs.map(_.takeWhile(_ != '\n'))
 
-  test("an unload over a 2-commit window starts no job before its sizing count") {
-    val cat = catalog("unload")
-    val jobs = jobsOf(Unload.run(spark, cat, JobConfig(
+  private def unload(cat: VersionedCatalog, sql: String, out: String): Seq[String] =
+    jobsOf(Unload.run(spark, cat, JobConfig(
       tables = Seq(TableVersionRange(table, 2L, 3L)),
       dataType = Event,
-      sql = s"SELECT id, name FROM $table",
-      outputPath = s"$work/unload_out",
+      sql = sql,
+      outputPath = s"$work/$out",
       strategy = Repartition)))
-    val sizing = jobs.indexWhere(_.contains("calculateNumPartitionsWithCount"))
-    assert(sizing >= 0, s"no sizing count among $jobs")
-    assert(sizing === 0, s"jobs before the sizing count: ${firstLines(jobs.take(sizing))}")
+
+  test("an unload over a recorded 2-commit window runs only its write's jobs") {
+    val jobs = unload(catalog("unload"), s"SELECT id, name FROM $table", "unload_out")
+    assert(jobs.nonEmpty && jobs.forall(_.contains("writeData")), s"jobs: ${firstLines(jobs)}")
+    assert(!jobs.exists(_.contains("calculateNumPartitionsWithCount")), s"jobs: ${firstLines(jobs)}")
     assert(spark.read.parquet(s"$work/unload_out").select("id").as[Long].collect().sorted ===
       Array(2L, 3L))
+  }
+
+  test("a filtered unload over the same window runs its sizing count first") {
+    val jobs = unload(catalog("filtered"), s"SELECT id, name FROM $table WHERE id > 2", "filtered_out")
+    val (sizing, write) = jobs.span(_.contains("calculateNumPartitionsWithCount"))
+    assert(sizing.nonEmpty, s"jobs: ${firstLines(jobs)}")
+    assert(write.nonEmpty && write.forall(_.contains("writeData")), s"jobs: ${firstLines(jobs)}")
+    assert(spark.read.parquet(s"$work/filtered_out").select("id").as[Long].collect() === Array(3L))
   }
 
   test("readChanges plus one AvailableNow batch starts exactly one job") {

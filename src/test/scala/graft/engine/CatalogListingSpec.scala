@@ -5,8 +5,8 @@ import java.nio.file.{Files, Path => JPath}
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, LocatedFileStatus, Path, RawLocalFileSystem,
-  RemoteIterator}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FilterFileSystem, LocatedFileStatus, Path,
+  RawLocalFileSystem, RemoteIterator}
 import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -16,13 +16,17 @@ import graft.streaming.CdcStream
 
 /** The counting file system: the local file system under the test-only
   * `countfs:` scheme, recording every directory listed through it and the
-  * statuses each listing returned.
+  * statuses each listing returned, and every file opened through it.
   */
 class CountingFileSystem extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: URI = CountingFileSystem.Uri
 }) {
-  import CountingFileSystem.record
+  import CountingFileSystem.{record, recordOpen}
 
+  override def open(p: Path, bufferSize: Int): FSDataInputStream = {
+    recordOpen(p)
+    super.open(p, bufferSize)
+  }
   override def listStatus(p: Path): Array[FileStatus] = record(p, super.listStatus(p))
   override def listLocatedStatus(p: Path): RemoteIterator[LocatedFileStatus] = {
     val statuses = record(p, super.listStatus(p))
@@ -54,17 +58,30 @@ object CountingFileSystem {
     statuses
   }
 
+  /** Opened files, in call order. */
+  private val opens = mutable.ArrayBuffer.empty[String]
+
+  private def recordOpen(p: Path): Unit = opens.synchronized(opens += p.toUri.getPath)
+
   /** The listings `body` makes, and its result. */
   def counted[T](body: => T): (Seq[(String, Int)], T) = {
     val before = listings.synchronized(listings.size)
     val result = body
     (listings.synchronized(listings.drop(before).toList), result)
   }
+
+  /** The files `body` opens, and its result. */
+  def opened[T](body: => T): (Seq[String], T) = {
+    val before = opens.synchronized(opens.size)
+    val result = body
+    (opens.synchronized(opens.drop(before).toList), result)
+  }
 }
 
 /** Catalog metadata cost counted, not timed: the listings a CDF window read,
   * the stream's schema probe and a stream drain make over 10-, 100- and
-  * 1000-commit histories, through a counting file system.
+  * 1000-commit histories, and the commit-manifest reads of a drain and an
+  * unload, through a counting file system.
   */
 class CatalogListingSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
@@ -174,12 +191,17 @@ class CatalogListingSpec extends SparkSpec with BeforeAndAfterAll {
     classified(cat.changeSchema(spark, "main.test.empty"))
   }
 
-  /** Per history length n, the listings of two drains of a stream that
-    * has exported commits 1..n+1 in one whole-history batch: the drain of
-    * commits n+2, n+3 (after the whole-history batch), then the drain of
-    * n+4, n+5 (after a 2-commit batch). Commit dirs are named new2..new5.
+  /** A drain's listings and its number of reads of `_commits.json`. */
+  private final case class Drained(listed: Seq[(String, Int)], manifestReads: Int)
+
+  private def manifestReads(opened: Seq[String]): Int = opened.count(_.endsWith("/_commits.json"))
+
+  /** Per history length n, three drains of a stream: the first exports
+    * commits 1..n+1 in one whole-history batch, the next commits n+2, n+3
+    * (after the whole-history batch), the last n+4, n+5 (after a 2-commit
+    * batch). The listings of the last two name commit dirs new2..new5.
     */
-  private lazy val drainListings: Seq[(Int, Seq[(String, Int)], Seq[(String, Int)])] = {
+  private lazy val drainListings: Seq[(Int, Drained, Drained, Drained)] = {
     val streamed = "main.test.streamed"
     def frame(v: Long) = Seq((v, "insert")).toDF("id", "_change_type")
       .withColumn("_commit_timestamp", lit("2024-01-02"))
@@ -193,29 +215,29 @@ class CatalogListingSpec extends SparkSpec with BeforeAndAfterAll {
         sql = s"SELECT id FROM $streamed",
         outputPath = s"$work/drain$n/out")
       val root = cat.cdfRoot(streamed).stripPrefix(s"${CountingFileSystem.Scheme}://")
-      def drain(first: Long): Seq[(String, Int)] = {
+      def drain(first: Long, last: Long): Drained = {
         val jobs = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
-        val (listed, exported) = CountingFileSystem.counted(
-          CdcStream.unloadAvailableNow(spark, cat, config, s"$work/drain$n/ckpt"))
-        assert(exported === Seq(JobSpec.TableVersionRange(streamed, n + first, n + first + 1)))
-        assert(HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount === jobs,
-          s"$n commits: a parallel listing job ran")
+        val (opened, (listed, exported)) = CountingFileSystem.opened(CountingFileSystem.counted(
+          CdcStream.unloadAvailableNow(spark, cat, config, s"$work/drain$n/ckpt")))
+        assert(exported === Seq(JobSpec.TableVersionRange(streamed, first, last)))
+        // the whole history may pass Spark's parallel-listing threshold
+        if (first > 1L)
+          assert(HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount === jobs,
+            s"$n commits: a parallel listing job ran")
         // the same calls, named relative to the history length
-        listed.map { case (dir, statuses) =>
+        Drained(listed.map { case (dir, statuses) =>
           (n + 2 to n + 5).foldLeft(dir.stripPrefix(root)) { (d, v) =>
             d.replace(s"_commit_version=$v", s"new${v - n}")
           } -> statuses
-        }
+        }, manifestReads(opened))
       }
-      // the first commit backfills the manifest from the tree; the first
-      // drain exports the whole history
+      // the first commit backfills the manifest from the tree
       commit(cat, n + 1L)
-      assert(CdcStream.unloadAvailableNow(spark, cat, config, s"$work/drain$n/ckpt") ===
-        Seq(JobSpec.TableVersionRange(streamed, 1L, n + 1L)))
+      val wholeHistory = drain(1L, n + 1L)
       commit(cat, n + 2L, n + 3L)
-      val afterHistory = drain(2L)
+      val afterHistory = drain(n + 2L, n + 3L)
       commit(cat, n + 4L, n + 5L)
-      (n, afterHistory, drain(4L))
+      (n, wholeHistory, afterHistory, drain(n + 4L, n + 5L))
     }
   }
 
@@ -224,14 +246,47 @@ class CatalogListingSpec extends SparkSpec with BeforeAndAfterAll {
     // to the restarted source (new2, new3) is never planned: only the
     // window's two commits are listed. Each commit dir holds a part file
     // and _SUCCESS.
-    drainListings.foreach { case (n, _, listed) =>
-      assert(listed === Seq("/new4", "/new5").map(_ -> 2), s"$n commits listed $listed")
+    drainListings.foreach { case (n, _, _, last) =>
+      assert(last.listed === Seq("/new4", "/new5").map(_ -> 2), s"$n commits listed ${last.listed}")
     }
   }
 
   test("the drain after a whole-history batch lists only its own window") {
-    drainListings.foreach { case (n, listed, _) =>
-      assert(listed === Seq("/new2", "/new3").map(_ -> 2), s"$n commits listed $listed")
+    drainListings.foreach { case (n, _, after, _) =>
+      assert(after.listed === Seq("/new2", "/new3").map(_ -> 2), s"$n commits listed ${after.listed}")
+    }
+  }
+
+  test("a drain reads the commit manifest at most twice: the schema and the AvailableNow bound") {
+    // the first drain also reads the oldest version for its exported range
+    drainListings.foreach { case (n, whole, after, last) =>
+      val reads = Seq(whole, after, last).map(_.manifestReads)
+      assert(reads.zip(Seq(3, 2, 2)).forall { case (r, most) => r <= most },
+        s"$n commits: manifest reads per drain $reads")
+    }
+  }
+
+  test("an unload reads each table's commit manifest once") {
+    val tables = Seq("main.test.unload_a", "main.test.unload_b")
+    val cat = tables.map(history(10, _)).head
+    tables.foreach { t =>
+      cat.commitChanges(Seq((11L, "insert")).toDF("id", "_change_type")
+        .withColumn("_commit_timestamp", lit("2024-01-02")), t, 11L)
+    }
+    // a projection sized from the manifest, and a join sized by a count job
+    Seq(s"SELECT id FROM ${tables.head}" -> tables.take(1),
+        s"SELECT a.id FROM ${tables.head} a JOIN ${tables(1)} b ON a.id = b.id" -> tables
+    ).foreach { case (sql, read) =>
+      val (opened, _) = CountingFileSystem.opened(Unload.run(spark, cat, JobSpec.JobConfig(
+        tables = read.map(JobSpec.TableVersionRange(_, 10L, 11L)),
+        dataType = JobSpec.Event,
+        sql = sql,
+        outputPath = s"$work/unload_reads${read.size}",
+        strategy = JobSpec.Repartition)))
+      val manifests = opened.filter(_.endsWith("/_commits.json"))
+      assert(manifests.sorted === read.map(t => s"${
+        cat.tablePath(t).stripPrefix(s"${CountingFileSystem.Scheme}://")}/_commits.json").sorted,
+        sql)
     }
   }
 }

@@ -135,12 +135,13 @@ class ChangeSchemaSpec extends SparkSpec with BeforeAndAfterAll {
     assert(inferred(preManifest))
     assertSame(preManifest.schema, footer(cat, table, Seq(1L, 2L)), "pre-manifest")
     assertSame(cat.changeSchema(spark, table), footer(cat, table, Seq(2L)), "pre-manifest newest")
-    // the next commit backfills 1 and 2 without a schema, in the format
-    // manifests had before schemas were recorded; they still resolve
+    // the next commit backfills 1 and 2 with their row counts but without
+    // a schema; they still resolve
     cat.commitChanges(stamped(frames.head, 3), table, 3L)
     assert(Files.readString(manifest).linesIterator.take(2).toSeq === Seq(1, 2).map(d =>
       s"""{"version":$d,"committed_at_us":${java.time.LocalDate.of(2024, 1, d)
-        .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond * 1000000L}}"""))
+        .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond * 1000000L},""" +
+        """"rows":{"all":2,"null":0,"insert":2,"update_postimage":0}}"""))
     assert(cat.commitVersions(spark, table) === Seq(1L, 2L, 3L))
     assert(cat.versionAsOf(spark, table, java.sql.Timestamp.valueOf("2024-01-02 12:00:00")) === 2L)
     Seq(Seq(1L, 2L), Seq(2L, 3L)).foreach { vs =>

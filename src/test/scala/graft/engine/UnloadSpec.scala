@@ -97,16 +97,22 @@ class UnloadSpec extends SparkSpec with BeforeAndAfterAll {
     val manifest = Paths.get(s"$work/cobs/${table.replace('.', '/')}/_commits.json")
     // the manifest a commit that read its own directory back would write:
     // per commit the max commit micros, and a null entry when that is null;
+    // its rows, in all and by null, insert and update_postimage change type;
     // the footer's schema by id, stored on the first line that names it
     def readBack(versions: Seq[Long]): String = {
       val stored = scala.collection.mutable.Set.empty[String]
       versions.map { v =>
         val commit = spark.read.parquet(cat.commitPath(table, v))
-        val r = commit.agg(max(unix_micros(col("_commit_timestamp").cast("timestamp")))).head()
+        val ct = col("_change_type")
+        val r = commit.agg(max(unix_micros(col("_commit_timestamp").cast("timestamp"))),
+          count(lit(1)), count_if(ct.isNull), count_if(ct === "insert"),
+          count_if(ct === "update_postimage")).head()
         val t = if (r.isNullAt(0)) "null" else r.getLong(0).toString
+        val rows = s""""rows":{"all":${r.getLong(1)},"null":${r.getLong(2)},""" +
+          s""""insert":${r.getLong(3)},"update_postimage":${r.getLong(4)}}"""
         val id = VersionedCatalog.schemaId(commit.schema)
         val struct = if (stored.add(id)) s""","struct":${commit.schema.json}""" else ""
-        s"""{"version":$v,"committed_at_us":$t,"schema":"$id"$struct}"""
+        s"""{"version":$v,"committed_at_us":$t,$rows,"schema":"$id"$struct}"""
       }.mkString("\n")
     }
     def frame(ids: Seq[Long], ts: org.apache.spark.sql.Column) =

@@ -10,13 +10,10 @@
 # tree first on even pairs, each run as
 #   python3 perfbench/run.py --workload <workload> --seed i --seconds 14 --trace 0
 # Prints one line per run (side, seed, 1-minute loadavg before the run, the
-# run's correctness and metrics), then per metric each side's quartiles, the
-# gap between the medians against the base's interquartile range, and how
-# many same-seed pairs the working tree won (ties count for neither side;
-# the direction is the metric's "better" in BENCHMARK.json). The clones are
-# deleted on exit. Exits 1 after the summary when any run printed no result,
-# failed its output check or had failed ops: such a side's timings are not
-# comparable.
+# run's correctness and metrics), then the summary and per-metric verdict of
+# tools/ab_verdict.py (gain, worse or unresolved). The clones are deleted on
+# exit. Exits 1 after the summary when any run printed no result, failed its
+# output check or had failed ops: such a side's timings are not comparable.
 set -euo pipefail
 if [ $# -ne 3 ]; then
   echo "usage: $0 <base-ref> <workload> <pairs>" >&2
@@ -63,44 +60,4 @@ for i in $(seq 1 "$PAIRS"); do
   if [ $((i % 2)) -eq 1 ]; then run base "$i"; run tree "$i"; else run tree "$i"; run base "$i"; fi
 done
 
-python3 - "$WORK/runs.txt" "$REPO/BENCHMARK.json" <<'EOF'
-import json, statistics, sys
-runs = {"base": {}, "tree": {}}  # side -> seed -> result
-for line in open(sys.argv[1]):
-    side, seed, load, body = line.split(" ", 3)
-    runs[side][seed] = json.loads(body)
-better = {m["name"]: m["better"] for m in json.load(open(sys.argv[2]))["end_to_end"]}
-
-def value(r, m):
-    return r.get("metrics", {}).get(m, {}).get("value")
-
-names = sorted({m for rs in runs.values() for r in rs.values() for m in r.get("metrics", {})})
-print("base -> working tree: quartiles Q1/median/Q3, median gap vs the base's IQR, pairs won:")
-for m in names:
-    vals = {s: [v for v in (value(r, m) for r in rs.values()) if v is not None]
-            for s, rs in runs.items()}
-    if any(len(v) < 2 for v in vals.values()):
-        print(f"  {m}: fewer than two runs on one side")
-        continue
-    q = {s: statistics.quantiles(v, n=4, method="inclusive") for s, v in vals.items()}
-    base, tree = q["base"][1], q["tree"][1]
-    lower = better.get(m, "lower") == "lower"
-    pairs = [(value(runs["base"][seed], m), value(r, m))
-             for seed, r in runs["tree"].items() if seed in runs["base"]]
-    pairs = [(b, t) for b, t in pairs if b is not None and t is not None]
-    won = sum(1 for b, t in pairs if (t < b if lower else t > b))
-    change = f" ({(tree / base - 1) * 100:+.1f}%)" if base else ""
-    quart = lambda s: "/".join(f"{x:.3f}" for x in q[s])
-    print(f"  {m}: {quart('base')} -> {quart('tree')}{change}; "
-          f"gap {abs(tree - base):.3f} vs IQR {q['base'][2] - q['base'][0]:.3f}; "
-          f"working tree won {won}/{len(pairs)}")
-bad = 0
-for s, rs in runs.items():
-    ok = sum(1 for r in rs.values() if r.get("correct") and r.get("failed") == 0)
-    bad += len(rs) - ok
-    print(f"  {s}: {ok}/{len(rs)} runs correct with 0 failed ops")
-if bad:
-    print(f"{bad} run(s) printed no result, failed the output check or had failed ops",
-          file=sys.stderr)
-    sys.exit(1)
-EOF
+python3 "$REPO/tools/ab_verdict.py" "$WORK/runs.txt" "$REPO/BENCHMARK.json"
